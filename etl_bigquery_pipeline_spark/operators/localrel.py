@@ -42,8 +42,16 @@ def literal_frame(
 
     Values must be expressible as column literals (``F.lit``): None,
     bool, int, float, str. Each value is cast to its schema type, so
-    e.g. Python ints land as the declared bigint/int."""
+    e.g. Python ints land as the declared bigint/int. A row whose length
+    differs from the schema's raises ``ValueError``."""
     st = T.StructType.fromDDL(schema)
+    rows = list(rows)
+    for i, row in enumerate(rows):
+        if len(row) != len(st.fields):
+            raise ValueError(
+                f"literal_frame row {i} has {len(row)} values; the schema "
+                f"has {len(st.fields)} fields ({schema})"
+            )
     structs = [
         F.struct(
             *[

@@ -32,6 +32,9 @@ class Severity(str, Enum):
     WARNING = "warning"
 
 
+REPORT_COLUMNS = ("check", "table", "status", "severity", "observed", "detail")
+
+
 @dataclass
 class CheckResult:
     check: str
@@ -50,6 +53,10 @@ class CheckResult:
             float(self.observed) if self.observed is not None else None,
             self.detail,
         )
+
+    def as_dict(self) -> dict:
+        """``as_row`` keyed by the report's column names."""
+        return dict(zip(REPORT_COLUMNS, self.as_row()))
 
 
 @dataclass
@@ -130,6 +137,14 @@ def observed_write(
     aggregates are collected DURING the single write pass — zero extra
     scans, unlike post-load validation queries that re-read the table.
     Returns the observed metric dict once the write action completes.
+
+    ``write_fn`` must consume the observed frame exactly once, in one
+    action. The metrics come from the first action that runs over the
+    frame, and from only one reference to it within that action: a sink
+    that writes ``d.exceptAll(d.limit(1))`` reads ``d`` twice, and on a
+    three-row frame it reported ``n_rows=1``, the limited read. Narrow
+    steps over the frame (``filter``, ``select``) are fine; the metrics
+    then count the rows handed to ``write_fn``, not the rows it kept.
 
     The at-scale significance: a 100 TB load validated by re-scanning
     costs a second 100 TB read; observe() charges nothing. Use for
@@ -257,10 +272,12 @@ def referential_integrity_check(
 ) -> CheckResult:
     """J1: orphan fact rows via broadcast LEFT ANTI join — the idiomatic
     plan for the reference's LEFT JOIN ... WHERE dim.key IS NULL probe
-    (:396-402). Catalyst broadcasts the dimension side."""
-    orphans = fact.join(
-        F.broadcast(dim.select(key).distinct()), key, "left_anti"
-    ).count()
+    (:396-402). Catalyst broadcasts the dimension's key column as it is:
+    an anti join only asks whether a key exists, so duplicate dimension
+    keys cannot change the count and a ``distinct`` would only add an
+    aggregate and a shuffle. A fact row with a NULL key matches nothing
+    and counts as an orphan."""
+    orphans = fact.join(F.broadcast(dim.select(key)), key, "left_anti").count()
     return CheckResult(
         check=f"ref_integrity_{key}",
         table=fact_name,

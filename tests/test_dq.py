@@ -73,6 +73,23 @@ def test_referential_integrity_counts_orphan_rows(spark):
     assert res.observed == 2  # orphan ROWS (p404, p405)
 
 
+def test_referential_integrity_ignores_duplicate_dimension_keys(spark):
+    """The anti join needs no deduplicated build side: duplicate
+    dimension keys give the same orphan count as distinct ones, and a
+    NULL fact key is an orphan either way."""
+    fact = spark.createDataFrame(
+        [("p1",), ("p2",), ("p404",), (None,)], "product_id string"
+    )
+    dim = spark.createDataFrame(
+        [("p1",), ("p1",), ("p2",), ("p2",), ("p2",)], "product_id string"
+    )
+    res = dq.referential_integrity_check(fact, dim, "product_id")
+    with_distinct = fact.join(
+        F.broadcast(dim.select("product_id").distinct()), "product_id", "left_anti"
+    ).count()
+    assert res.observed == with_distinct == 2  # p404 and the NULL key
+
+
 def test_parity_check(spark):
     df = spark.createDataFrame([(1,), (2,)], "id int")
     ok = dq.TableChecks(table="t", df=df, scalar=[dq.parity_check(2)]).run()[0]

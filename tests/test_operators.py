@@ -1106,3 +1106,23 @@ def test_hist_exact_percentiles_keeps_null_group_and_empty_input(spark):
     assert _hist_exact_percentiles(
         empty, "g", "v", [0.5], ["p50"]
     ).collect() == []
+
+
+# ---------------------------------------------------------- localrel ----
+
+
+def test_literal_frame_rejects_rows_of_the_wrong_length(spark):
+    """A row shorter or longer than the schema is an error, not a row
+    silently truncated (or padded) to fit."""
+    import pytest
+
+    from etl_bigquery_pipeline_spark.operators.localrel import literal_frame
+
+    schema = "a string, b bigint"
+    assert literal_frame(spark, [("x", 1), ("y", None)], schema).collect() == [
+        ("x", 1),
+        ("y", None),
+    ]
+    for bad in ([("x", 1, "extra")], [("x", 1), ("y",)]):
+        with pytest.raises(ValueError, match="schema has 2 fields"):
+            literal_frame(spark, bad, schema)

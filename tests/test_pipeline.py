@@ -5,6 +5,8 @@ non-positive prices — with hand-computed expected outputs."""
 
 from __future__ import annotations
 
+import json
+
 import pytest
 
 from etl_bigquery_pipeline_spark.plans import dq
@@ -90,6 +92,107 @@ def test_pipeline_end_to_end_passes_on_clean_data(spark, tmp_path):
     ]
     # report is queryable
     assert result.report.filter("status = 'FAIL'").count() == 0
+
+    # rows read, loaded and rejected per table ride on the loads' writes
+    sales, products = result.loads["store_sales"], result.loads["products"]
+    assert (sales.rows_in, sales.rows_out, sales.rejected) == (6, 3, 3)
+    assert (products.rows_in, products.rows_out, products.rejected) == (5, 2, 3)
+    as_dict = result.as_dict()
+    assert json.loads(json.dumps(as_dict)) == as_dict  # JSON types only
+    assert as_dict["loads"]["products"] == {
+        "rows_in": 5,
+        "rows_out": 2,
+        "rejected": 3,
+    }
+    assert [d["status"] for d in as_dict["dq"]] == ["PASS"] * len(result.dq_results)
+
+
+def test_pipeline_counts_rows_in_when_every_row_is_rejected(spark, tmp_path):
+    """With nothing left to load, adaptive execution drops the stage that
+    held the rows-in observation; the count must still be the raw one."""
+    result = run_pipeline(
+        spark,
+        sales_df(spark, DIRTY_SALES[3:]),
+        products_df(spark),
+        ParquetWarehouse(str(tmp_path)),
+        enforce_critical=False,
+    )
+    sales = result.loads["store_sales"]
+    assert (sales.rows_in, sales.rows_out, sales.rejected) == (3, 0, 3)
+    row_count = [
+        r for r in result.dq_results
+        if (r.table, r.check) == ("store_sales", "row_count")
+    ][0]
+    assert not row_count.passed
+
+
+def test_pipeline_counts_raw_rows_of_a_sniffed_packed_extract(spark, tmp_path):
+    """A two-column extract whose first column is packed makes
+    transform_sales sniff it with a small action of its own; that action
+    must not stand in for the load's count of rows read."""
+    src = str(tmp_path / "packed_src")
+    spark.createDataFrame(
+        [(",".join(r), "extra") for r in DIRTY_SALES], ["blob", "note"]
+    ).write.parquet(src)
+    # read back from files: a sniff over in-memory rows runs no job
+    packed = spark.read.parquet(src)
+    result = run_pipeline(
+        spark, packed, products_df(spark), ParquetWarehouse(str(tmp_path))
+    )
+    sales = result.loads["store_sales"]
+    assert (sales.rows_in, sales.rows_out) == (6, 3)
+
+
+class _LossySink(ParquetWarehouse):
+    """Loses one fact row on the way into the warehouse."""
+
+    def overwrite(self, df, table):
+        if table.endswith("store_sales"):
+            df = df.filter("date <> timestamp'2024-01-02'")
+        super().overwrite(df, table)
+
+
+def test_pipeline_fails_when_the_sink_loses_rows(spark, tmp_path):
+    """load_parity compares the rows handed to the sink (observed during
+    the write) with the rows the warehouse holds afterwards."""
+    with pytest.raises(dq.CriticalDQFailure) as exc:
+        run_pipeline(
+            spark,
+            sales_df(spark),
+            products_df(spark),
+            _LossySink(str(tmp_path)),
+        )
+    msg = str(exc.value)
+    assert "store_sales.load_parity" in msg
+    assert "loaded=2 expected=3" in msg
+
+
+# Spark jobs one run_pipeline call starts on the clean fixture (local[12],
+# 8 shuffle partitions). It was 26 while the pipeline counted each
+# transformed table with count() before loading it and the FK check
+# deduplicated the dimension keys.
+PIPELINE_JOBS = 19
+
+
+def test_pipeline_job_count_ratchet(spark, tmp_path):
+    """Each table's transform runs once per pipeline run. The job group
+    is owned by this test: the library sets none of its own."""
+    sc = spark.sparkContext
+    group = "test_pipeline_job_count_ratchet"
+    sc.setJobGroup(group, group)
+    try:
+        run_pipeline(
+            spark,
+            sales_df(spark, CLEAN_SALES),
+            products_df(spark),
+            ParquetWarehouse(str(tmp_path)),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= PIPELINE_JOBS
 
 
 def test_pipeline_fails_on_negative_amounts(spark, tmp_path):
