@@ -484,6 +484,26 @@ def skew_rehearsal(spark, sf_dir: str) -> dict[str, float]:
     return out
 
 
+def prev_record(
+    timings: dict[str, float], cpus: int, paths: list[str]
+) -> tuple[str, dict] | None:
+    """The record to compare this run with: the newest of ``paths`` (by
+    name, descending) whose top-level ``cpus`` equals this run's and whose
+    parsed tail shares at least one query with ``timings``, as ``(path,
+    parsed)``; None if there is none. Without the ``cpus`` filter the
+    name order put ``BENCH_r11_c8.json`` ahead of ``BENCH_r11.json`` and a
+    32-core run was compared with the 8-core record."""
+    for path in sorted(paths, reverse=True):
+        with open(path) as fh:
+            rec = json.load(fh)
+        if rec.get("cpus") != cpus:
+            continue
+        parsed = rec.get("parsed") or {}
+        if set(parsed.get("queries") or ()) & set(timings):
+            return path, parsed
+    return None
+
+
 def main() -> None:
     import argparse
 
@@ -612,33 +632,29 @@ def main() -> None:
         if args.subset != "headline":
             raise StopIteration  # prior BENCH records are headline@sf0.1
 
-        for path in sorted(glob.glob("BENCH_r*.json"), reverse=True):
-            parsed = json.load(open(path)).get("parsed") or {}
-            prev = parsed.get("queries")
-            if prev:
-                shared = set(prev) & set(timings)
-                if shared:
-                    prev_ratio = round(
-                        sum(timings[q] for q in shared)
-                        / sum(prev[q] for q in shared),
-                        3,
-                    )
-                    # name the comparison target: r5's 1.23 silently fell
-                    # back to r3 (r4's parsed was null) and read as a
-                    # regression that an idle re-run showed was load
-                    prev_round = os.path.basename(path)
-                    # machine-state normalization (see CANARY_QUERIES):
-                    # raw * prev_canary / cur_canary cancels both sides'
-                    # load states; pre-canary records are assumed at the
-                    # idle reference (verified within 1% for r7)
-                    if canary_sec:
-                        prev_canary = (
-                            parsed.get("canary_sec") or CANARY_IDLE_REF_SEC
-                        )
-                        prev_ratio_normalized = round(
-                            prev_ratio * prev_canary / canary_sec, 3
-                        )
-                break
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        found = prev_record(timings, cpus, glob.glob("BENCH_r*.json"))
+        if found:
+            path, parsed = found
+            prev = parsed["queries"]
+            shared = set(prev) & set(timings)
+            prev_ratio = round(
+                sum(timings[q] for q in shared) / sum(prev[q] for q in shared),
+                3,
+            )
+            # name the comparison target: r5's 1.23 silently fell back to
+            # r3 (r4's parsed was null) and read as a regression that an
+            # idle re-run showed was load
+            prev_round = os.path.basename(path)
+            # machine-state normalization (see CANARY_QUERIES):
+            # raw * prev_canary / cur_canary cancels both sides' load
+            # states; pre-canary records are assumed at the idle reference
+            # (verified within 1% for r7)
+            if canary_sec:
+                prev_canary = parsed.get("canary_sec") or CANARY_IDLE_REF_SEC
+                prev_ratio_normalized = round(
+                    prev_ratio * prev_canary / canary_sec, 3
+                )
     except Exception:
         pass
     slowest = dict(

@@ -21,6 +21,8 @@ This module gives every such cache an owner:
   consumption window: every frame cached inside the ``with`` block is
   unpersisted on exit. bench.py and the oracle sweep wrap each query in
   one, replacing the blunt ``spark.catalog.clearCache()``.
+- ``release_checkpoint(df)`` — drops the blocks of a superseded
+  ``localCheckpoint()`` frame, which lives outside the cache manager.
 """
 
 from __future__ import annotations
@@ -102,6 +104,18 @@ def cache_scope():
             _scopes.remove(mine)
         for df in mine:
             _unpersist_quietly(df)
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Unpersist the blocks behind a ``localCheckpoint()``-ed frame.
+
+    A local checkpoint lives outside the cache manager, so neither
+    ``unpersist()`` nor ``cache_scope`` can drop it; left alone it waits
+    for the ContextCleaner to notice the frame is garbage. Iterative
+    loops call this on the previous round's frame once the next one is
+    materialized. Non-blocking; a plan that still reads the frame fails,
+    so release only frames nothing downstream references."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def live_cache_count() -> int:

@@ -8,6 +8,9 @@ the driver's sample-prefix derivation) is unchanged.
 
 from __future__ import annotations
 
+from pyspark.sql import Column
+
+from etl_bigquery_pipeline_spark.operators.caching import release_checkpoint
 from etl_bigquery_pipeline_spark.plans.catalog_base import (
     DataFrame,
     F,
@@ -1598,108 +1601,158 @@ FROM a WHERE rn = 1
 """
 
 
-def _centroids(e: DataFrame, label_col: str = "label") -> DataFrame:
-    """(label, cv array<double>) — elementwise mean per label, rounded to
-    6 places so the values are bit-identical across engines (summation
-    order differs between Spark partials and a serial fold)."""
-    return (
-        e.select(label_col, F.posexplode("embedding").alias("pos", "v"))
-        .groupBy(label_col, "pos")
-        .agg(F.round(F.avg(F.col("v").cast("double")), 6).alias("cv"))
-        .groupBy(label_col)
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "cv"))).alias("s"))
-        .select(label_col, F.transform("s", lambda x: x["cv"]).alias("cv"))
+def _cells(e: DataFrame, label: Column, *extra: Column | str) -> DataFrame:
+    """One ``(label, pos, v)`` row per vector element, plus ``extra``
+    columns; ``pos`` is 0-based."""
+    return e.select(
+        label.alias("label"), *extra,
+        F.posexplode("embedding").alias("pos", "v"),
     )
 
 
-def _assign(e: DataFrame, cent: DataFrame) -> DataFrame:
-    """(vec_id, assigned_label, d2): nearest centroid by squared L2.
-    K centroids broadcast; per-vector argmin via min(struct) — ties break
-    on the smaller label, deterministically."""
-    d2 = F.aggregate(
-        F.zip_with(
-            "embedding",
-            "cv",
-            lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
+def _centroid_row(cells: DataFrame) -> DataFrame:
+    """Fold ``(label, pos, v, d2)`` cells into ONE row ``(cs, inertia)``.
+
+    ``cs`` is ``array<struct<label, cv array<double>>>``, labels ascending,
+    each ``cv`` the per-position mean in position order, rounded to 6
+    places so the values are bit-identical across engines (summation
+    order differs between Spark partials and a serial fold). ``inertia``
+    is the sum of ``d2`` (NULL without one): callers set it on ``pos = 0``
+    only (NULL elsewhere), so each vector's distance counts once. Any
+    further column of ``cells`` must hold one value throughout and rides
+    along into the row: as an extra grouping key of the cell mean (an
+    array-typed ``any_value`` there would force a sort aggregate), then
+    as ``any_value``. Two shuffles: the (label, pos) mean and the global
+    collect."""
+    carry = [c for c in cells.columns if c not in ("label", "pos", "v", "d2")]
+    d2 = F.col("d2") if "d2" in cells.columns else F.lit(None).cast("double")
+    per_cell = cells.groupBy("label", "pos", *carry).agg(
+        F.round(F.avg(F.col("v").cast("double")), 6).alias("cv"),
+        F.sum(d2).alias("d2"),
+    )
+    flat = per_cell.agg(
+        F.array_sort(F.collect_list(F.struct("label", "pos", "cv"))).alias("cells"),
+        F.sum("d2").alias("inertia"),
+        *[F.any_value(c).alias(c) for c in carry],
+    )
+    labels = F.array_distinct(F.transform("cells", lambda c: c["label"]))
+    cs = F.transform(
+        labels,
+        lambda lb: F.named_struct(
+            F.lit("label"), lb,
+            F.lit("cv"), F.transform(
+                F.filter("cells", lambda c: c["label"] == lb), lambda c: c["cv"]
+            ),
         ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
     )
-    return (
-        e.select("vec_id", "embedding")
-        .crossJoin(F.broadcast(cent))
-        .select("vec_id", F.col("label"), d2.alias("d2"))
-        .groupBy("vec_id")
-        .agg(F.min(F.struct("d2", "label")).alias("m"))
-        .select(
-            "vec_id",
-            F.col("m.label").alias("assigned_label"),
-            F.col("m.d2").alias("d2"),
+    return flat.select(cs.alias("cs"), "inertia", *carry)
+
+
+def _assign(e: DataFrame, row: DataFrame) -> DataFrame:
+    """``e`` plus ``row``'s columns but ``cs``, plus ``m = struct(d2,
+    label)`` of the nearest centroid in ``row.cs`` by squared L2.
+
+    The one-row centroid frame broadcasts; the argmin is ``array_min``
+    over the per-centroid structs, so ties break on the smaller label
+    exactly like ``min(struct(d2, label))`` but with no ``groupBy`` on the
+    vector id: the corpus never shuffles. ``named_struct``, not an
+    aliased ``struct``: inside the lambda the alias is lost (``col1``)."""
+    def d2(cv):
+        return F.aggregate(
+            F.zip_with(
+                "embedding", cv,
+                lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
+            ),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+
+    m = F.array_min(
+        F.transform(
+            "cs",
+            lambda c: F.named_struct(
+                F.lit("d2"), d2(c["cv"]), F.lit("label"), c["label"]
+            ),
         )
     )
+    return e.crossJoin(F.broadcast(row)).withColumn("m", m).drop("cs")
 
 
 @query("centroid_assignment", _ASSIGN_ORACLE)
 def centroid_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-means E-step as pure DataFrame algebra: per-label centroids
     (posexplode mean, 6-decimal-rounded for cross-engine determinism)
-    broadcast against every vector, squared-L2 via zip_with/aggregate —
-    all JVM-side, no UDF — argmin via min(struct(d2, label)). The corpus
-    never shuffles: K centroid rows broadcast, one groupBy on vec_id."""
+    folded into one broadcast row, squared-L2 via zip_with/aggregate —
+    all JVM-side, no UDF — argmin via array_min(struct(d2, label)). The
+    corpus never shuffles: only the K x dim centroid cells do."""
     e = _t(spark, sf_dir, "embeddings")
-    out = _assign(e, _centroids(e))
-    return out.select(
-        "vec_id", "assigned_label", F.round("d2", 6).alias("dist2")
+    cent = _centroid_row(_cells(e, F.col("label")))
+    return _assign(e, cent).select(
+        "vec_id",
+        F.col("m.label").alias("assigned_label"),
+        F.round("m.d2", 6).alias("dist2"),
+    )
+
+
+_LLOYD_ROUNDS = 3
+
+
+def kmeans_inertia_history(e: DataFrame) -> DataFrame:
+    """Lloyd's algorithm from the per-label centroids of ``e`` (vec_id,
+    embedding, label): one row ``(cs, hist)`` with the centroids after
+    ``_LLOYD_ROUNDS`` rounds and ``hist``, the inertia of each round's
+    assignment (against that round's starting centroids).
+
+    A round is one eager ``localCheckpoint`` of a one-row frame: assign
+    against the broadcast previous row (no shuffle), then re-center and
+    sum the inertia in the same two aggregations. The history rides in
+    the row, so no per-round frame is kept and nothing corpus-sized is
+    cached; each superseded checkpoint is released once the next one is
+    materialized."""
+    no_hist = F.array().cast("array<double>").alias("hist")
+    row = _centroid_row(_cells(e, F.col("label"), no_hist)).localCheckpoint()
+    for _ in range(_LLOYD_ROUNDS):
+        a = _assign(e, row).select("embedding", "hist", "m")
+        # the argmin is evaluated above, once per vector: computed inside
+        # the exploding select it would run once per element
+        cells = _cells(a, F.col("m.label"), "hist", F.col("m.d2").alias("__d2"))
+        cells = cells.select(
+            "label", "pos", "v", "hist",
+            F.when(F.col("pos") == 0, F.col("__d2")).alias("d2"),
+        )
+        nxt = _centroid_row(cells).select(
+            "cs", F.concat("hist", F.array("inertia")).alias("hist")
+        ).localCheckpoint()
+        release_checkpoint(row)
+        row = nxt
+    return row
+
+
+def inertia_monotone(hist: Column) -> Column:
+    """True when every inertia in ``hist`` is at most the one before it
+    (Lloyd's guarantee), with a relative tolerance for float merge order."""
+    return F.forall(
+        F.zip_with(
+            F.slice(hist, 1, F.greatest(F.size(hist) - 1, F.lit(0))),
+            F.slice(hist, 2, F.size(hist)),
+            lambda a, b: b <= a * (1 + 1e-9),
+        ),
+        lambda ok: ok,
     )
 
 
 @query("kmeans_inertia_gate", "SELECT true AS inertia_monotone")
 def kmeans_inertia_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lloyd's algorithm on DataFrames — the iterative-algorithm pattern:
-    3 iterations of assign (broadcast centroids, zip_with distance) ->
-    re-center (posexplode mean over the new assignment). The driver sees
-    only one inertia scalar per iteration; all heavy work is distributed
-    and each iteration is one lazy plan. Gate: inertia must be
-    non-increasing (Lloyd guarantee — violated only if the steps are
-    miswired), checked with a tolerance for float merge order."""
-    # every Lloyd round consumes e for assign AND re-center; cache the
-    # (small) vector table instead of rescanning parquet 7 times
-    e = scoped_cache(_t(spark, sf_dir, "embeddings"))
-    cent = _centroids(e)
-    inertia_frames = []
-    for r in range(3):
-        # cached: the inertia aggregate AND the re-center join both
-        # consume the assignment — uncached, the K-dot-products-per-row
-        # assign projection runs twice per Lloyd round (guide §5:
-        # cache when reuse beats recompute; K x |corpus| distances do)
-        assigned = scoped_cache(_assign(e, cent))
-        # DEFERRED: the per-round inertia is only compared at the END,
-        # so it is kept as a lazy 1-row frame; the eager localCheckpoint
-        # below fills the assignment cache each round, making the final
-        # union over all three aggregates read warm caches — 3 driver
-        # actions per run become 0 extra (guide §1.2)
-        inertia_frames.append(
-            assigned.agg(F.sum("d2").alias("__v")).select(
-                F.lit(r).alias("__r"), "__v"
-            )
-        )
-        cent = _centroids(
-            e.join(assigned.select("vec_id", "assigned_label"), "vec_id")
-            .select(F.col("assigned_label").alias("label"), "embedding"),
-        # truncate lineage each iteration: without this the plan nests one
-        # full assign+recenter per round and analysis/codegen cost grows
-        # superlinearly with iteration count — the standard iterative-
-        # algorithm hygiene (K x dim rows, so the checkpoint is tiny)
-        ).localCheckpoint()
-    u = inertia_frames[0]
-    for f in inertia_frames[1:]:
-        u = u.unionAll(f)
-    rows = sorted(u.collect(), key=lambda x: x["__r"])
-    inertias = [x["__v"] for x in rows]
-    ok = all(
-        b <= a * (1 + 1e-9) for a, b in zip(inertias, inertias[1:])
-    )
-    return literal_frame(spark, [(bool(ok),)], "inertia_monotone boolean")
+    3 rounds of assign (broadcast one-row centroids, zip_with distance,
+    array_min argmin) -> re-center (posexplode mean over the new
+    assignment), each round one eager checkpoint of a one-row frame
+    (kmeans_inertia_history). Gate: inertia must be non-increasing
+    (Lloyd guarantee — violated only if the steps are miswired), checked
+    in-plan over the carried history with a tolerance for float merge
+    order. The returned plan reads only the last checkpoint."""
+    row = kmeans_inertia_history(_t(spark, sf_dir, "embeddings"))
+    return row.select(inertia_monotone(F.col("hist")).alias("inertia_monotone"))
 
 
 @query("band_index_probe_matches", "SELECT true AS band_probe_matches")

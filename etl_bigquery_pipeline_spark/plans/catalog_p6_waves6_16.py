@@ -1584,12 +1584,13 @@ def incremental_join_view_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # one driver action instead of two: both summaries crossJoin into a
-    # single lazy plan; count and exact-decimal equality evaluate in-plan
+    # single lazy plan; count and exact-decimal equality evaluate in-plan.
+    # Null-safe: an empty view sums to NULL on both sides, which matches
     a = summarize(v_incr)
     b = summarize(v_full).withColumnsRenamed({"n": "__n2", "s": "__s2"})
     return a.crossJoin(b).select(
         (F.col("n") == F.col("__n2")).alias("counts_match"),
-        (F.col("s") == F.col("__s2")).alias("revenue_match"),
+        F.col("s").eqNullSafe(F.col("__s2")).alias("revenue_match"),
     )
 
 

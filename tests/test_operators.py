@@ -181,8 +181,8 @@ def test_simhash_hamming_fast_path_reads_declared_width(spark):
         dedup.simhash_hamming(F.col("a"), F.col("b"), nibbles=15).alias("d")
     ).first()["d"]
     assert fast == 0
-    # fast path (<=15) equals the per-nibble loop (>15 forced via 16
-    # on 15-padded input is invalid; instead compare both on width 8)
+    # narrower widths read their own prefix; the per-nibble loop (>15) is
+    # checked against this path in the next test
     w8 = df.select(
         dedup.simhash_hamming(F.col("a"), F.col("b"), nibbles=8).alias("d")
     ).first()["d"]
@@ -192,6 +192,34 @@ def test_simhash_hamming_fast_path_reads_declared_width(spark):
         dedup.simhash_hamming(F.col("a"), F.col("b"), nibbles=4).alias("d")
     ).first()["d"]
     assert fast4 == bin(0xFF00 ^ 0x0F01).count("1")
+
+
+def test_simhash_hamming_nibble_loop_matches_fast_path(spark):
+    """nibbles >= 16 takes the per-nibble loop. On 17-hex-char inputs
+    whose 16th nibble agrees, the loop at width 16 must equal the bigint
+    fast path at width 15, and each width must match the bit count of
+    the XOR over exactly that prefix."""
+    pairs = [
+        ("0123456789abcde7f", "fedcba98765432170"),
+        ("deadbeefcafe0123f", "deadbeefcafe01230"),
+        ("ffffffffffffffff0", "0000000000000000f"),
+    ]
+    df = spark.createDataFrame(pairs, ["a", "b"])
+    a, b = F.col("a"), F.col("b")
+    rows = df.select(
+        dedup.simhash_hamming(a, b, nibbles=15).alias("w15"),
+        dedup.simhash_hamming(a, b, nibbles=16).alias("w16"),
+        dedup.simhash_hamming(a, b, nibbles=17).alias("w17"),
+    ).collect()
+
+    def ham(x: str, y: str, w: int) -> int:
+        return bin(int(x[:w], 16) ^ int(y[:w], 16)).count("1")
+
+    for (x, y), r in zip(pairs, rows):
+        assert (r.w15, r.w16, r.w17) == (ham(x, y, 15), ham(x, y, 16), ham(x, y, 17))
+        if x[15] == y[15]:
+            assert r.w16 == r.w15
+    assert rows[2].w16 == rows[2].w15 + 4  # the 16th nibbles differ in 4 bits
 
 
 # ----------------------------------------------------------- text fns ----

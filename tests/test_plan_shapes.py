@@ -807,3 +807,41 @@ def test_banded_near_dup_band_join_is_slim_and_merge_pinned(spark, sf_dir):
     assert all("__code" in l for l in band_exchanges)
     # slim candidate rows: no vector column rides the band shuffle
     assert not any("__v#" in l or "embedding#" in l for l in band_exchanges)
+
+
+# Construction-job ratchet for the k-means gate: 31 jobs at sf0.01 and at
+# sf0.001 (both hold 500 vectors) while each Lloyd round cached the
+# assignment, argmin'd via groupBy(vec_id) and collected three inertias.
+# Now: 1 schema read, 3 for the initial centroid row, 4 per round.
+KMEANS_CONSTRUCT_JOBS = 16
+
+
+def test_kmeans_gate_construction_jobs_and_leftovers(spark, sf_dir):
+    """The gate's construction stays within its job budget, leaves no
+    cached plan, and keeps at most one checkpoint RDD (the last round's,
+    which the returned plan reads)."""
+    sc = spark.sparkContext
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    assert cache_manager.isEmpty()
+    persisted_before = sc._jsc.getPersistentRDDs().size()
+    group = "test_kmeans_gate_construction_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        df = catalog.QUERIES["kmeans_inertia_gate"](spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= KMEANS_CONSTRUCT_JOBS
+    assert cache_manager.isEmpty()
+    assert sc._jsc.getPersistentRDDs().size() - persisted_before <= 1
+    assert df.first()["inertia_monotone"] is True
+
+
+def test_centroid_assignment_never_shuffles_the_corpus(spark, sf_dir):
+    # the argmin is array_min over the broadcast one-row centroid frame:
+    # no groupBy on the vector id
+    plan = _plan(spark, "centroid_assignment", sf_dir)
+    assert "hashpartitioning(vec_id" not in plan
+    assert "BroadcastNestedLoopJoin" in plan
