@@ -20,9 +20,9 @@ cluster, where the slices become scheduler-visible tasks):
 through ``inline(array(struct(...), ...))``. No Python worker is ever
 consulted, the plan is a 1-partition local scan, and both hazards above
 disappear. Use it for small frames of plain literals (bool/int/float/
-str/None). For rows carrying exotic types (Decimal, nested arrays) keep
-``spark.createDataFrame`` but pass ``sc.parallelize(rows, 1)`` so the
-frame is at least single-sliced.
+str/None, each checked against its field's type). For rows carrying
+exotic types (Decimal, nested arrays) keep ``spark.createDataFrame`` but
+pass ``sc.parallelize(rows, 1)`` so the frame is at least single-sliced.
 """
 
 from __future__ import annotations
@@ -34,16 +34,38 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
+_INT_BITS = {T.ByteType: 8, T.ShortType: 16, T.IntegerType: 32, T.LongType: 64}
+
+
+def _holds(dt: T.DataType, v) -> bool:
+    """Whether a field of type ``dt`` holds the Python value ``v`` exactly."""
+    if v is None:
+        return True
+    if isinstance(dt, T.BooleanType):
+        return isinstance(v, bool)
+    if isinstance(v, bool):
+        return False
+    if isinstance(dt, T.IntegralType):
+        half = 1 << (_INT_BITS[type(dt)] - 1)
+        return isinstance(v, int) and -half <= v < half
+    if isinstance(dt, (T.FloatType, T.DoubleType)):
+        return isinstance(v, (int, float))
+    return isinstance(dt, T.StringType) and isinstance(v, str)
+
+
 def literal_frame(
     spark: SparkSession, rows: Iterable[Sequence], schema: str
 ) -> DataFrame:
     """A single-partition DataFrame of literal ``rows`` with the DDL
     ``schema`` — JVM-side (no Python-RDD slices; see module docstring).
 
-    Values must be expressible as column literals (``F.lit``): None,
-    bool, int, float, str. Each value is cast to its schema type, so
-    e.g. Python ints land as the declared bigint/int. A row whose length
-    differs from the schema's raises ``ValueError``."""
+    Each value is cast to its schema type, so it must be one the field
+    holds exactly: ``bool`` for boolean, a non-bool ``int`` in range for
+    integral fields, ``int``/``float`` for float/double, ``str`` for
+    string, and ``None`` anywhere. Anything else raises ``TypeError``
+    rather than truncating (``1.5`` into bigint) or turning into NULL
+    (``"abc"`` into bigint). A row whose length differs from the
+    schema's raises ``ValueError``."""
     st = T.StructType.fromDDL(schema)
     rows = list(rows)
     for i, row in enumerate(rows):
@@ -52,6 +74,12 @@ def literal_frame(
                 f"literal_frame row {i} has {len(row)} values; the schema "
                 f"has {len(st.fields)} fields ({schema})"
             )
+        for v, f in zip(row, st.fields):
+            if not _holds(f.dataType, v):
+                raise TypeError(
+                    f"literal_frame row {i}: {v!r} ({type(v).__name__}) does"
+                    f" not fit field {f.name} {f.dataType.simpleString()}"
+                )
     structs = [
         F.struct(
             *[

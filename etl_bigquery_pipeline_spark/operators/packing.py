@@ -7,9 +7,11 @@ packing — a deterministic order, a running token sum, and
 pack_id = floor(cumulative_start / budget). Documents longer than the
 budget get a pack of their own (they'd be chunked upstream).
 
-Scale shape: a truly global packing is a single sequential scan (fine for
-driver-sized corpora / the oracle); `packed` partitions the corpus into
-hash buckets first and packs within each bucket — embarrassingly parallel,
+Scale shape: `pack_global` is a single sequential scan (fine for
+driver-sized corpora / the oracle); `pack_global_distributed` gives the
+same packs from the range-partitioned running sum
+(`windows.with_running_sums`); `packed` partitions the corpus into hash
+buckets first and packs within each bucket — embarrassingly parallel,
 same asymptotic fill rate, pack ids namespaced by bucket.
 """
 
@@ -18,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_bigquery_pipeline_spark.operators.caching import scoped_cache
+from etl_bigquery_pipeline_spark.operators.windows import with_running_sums
 
 
 def pack_global(
@@ -52,51 +54,18 @@ def pack_global_distributed(
     """EXACT global-packing semantics, computed wide — the 100 TB path
     for ``pack_global``.
 
-    The running token sum decomposes: range-partition on the order key
-    (contiguous key ranges, in order), take per-partition running sums,
-    and add each partition's cumulative byte offset — one number per
-    partition, collected driver-side (bounded by partition count). The
-    result equals ``pack_global`` row-for-row; the heavy work is one
-    range shuffle plus per-partition linear window scans. Cached because
-    the totals pass and the final plan both consume the ranged frame;
-    clearCache() after persisting.
+    The running token sum is ``windows.with_running_sums`` (range
+    shuffle, per-partition running sums plus one collected offset per
+    partition), and ``pack_id = floor((cum - size) / budget)`` as in
+    ``pack_global``, which the result equals row for row. The ranged
+    frame is cached; release it (``cache_scope`` or ``clearCache()``)
+    after persisting the result.
     """
-    par = (
-        partitions
-        if partitions is not None
-        else df.sparkSession.sparkContext.defaultParallelism
-    )
-    ranged = (
-        df.repartitionByRange(par, *[F.col(c) for c in order_by])
-        .withColumn("__pid", F.spark_partition_id())
-        .transform(scoped_cache)
-    )
-    totals = (
-        ranged.groupBy("__pid")
-        .agg(F.sum(size_col).alias("__t"))
-        .collect()
-    )
-    acc = 0
-    offsets: dict[int, int] = {}
-    for r in sorted(totals, key=lambda r: r["__pid"]):
-        offsets[r["__pid"]] = acc
-        acc += r["__t"]
-    mapping = F.create_map(*[F.lit(v) for kv in offsets.items() for v in kv])
-    w = (
-        Window.partitionBy("__pid")
-        .orderBy(*order_by)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local_start = F.sum(size_col).over(w) - F.col(size_col)
-    return (
-        ranged.withColumn(
-            pack_col,
-            F.floor(
-                (mapping[F.col("__pid")] + local_start) / budget
-            ).cast("bigint"),
-        )
-        .drop("__pid")
-    )
+    out, _ = with_running_sums(df, order_by, [size_col], partitions=partitions)
+    cum = F.col(f"cum_{size_col}")
+    return out.withColumn(
+        pack_col, F.floor((cum - F.col(size_col)) / budget).cast("bigint")
+    ).drop(cum)
 
 
 def packed(

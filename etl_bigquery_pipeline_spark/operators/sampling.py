@@ -10,7 +10,9 @@ ids. All of these have sharp edges at scale:
   ``hash_split``: membership is a pure function of a key column.
 - monotonically_increasing_id() is partition-dependent and not stable
   across runs; ``with_stable_ids`` derives ids from a declared total
-  order instead (one global sort — pay it once at ingest, then persist).
+  order instead (one global sort — pay it once at ingest, then persist);
+  ``with_stable_ids_distributed`` gives the same ids from the
+  range-partitioned row number (``windows.with_global_row_number``).
 """
 
 from __future__ import annotations
@@ -18,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_bigquery_pipeline_spark.operators.caching import scoped_cache
+from etl_bigquery_pipeline_spark.operators.windows import with_global_row_number
 
 
 def hash_split(
@@ -73,8 +75,9 @@ def with_stable_ids(
     One global sort (single-partition window) — correct and reproducible;
     meant for ingest-time assignment that is then persisted.
     ``with_stable_ids_distributed`` assigns the SAME ids wide (range
-    partitions + offsets); for assign-on-read at extreme scale, prefer
-    hash-derived keys (md5 of a natural key) over positional ids.
+    partitions + offsets, ``windows.with_running_sums``); for
+    assign-on-read at extreme scale, prefer hash-derived keys (md5 of a
+    natural key) over positional ids.
     """
     w = Window.orderBy(*order_by)
     return df.withColumn(id_col, F.row_number().over(w).cast("bigint") - 1)
@@ -89,52 +92,18 @@ def with_stable_ids_distributed(
 ) -> DataFrame:
     """Dense 0-based ids by a declared total order — the 100 TB path.
 
-    Two-stage instead of one global window: range-partition on the order
-    key (each partition holds a contiguous key range, in order), number
-    rows within each partition, then add per-partition offsets computed
-    from the partition counts. The only driver-side data is one count per
-    partition (bounded by the partition count, not the data); the heavy
-    work is one range shuffle + a per-partition linear scan, fully
-    parallel. Produces the same ids as ``with_stable_ids`` when
-    ``order_by`` is a total order (ties may land in either neighboring
-    partition, so make the key unique — same caveat as any row_number).
-
-    The counts pass executes the ranged frame once before the final plan
-    consumes it again, so the frame is cached; call
-    ``spark.catalog.clearCache()`` after persisting the result.
+    ``windows.with_global_row_number`` minus one: a range shuffle plus a
+    per-partition scan, with one offset per partition collected to the
+    driver (see ``windows.with_running_sums``). Produces the same ids as
+    ``with_stable_ids`` when ``order_by`` is a total order (make the key
+    unique — same caveat as any row_number). The ranged frame is cached;
+    release it (``cache_scope`` or ``clearCache()``) after persisting
+    the result.
     """
-    par = (
-        partitions
-        if partitions is not None
-        else df.sparkSession.sparkContext.defaultParallelism
+    out, _ = with_global_row_number(
+        df, order_by, rn_col=id_col, partitions=partitions
     )
-    ranged = (
-        df.repartitionByRange(par, *[F.col(c) for c in order_by])
-        .withColumn("__pid", F.spark_partition_id())
-        .transform(scoped_cache)
-    )
-    w = Window.partitionBy("__pid").orderBy(*order_by)
-    counts = (
-        ranged.groupBy("__pid").agg(F.count(F.lit(1)).alias("__n")).collect()
-    )
-    acc = 0
-    offsets: dict[int, int] = {}
-    for r in sorted(counts, key=lambda r: r["__pid"]):
-        offsets[r["__pid"]] = acc
-        acc += r["__n"]
-    mapping = F.create_map(
-        *[F.lit(v) for kv in offsets.items() for v in kv]
-    )
-    return (
-        ranged.withColumn("__rn", F.row_number().over(w))
-        .withColumn(
-            id_col,
-            (
-                mapping[F.col("__pid")] + F.col("__rn") - 1
-            ).cast("bigint"),
-        )
-        .drop("__pid", "__rn")
-    )
+    return out.withColumn(id_col, F.col(id_col) - 1)
 
 
 def resample_to_mixture(

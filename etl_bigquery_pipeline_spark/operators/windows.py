@@ -8,6 +8,13 @@ Tumbling windows group on date_trunc (a pure projection: the shuffle key is
 the truncated timestamp, partial aggregation happens map-side). Sliding
 windows explode each event into windows_per_event rows first — the standard
 Spark formulation via F.window(slide=...).
+
+Ordered analytics (row numbers, NTILE, CUME_DIST, exact percentiles,
+running totals) share one prefix-sum technique, ``with_running_sums``:
+range-partition, sum per partition, add each partition's offset. Its
+callers (``with_global_row_number`` here, ``sampling`` stable ids,
+``packing`` global packs) are thin wrappers, so no ordered analytic
+plans a single-partition window.
 """
 
 from __future__ import annotations
@@ -21,6 +28,98 @@ from pyspark.sql import types as T
 from etl_bigquery_pipeline_spark.operators.caching import scoped_cache
 
 
+def with_running_sums(
+    df: DataFrame,
+    order_by: Sequence[Column | str],
+    sum_cols: Sequence[str],
+    *,
+    group_by: Sequence[str] = (),
+    partitions: int | None = None,
+) -> tuple[DataFrame, dict]:
+    """Running SUMs over a total order, optionally per group — without
+    a single-partition window. Appends ``cum_<col>`` for each of
+    ``sum_cols``; returns ``(frame, totals)`` where ``totals`` maps each
+    column to its grand total (0 on an empty input).
+
+    A bare ``Window.orderBy(...)`` running sum moves the whole table
+    through ONE task, and ``Window.partitionBy(group)`` does the same per
+    group when groups are few and corpus-proportional. Instead: one
+    ``repartitionByRange`` on (group_by, order_by), so each partition
+    holds a contiguous slice of the order and a group may SPAN
+    partitions; an ordinary window over (partition id, group) gives the
+    local running sum; and a literal map adds the exact sum of the
+    group's earlier partitions. The map comes from one bounded collect of
+    per-(partition, group) totals — about partitions + groups rows, since
+    each partition is a contiguous range. That is why ``group_by`` is for
+    low-cardinality groups; many small groups should keep the ordinary
+    partitioned window. The map is keyed on the partition id, or on
+    ``struct(partition id, *group_by)`` when grouped (a NULL group is
+    its own key, as in ``Window.partitionBy``), and cast to the sum's
+    type, so an empty input still resolves; ``cum_<col>`` has the sum's
+    type too (a decimal offset would otherwise widen it by a digit).
+    Integer sums merge exactly, so the result is bit-identical to the
+    serial window.
+
+    ``order_by`` must be a unique total order within a group (add a
+    unique key as the last tie-break; ties may straddle a partition
+    boundary). Descending keys (``F.col(c).desc()``) are supported:
+    the range partitions then run along the descending order. The ranged
+    frame is cached (``scoped_cache``) because the totals collect and the
+    returned plan both consume it.
+    """
+    par = (
+        partitions
+        if partitions is not None
+        else df.sparkSession.sparkContext.defaultParallelism
+    )
+    ocols = [F.col(c) if isinstance(c, str) else c for c in order_by]
+    ranged = (
+        df.repartitionByRange(par, *[F.col(g) for g in group_by], *ocols)
+        .withColumn("__gpid", F.spark_partition_id())
+        .transform(scoped_cache)
+    )
+    tot_df = ranged.groupBy("__gpid", *group_by).agg(
+        *[F.sum(c).alias(c) for c in sum_cols]
+    )
+    # partition ids increase along the order, so each group's offset is
+    # the running total of its slices in earlier partitions
+    running: dict[tuple, dict] = {}
+    offsets: dict[str, list] = {c: [] for c in sum_cols}
+    totals = dict.fromkeys(sum_cols, 0)
+    for r in sorted(tot_df.collect(), key=lambda r: r["__gpid"]):
+        g = tuple(r[c] for c in group_by)
+        key = (
+            F.struct(*map(F.lit, (r["__gpid"], *g)))
+            if group_by
+            else F.lit(r["__gpid"])
+        )
+        acc = running.setdefault(g, dict.fromkeys(sum_cols, 0))
+        for c in sum_cols:
+            offsets[c] += [key, F.lit(acc[c])]
+            acc[c] += r[c] or 0
+            totals[c] += r[c] or 0
+    if group_by:
+        key_type = T.StructType(
+            [tot_df.schema[c] for c in ("__gpid", *group_by)]
+        )
+        key_col = F.struct("__gpid", *group_by)
+    else:
+        key_type, key_col = tot_df.schema["__gpid"].dataType, F.col("__gpid")
+    w = (
+        Window.partitionBy("__gpid", *group_by)
+        .orderBy(*ocols)
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    out = ranged
+    for c in sum_cols:
+        sum_type = tot_df.schema[c].dataType
+        mapping = F.create_map(*offsets[c]).cast(T.MapType(key_type, sum_type))
+        out = out.withColumn(
+            f"cum_{c}", (F.sum(c).over(w) + mapping[key_col]).cast(sum_type)
+        )
+    return out.drop("__gpid"), totals
+
+
 def with_global_row_number(
     df: DataFrame,
     order_by: Sequence[Column | str],
@@ -28,231 +127,21 @@ def with_global_row_number(
     rn_col: str = "__rn",
     partitions: int | None = None,
 ) -> tuple[DataFrame, int]:
-    """1-based global row numbers over a total order — without the
-    single-partition ``Window.orderBy`` plan.
-
-    A bare ``Window.orderBy(...)`` (no partitionBy) moves the whole table
-    through one task; fine at toy scale, a scale-killer at 100 TB. This is
-    the two-stage alternative (same technique as
-    ``sampling.with_stable_ids_distributed``): range-partition on the
-    order key so each partition holds a contiguous slice of the global
-    order, number rows within each partition with an ordinary partitioned
-    window, then add per-partition offsets derived from the partition
-    counts. The only driver-side data is one count per partition; the
-    heavy work is one range shuffle + a parallel per-partition scan.
-
-    ``order_by`` must be a *unique* total order (add a unique key as the
-    last tie-break — ties may otherwise straddle a partition boundary in
-    either direction, same caveat as any row_number). Descending orders
-    are supported via ``F.col(c).desc()`` — ``repartitionByRange`` ranges
-    then run high-to-low so partition ids still increase along the order.
-
-    Returns ``(frame_with_rn, total_rows)`` — the total falls out of the
-    counts pass for free, so callers needing N (ntile, cume_dist) don't
-    pay a second action. The ranged frame is cached because the counts
-    pass and the final plan both consume it; callers should
-    ``clearCache()`` (or unpersist via the returned plan's lineage) after
-    materializing the result.
-    """
-    spark = df.sparkSession
-    par = (
-        partitions
-        if partitions is not None
-        else spark.sparkContext.defaultParallelism
+    """1-based global row numbers over a unique total order: the running
+    count of ``with_running_sums`` (no single-partition window). Returns
+    ``(frame_with_rn, total_rows)``; the total comes with the offsets
+    collect, so callers needing N (ntile, cume_dist) pay no second
+    action."""
+    out, totals = with_running_sums(
+        df.withColumn("__one", F.lit(1)),
+        order_by,
+        ["__one"],
+        partitions=partitions,
     )
-    cols = [F.col(c) if isinstance(c, str) else c for c in order_by]
-    ranged = (
-        df.repartitionByRange(par, *cols)
-        .withColumn("__gpid", F.spark_partition_id())
-        .transform(scoped_cache)
+    return (
+        out.withColumn(rn_col, F.col("cum___one")).drop("__one", "cum___one"),
+        totals["__one"],
     )
-    counts = (
-        ranged.groupBy("__gpid").agg(F.count(F.lit(1)).alias("__n")).collect()
-    )
-    acc = 0
-    offsets: dict[int, int] = {}
-    for r in sorted(counts, key=lambda r: r["__gpid"]):
-        offsets[r["__gpid"]] = acc
-        acc += r["__n"]
-    mapping = F.create_map(*[F.lit(v) for kv in offsets.items() for v in kv])
-    w = Window.partitionBy("__gpid").orderBy(*cols)
-    out = (
-        ranged.withColumn("__lrn", F.row_number().over(w))
-        .withColumn(
-            rn_col,
-            (mapping[F.col("__gpid")] + F.col("__lrn")).cast("bigint"),
-        )
-        .drop("__gpid", "__lrn")
-    )
-    return out, acc
-
-
-def with_global_running_sums(
-    df: DataFrame,
-    order_by: Sequence[Column | str],
-    sum_cols: Sequence[str],
-    *,
-    partitions: int | None = None,
-) -> DataFrame:
-    """Running SUMs over a global order — same range-partition + offsets
-    technique as ``with_global_row_number`` (a bare ``Window.orderBy``
-    running sum funnels the table through ONE task). Each partition holds
-    a contiguous slice of the order; an ordinary partitioned window
-    computes the local running sum and a broadcast map adds the exact sum
-    of all earlier partitions. Driver traffic: one row of per-partition
-    totals. Intended for integer counters (ECDFs, cumulative counts):
-    integer partial sums are merge-order-exact, so the distributed result
-    is bit-identical to the serial one. Appends ``cum_<col>`` columns.
-    """
-    spark = df.sparkSession
-    par = (
-        partitions
-        if partitions is not None
-        else spark.sparkContext.defaultParallelism
-    )
-    cols = [F.col(c) if isinstance(c, str) else c for c in order_by]
-    ranged = (
-        df.repartitionByRange(par, *cols)
-        .withColumn("__gpid", F.spark_partition_id())
-        .transform(scoped_cache)
-    )
-    totals = ranged.groupBy("__gpid").agg(
-        *[F.sum(c).alias(c) for c in sum_cols]
-    ).collect()
-    acc = {c: 0 for c in sum_cols}
-    offsets: dict[int, dict[str, int]] = {}
-    for r in sorted(totals, key=lambda r: r["__gpid"]):
-        offsets[r["__gpid"]] = dict(acc)
-        for c in sum_cols:
-            acc[c] += r[c] or 0
-    w = (
-        Window.partitionBy("__gpid")
-        .orderBy(*cols)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    out = ranged
-    for c in sum_cols:
-        mapping = F.create_map(
-            *[F.lit(v) for g, offs in offsets.items() for v in (g, offs[c])]
-        )
-        out = out.withColumn(
-            f"cum_{c}", F.sum(c).over(w) + mapping[F.col("__gpid")]
-        )
-    return out.drop("__gpid")
-
-
-def with_grouped_running_sums(
-    df: DataFrame,
-    gcols: Sequence[str],
-    order_by: Sequence[Column | str],
-    sum_cols: Sequence[str],
-    *,
-    partitions: int | None = None,
-) -> DataFrame:
-    """Running SUMs per LOW-CARDINALITY group over a within-group order —
-    the grouped sibling of ``with_global_running_sums``.
-
-    An ordinary ``Window.partitionBy(group).orderBy(...)`` moves each
-    group's whole input through ONE task: fine when groups are many and
-    small, a serial funnel when groups are FEW and corpus-proportional
-    (a per-returnflag value histogram is ~millions of rows per group at
-    sf10 through 3 tasks — same hazard class as the global window, one
-    partitionBy removed). This range-partitions on (group, order) so a
-    group SPANS partitions, computes the local running sum inside each
-    (partition, group) slice, and adds exact per-(partition, group)
-    offsets from one bounded collect (partitions x groups rows — which
-    is why this is for low-cardinality groups; high-cardinality groups
-    should keep the ordinary partitioned window, whose per-task state
-    is already small). Integer counters merge exactly, so the result is
-    bit-identical to the serial plan. Appends ``cum_<col>`` columns.
-    """
-    spark = df.sparkSession
-    par = (
-        partitions
-        if partitions is not None
-        else spark.sparkContext.defaultParallelism
-    )
-    ocols = [F.col(c) if isinstance(c, str) else c for c in order_by]
-    gc = [F.col(c) for c in gcols]
-    ranged = (
-        df.repartitionByRange(par, *gc, *ocols)
-        .withColumn("__gpid", F.spark_partition_id())
-        .transform(scoped_cache)
-    )
-    tot_df = ranged.groupBy("__gpid", *gcols).agg(
-        *[F.sum(c).alias(c) for c in sum_cols]
-    )
-    totals = tot_df.collect()
-    # running offsets per group along the partition order. Zeros take
-    # the summed column's python type so the explicit schema below
-    # verifies (a double sum's first-partition offset must be 0.0).
-    def _zero(dt: T.DataType):
-        if isinstance(dt, T.DecimalType):
-            import decimal
-
-            return decimal.Decimal(0)
-        if isinstance(dt, (T.DoubleType, T.FloatType)):
-            return 0.0
-        return 0
-
-    zero = {c: _zero(tot_df.schema[c].dataType) for c in sum_cols}
-    acc: dict[tuple, dict[str, int]] = {}
-    offsets: list[tuple] = []  # (gpid, *gvals, {col: offset})
-    for r in sorted(totals, key=lambda r: r["__gpid"]):
-        gkey = tuple(r[c] for c in gcols)
-        cur = acc.setdefault(gkey, dict(zero))
-        offsets.append((r["__gpid"], gkey, dict(cur)))
-        for c in sum_cols:
-            cur[c] += r[c] or zero[c]
-    off_rows = [
-        (gpid, *gkey, *[offs[c] for c in sum_cols])
-        for gpid, gkey, offs in offsets
-    ]
-    # explicit schema, derived from the aggregate's own: inference from
-    # data raises "can not infer schema" on an EMPTY input frame (no
-    # off_rows) or an all-NULL group column (r9 ADVICE) — cases where
-    # the serial window plan simply returned an empty/typed result
-    # single slice: off_rows is a handful of per-partition offsets; the
-    # default would pickle it over defaultParallelism slices, each
-    # consumption paying one Python-worker round-trip per slice
-    # (operators/localrel.py). Values may be Decimal, so keep
-    # createDataFrame's row conversion rather than literal_frame.
-    off_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(off_rows, 1),
-        T.StructType(
-            [tot_df.schema["__gpid"]]
-            + [tot_df.schema[c] for c in gcols]
-            + [
-                T.StructField(
-                    f"__off_{c}", tot_df.schema[c].dataType, True
-                )
-                for c in sum_cols
-            ]
-        ),
-    )
-    w = (
-        Window.partitionBy("__gpid", *gcols)
-        .orderBy(*ocols)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    out = ranged
-    for c in sum_cols:
-        out = out.withColumn(f"cum_{c}", F.sum(c).over(w))
-    # null-safe group equality: Window.partitionBy treats NULL as its
-    # own group, so the offset join must too (plain `=` would silently
-    # drop every NULL-group row)
-    cond = out["__gpid"].eqNullSafe(off_df["__gpid"])
-    for c in gcols:
-        cond = cond & out[c].eqNullSafe(off_df[c])
-    joined = out.join(F.broadcast(off_df), cond)
-    out = joined.drop(off_df["__gpid"])
-    for c in gcols:
-        out = out.drop(off_df[c])
-    for c in sum_cols:
-        out = out.withColumn(
-            f"cum_{c}", F.col(f"cum_{c}") + F.col(f"__off_{c}")
-        ).drop(f"__off_{c}")
-    return out.drop("__gpid")
 
 
 def ntile_from_row_number(rn: Column, total: int, buckets: int) -> Column:

@@ -724,15 +724,15 @@ def _hist_exact_percentiles(
     target = (n-1)*p, value = x_lo + (x_hi - x_lo) * frac — exactly
     DuckDB's quantile_cont.
 
-    ``gcol=None`` = UNGROUPED percentiles. The cumulative count then
-    runs through ``windows.with_global_running_sums`` (range-partition
-    + exact per-partition offsets; integer counts merge exactly, so
-    the result is bit-identical) instead of an ordered
-    ``partitionBy(lit)`` global window: the histogram of a
+    The cumulative count runs through ``windows.with_running_sums``
+    (range-partition on (group, value) + exact per-partition offsets;
+    integer counts merge exactly, so the result is bit-identical), with
+    ``gcol=None`` meaning UNGROUPED percentiles. Neither an ordered
+    global window nor ``Window.partitionBy(gcol)``: the histogram of a
     near-continuous column (o_totalprice ~15M distinct at sf10) is
-    corpus-proportional, and funnelling it through ONE window task is
-    the scale-killer class the plan lint exists to block (r8 verdict
-    What's-wrong #1).
+    corpus-proportional, and a few groups (3 for l_returnflag) would
+    funnel it through one window task per group — the scale-killer
+    class the plan lint exists to block (r8 verdict What's-wrong #1).
 
     NULLs in ``vcol`` are dropped first, matching percentile() /
     quantile_cont's null-ignoring semantics — a NULL histogram bucket
@@ -740,32 +740,14 @@ def _hist_exact_percentiles(
     cumulative order, silently shifting every percentile (r8 ADVICE).
     """
     df = df.filter(F.col(vcol).isNotNull())
-    if gcol is None:
-        hist = df.groupBy(F.col(vcol).alias("__v")).agg(
-            F.count(F.lit(1)).alias("__c")
-        )
-        hist = windows.with_global_running_sums(
-            hist, ["__v"], ["__c"]
-        ).withColumnRenamed("cum___c", "__cum")
-        total = hist.agg(F.sum("__c").alias("__n"))
-        hist = hist.crossJoin(F.broadcast(total))
-        key: list = []
-    else:
-        # grouped: the same hazard one partitionBy removed — a
-        # per-group histogram of a near-continuous column is
-        # corpus-proportional, so Window.partitionBy(group) would run
-        # each group's millions of histogram rows through ONE task
-        # (3 tasks total for l_returnflag at sf10). The grouped
-        # range-partitioned running sum spans each group across
-        # partitions with exact integer offsets; per-group totals are
-        # a tiny aggregate broadcast back.
-        hist = df.groupBy(F.col(gcol), F.col(vcol).alias("__v")).agg(
-            F.count(F.lit(1)).alias("__c")
-        )
-        hist = windows.with_grouped_running_sums(
-            hist, [gcol], ["__v"], ["__c"]
-        ).withColumnRenamed("cum___c", "__cum")
-        totals = hist.groupBy(gcol).agg(F.sum("__c").alias("__n"))
+    key = [gcol] if gcol else []
+    hist = df.groupBy(*key, F.col(vcol).alias("__v")).agg(
+        F.count(F.lit(1)).alias("__c")
+    )
+    hist, _ = windows.with_running_sums(hist, ["__v"], ["__c"], group_by=key)
+    hist = hist.withColumnRenamed("cum___c", "__cum")
+    totals = hist.groupBy(*key).agg(F.sum("__c").alias("__n"))
+    if gcol:
         # null-safe: groupBy keeps NULL as its own group, so the totals
         # join must not drop it (plain `=` would silently lose every
         # NULL-group row vs percentile()'s semantics)
@@ -773,7 +755,8 @@ def _hist_exact_percentiles(
             F.broadcast(totals.withColumnRenamed(gcol, "__g")),
             F.col(gcol).eqNullSafe(F.col("__g")),
         ).drop("__g")
-        key = [gcol]
+    else:
+        hist = hist.crossJoin(F.broadcast(totals))
     aggs = []
     for p, nm in zip(ps, names):
         tgt = (F.col("__n") - 1) * F.lit(float(p))

@@ -322,7 +322,7 @@ def approx_percentile_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the exact arm uses the histogram plan (state bounded by distinct
     # values) — percentile()'s per-task buffer is the r8 sf10 OOM class;
     # gcol=None routes the cumulative count through
-    # with_global_running_sums (no single-partition window)
+    # with_running_sums ungrouped (no single-partition window)
     exact = _hist_exact_percentiles(
         li, None, "l_extendedprice", [0.5], ["__exact"]
     )
@@ -1333,7 +1333,7 @@ def equidepth_price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact quartiles via the value-frequency histogram (see
     # _hist_exact_percentiles): percentile()'s per-task value buffer is
     # the r8 sf10 OOM class; gcol=None keeps the corpus-proportional
-    # cumulative count range-partitioned (with_global_running_sums) —
+    # cumulative count range-partitioned (with_running_sums) —
     # o_totalprice is near-continuous (~15M distinct at sf10), so a
     # single-partition window over its histogram is a serial funnel
     qs = _hist_exact_percentiles(
@@ -2876,7 +2876,7 @@ def pareto_abc_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pareto/ABC classification of parts by revenue: cumulative share
     over the revenue-ranked PER-PART aggregate, classes cut at 80/95%.
     The per-part frame grows with the catalog (sf100k ~ 2e10 parts), so
-    the running sum rides operators.windows.with_global_running_sums
+    the running sum rides operators.windows.with_running_sums
     (range shuffle + per-partition offsets) instead of a
     single-partition cumulative window; the grand total is a 1-row
     broadcast join. The inventory-policy analytic; ties rank by partkey
@@ -2891,7 +2891,7 @@ def pareto_abc_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("rev")
     )
-    cum = windows.with_global_running_sums(
+    cum, _ = windows.with_running_sums(
         r, [F.desc("rev"), F.col("l_partkey")], ["rev"]
     )
     c = cum.join(

@@ -1138,7 +1138,7 @@ def ks_two_sample_acctbal(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`distribution_drift_psi`) and Welch (`welch_ttest_acctbal`). One
     scan → per-distinct-value group counts → running ECDFs via the
     distributed range-partition-plus-offsets running sum
-    (`windows.with_global_running_sums` — NO single-partition window;
+    (`windows.with_running_sums` — NO single-partition window;
     integer partials are merge-order-exact) → max ECDF gap. Integer
     counts until the one final division."""
     c = _t(spark, sf_dir, "customer").filter(
@@ -1153,7 +1153,7 @@ def ks_two_sample_acctbal(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.lit(1) - F.col("in_a")).alias("cb"),
         )
     )
-    r = windows.with_global_running_sums(g, ["v"], ["ca", "cb"]).select(
+    r = windows.with_running_sums(g, ["v"], ["ca", "cb"])[0].select(
         "v",
         F.col("cum_ca").alias("cum_a"),
         F.col("cum_cb").alias("cum_b"),
@@ -1402,7 +1402,7 @@ def mannwhitney_u_acctbal(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("cnt"),
         )
     )
-    r = windows.with_global_running_sums(g, ["v"], ["cnt"]).select(
+    r = windows.with_running_sums(g, ["v"], ["cnt"])[0].select(
         "v", "ca", "cb", "cnt",
         (F.col("cum_cnt") - F.col("cnt")).alias("cum_before"),
     )
@@ -1823,7 +1823,7 @@ def logreg_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.lit(1.0) - F.col("y")).cast("long").alias("cb"),
         )
     )
-    r = windows.with_global_running_sums(g, ["score"], ["cb"]).select(
+    r = windows.with_running_sums(g, ["score"], ["cb"])[0].select(
         "score", "ca", "cb",
         (F.col("cum_cb") - F.col("cb")).alias("cumb_before"),
     )

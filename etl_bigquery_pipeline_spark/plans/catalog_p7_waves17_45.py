@@ -407,27 +407,15 @@ def curriculum_order_head(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
     # Distributed ntile: global row numbers via range-partition + offsets
     # (operators.windows.with_global_row_number — no single-partition
-    # WindowExec), then the ntile bucket closed-form from (rn, N):
-    # the first N%k buckets hold ceil(N/k) rows, the rest floor(N/k).
+    # WindowExec), then the ntile bucket closed-form from (rn, N).
     ranked, n = windows.with_global_row_number(
         d,
         [F.col("n_chars").desc(), F.col("doc_id").asc()],
         rn_col="__rn",
     )
-    base, rem = divmod(n, 10)
-    if base == 0:  # fewer rows than buckets: one row per bucket
-        decile = F.col("__rn")
-    else:
-        cut = rem * (base + 1)
-        decile = F.when(
-            F.col("__rn") <= F.lit(cut),
-            F.ceil(F.col("__rn") / F.lit(base + 1)),
-        ).otherwise(
-            F.lit(rem) + F.ceil((F.col("__rn") - F.lit(cut)) / F.lit(base))
-        )
     q = ranked.select(
         "doc_id",
-        decile.cast("bigint").alias("decile"),
+        windows.ntile_from_row_number(F.col("__rn"), n, 10).alias("decile"),
         F.md5(F.concat(F.lit("cur:"), F.col("doc_id").cast("string"))).alias("h"),
     )
     # Head-25 of the (decile, h, doc_id) order: TakeOrderedAndProject picks
@@ -1940,7 +1928,7 @@ def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain median of line items distorts): collapse weights per price,
     walk the cumulative weight to the 50% crossing. The running sum is
     the distributed range-partition + offsets machinery
-    (windows.with_global_running_sums) — never a single-partition
+    (windows.with_running_sums) — never a single-partition
     window; one value returns."""
     li = _t(spark, sf_dir, "lineitem")
     # collapse to per-price weights first (groupBy), then the running
@@ -1951,7 +1939,7 @@ def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("l_extendedprice", 2).alias("price"),
         F.col("l_quantity").alias("wt"),
     ).groupBy("price").agg(F.sum("wt").alias("wt"))
-    r = windows.with_global_running_sums(w, ["price"], ["wt"])
+    r, _ = windows.with_running_sums(w, ["price"], ["wt"])
     tot = w.agg(F.sum("wt").alias("total"))
     return (
         r.crossJoin(F.broadcast(tot))
@@ -3431,13 +3419,13 @@ def token_budget_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     priority order (length-desc here; any score column slots in), the
     budget crossing read off with filtered aggregates. The running sum
     goes through the distributed range-partition machinery
-    (windows.with_global_running_sums) — priority order at corpus scale
+    (windows.with_running_sums) — priority order at corpus scale
     is a range sort, not a single-partition window."""
     d = _t(spark, sf_dir, "documents")
     t = d.select(
         "doc_id", "n_chars", TX.token_count("text").alias("tok")
     )
-    r = windows.with_global_running_sums(
+    r, _ = windows.with_running_sums(
         t, [F.col("n_chars").desc(), F.col("doc_id").asc()], ["tok"]
     )
     in_b = F.col("cum_tok") <= 10000

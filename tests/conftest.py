@@ -60,8 +60,11 @@ def constructed_queries(spark):
     (~100-170s each). Sweeps that need a non-default conf (the
     broadcast lint forces thresholds to -1) must construct their own.
     Construction failures are stored and attributed by the consuming
-    test. Operator caches release when the fixture's cache_scope exits;
-    consumers only read schemas/plans, so warmth is irrelevant."""
+    test. Operator caches release when the fixture's cache_scope exits,
+    before any consumer runs: consumers only read schemas/plans, so
+    warmth is irrelevant, and the plans they inspect are UNCACHED (an
+    operator-cached frame replans from its full lineage, not from an
+    InMemoryRelation) — the plan lints check the uncached plans."""
     from etl_bigquery_pipeline_spark.plans import catalog
 
     out = {}

@@ -638,9 +638,9 @@ def test_with_global_running_sums_matches_serial(spark):
     for par in (1, 3, 8):
         got = {
             r.v: (r.cum_a, r.cum_b)
-            for r in windows.with_global_running_sums(
+            for r in windows.with_running_sums(
                 df, ["v"], ["a", "b"], partitions=par
-            ).collect()
+            )[0].collect()
         }
         acc_a = acc_b = 0
         for v, a, b in sorted(rows):
@@ -672,41 +672,100 @@ def test_with_grouped_running_sums_matches_serial(spark):
     for par in (1, 2, 16):
         got = {
             (r.g, r.v): r.cum_c
-            for r in windows.with_grouped_running_sums(
-                df, ["g"], ["v"], ["c"], partitions=par
-            ).collect()
+            for r in windows.with_running_sums(
+                df, ["v"], ["c"], group_by=["g"], partitions=par
+            )[0].collect()
         }
         assert got == serial, par
 
 
-def test_with_grouped_running_sums_empty_and_all_null_group(spark):
-    """r9 ADVICE: schema inference from collected offset rows raised
-    'can not infer schema' on an empty input (no rows to infer from)
-    and an all-NULL group column (no values to infer from) — cases
-    where the serial window plan returned an empty / NULL-group result.
-    The offset frame now takes an explicit schema and the offset join
-    is null-safe (partitionBy treats NULL as its own group)."""
+def test_with_running_sums_keeps_decimal_and_double_sums(spark):
+    """Decimal and double running sums keep the sum's type (the offset
+    map is cast to it) and match the serial prefix sums: decimals
+    exactly, doubles to rounding (partition offsets add in another
+    order than the serial scan), per group including a NULL group and
+    along a descending order."""
+    import random
+    from decimal import Decimal
+
+    from etl_bigquery_pipeline_spark.operators import windows
+
+    rnd = random.Random(5)
+    rows = [
+        (
+            [None, "x", "y"][rnd.randint(0, 2)],
+            v,
+            Decimal(rnd.randint(0, 10**6)) / 10**4,
+            rnd.random(),
+        )
+        for v in rnd.sample(range(1000), 150)
+    ]
+    df = spark.createDataFrame(
+        rows, "g string, v bigint, d decimal(18,4), x double"
+    )
+    serial, acc = {}, {}
+    for g, v, d, x in sorted(rows, key=lambda r: -r[1]):
+        a = acc.setdefault(g, [Decimal(0), 0.0])
+        a[0] += d
+        a[1] += x
+        serial[v] = (a[0], a[1])
+    for par in (1, 3, 8):
+        out, totals = windows.with_running_sums(
+            df, [F.col("v").desc()], ["d", "x"], group_by=["g"],
+            partitions=par,
+        )
+        types = {f.name: f.dataType.simpleString() for f in out.schema}
+        assert types["cum_d"] == "decimal(28,4)" and types["cum_x"] == "double"
+        got = {r.v: (r.cum_d, r.cum_x) for r in out.collect()}
+        assert {v: d for v, (d, _) in got.items()} == {
+            v: d for v, (d, _) in serial.items()
+        }, par
+        for v, (_, x) in serial.items():
+            assert abs(got[v][1] - x) <= 1e-9 * max(1.0, x), (par, v)
+        assert totals["d"] == sum(r[2] for r in rows)
+
+
+def test_prefix_sums_on_empty_input_and_all_null_group(spark):
+    """Every prefix-sum entry point returns a typed empty frame on an
+    empty input (an untyped empty offset map once failed to resolve:
+    ``map()[__gpid]``), with a row-number total of 0. The grouped sum
+    keeps a NULL group as its own group, as ``Window.partitionBy`` does
+    (r9 ADVICE: schema inference of the offsets once failed on an
+    all-NULL group column)."""
+    from etl_bigquery_pipeline_spark.operators import packing, sampling
     from etl_bigquery_pipeline_spark.operators import windows
 
     empty = spark.createDataFrame([], "g string, v double, c long")
-    out = windows.with_grouped_running_sums(
-        empty, ["g"], ["v"], ["c"], partitions=4
+    for group_by in ([], ["g"]):
+        out, totals = windows.with_running_sums(
+            empty, ["v"], ["c"], group_by=group_by, partitions=4
+        )
+        assert out.collect() == [] and totals == {"c": 0}
+        assert out.columns == ["g", "v", "c", "cum_c"]
+        assert out.schema["cum_c"].dataType.simpleString() == "bigint"
+    out, total = windows.with_global_row_number(
+        empty, ["v"], rn_col="rn", partitions=4
     )
-    assert out.collect() == []
-    assert "cum_c" in out.columns
+    assert out.collect() == [] and total == 0
+    assert out.columns == ["g", "v", "c", "rn"]
+    out = sampling.with_stable_ids_distributed(
+        empty, ["v"], id_col="rid", partitions=4
+    )
+    assert out.collect() == [] and out.columns == ["g", "v", "c", "rid"]
+    out = packing.pack_global_distributed(
+        empty, size_col="c", order_by=["v"], budget=10, partitions=4
+    )
+    assert out.collect() == [] and out.columns == ["g", "v", "c", "pack_id"]
 
     nulls = spark.createDataFrame(
         [(None, 1.0, 2), (None, 2.0, 3), (None, 3.0, 5)],
         "g string, v double, c long",
     )
-    got = {
-        r.v: r.cum_c
-        for r in windows.with_grouped_running_sums(
-            nulls, ["g"], ["v"], ["c"], partitions=4
-        ).collect()
-    }
-    assert got == {1.0: 2, 2.0: 5, 3.0: 10}
-
+    out, totals = windows.with_running_sums(
+        nulls, ["v"], ["c"], group_by=["g"], partitions=4
+    )
+    assert {r.v: r.cum_c for r in out.collect()} == {1.0: 2, 2.0: 5, 3.0: 10}
+    assert totals == {"c": 10}
 
 
 def test_triangle_count_known_graphs(spark):
@@ -1154,3 +1213,37 @@ def test_literal_frame_rejects_rows_of_the_wrong_length(spark):
     for bad in ([("x", 1, "extra")], [("x", 1), ("y",)]):
         with pytest.raises(ValueError, match="schema has 2 fields"):
             literal_frame(spark, bad, schema)
+
+
+def test_literal_frame_rejects_values_its_fields_cannot_hold(spark):
+    """A value is cast to its field's type only if the field holds it
+    exactly: 1.5 into bigint would truncate, "abc" into bigint would
+    become NULL, True into bigint would become 1. Each raises TypeError
+    before any plan is built."""
+    import pytest
+
+    from etl_bigquery_pipeline_spark.operators.localrel import literal_frame
+
+    schema = "s string, n bigint, i int, x double, b boolean"
+    ok = [("a", 2**62, -(2**31), 1, True), (None, None, None, 0.5, None)]
+    assert literal_frame(spark, ok, schema).collect() == [
+        ("a", 2**62, -(2**31), 1.0, True),
+        (None, None, None, 0.5, None),
+    ]
+    good = ok[0]
+    for pos, bad in [
+        (1, 1.5),
+        (1, "abc"),
+        (1, True),
+        (1, 2**63),
+        (2, 2**31),
+        (3, "1.0"),
+        (3, False),
+        (4, 1),
+        (0, 7),
+    ]:
+        row = good[:pos] + (bad,) + good[pos + 1 :]
+        with pytest.raises(TypeError, match="does not fit field"):
+            literal_frame(spark, [row], schema)
+    with pytest.raises(TypeError, match="decimal"):
+        literal_frame(spark, [(1,)], "d decimal(10,2)")
