@@ -74,8 +74,8 @@ def build_dhash_index(
     hashed = binary_ops.with_perceptual_hash(
         corpus, id_col=id_col, binary_col=binary_col
     ).filter(F.col("ok"))
-    # bucket-aligned write + meta via the shared band-index skeleton
-    # (band_index_core — same implementation as the text MinHash tier)
+    # bucket-aligned write + meta via band_index_core, the write path
+    # all four persisted index families share
     band_index_core.write_band_index(
         dhash_bands(hashed, id_col),
         table,
@@ -107,9 +107,9 @@ def near_dup_candidates_from_dhash_index(
     rows only. max_hamming > 3 weakens the pigeonhole guarantee over
     four 16-bit bands (a distance-4 pair can corrupt all four) — the
     same banded-recall trade as text LSH, kept at the guaranteed 3."""
-    from etl_bigquery_pipeline_spark.operators import ann_index, band_index_core
+    from etl_bigquery_pipeline_spark.operators import band_index_core
 
-    meta = ann_index._read_meta(spark, table)
+    meta = band_index_core.read_meta(spark, table)
     id_col = meta["id_col"]
     bands_b = dhash_bands(batch_hashed, id_col).select(
         F.col(id_col).alias("batch_id"),
@@ -141,7 +141,7 @@ def append_to_dhash_index(
     batch_hashed: DataFrame, table: str, *, recovery: bool = False
 ) -> None:
     """Insert a hashed batch's band rows into the bucketed layout —
-    one pass over the batch, corpus untouched. insertInto resolves by
+    one pass over the batch, corpus untouched. The append resolves by
     POSITION; dhash_bands mirrors the build projection exactly.
     Id uniqueness across batches is the caller's contract.
 
@@ -151,10 +151,10 @@ def append_to_dhash_index(
     insert and its commit marker cannot duplicate index rows (r8 ADVICE:
     duplicates were benign for matching but inflated index row counts
     that the rehearsal asserts on)."""
-    from etl_bigquery_pipeline_spark.operators import ann_index, band_index_core
+    from etl_bigquery_pipeline_spark.operators import band_index_core
 
     spark = batch_hashed.sparkSession
-    meta = ann_index._read_meta(spark, table)
+    meta = band_index_core.read_meta(spark, table)
     band_index_core.append_band_rows(
         dhash_bands(batch_hashed, meta["id_col"]),
         table,

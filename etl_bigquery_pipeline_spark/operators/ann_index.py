@@ -6,15 +6,19 @@ At 100 TB the corpus should be written ONCE with its bucket key
 materialized, so that a probe:
 
 1. reads only the matching bucket FILES — Spark prunes buckets for
-   equality/IN predicates on the bucketBy column (``SelectedBucketsCount``
+   equality/IN predicates on the bucketing column (``SelectedBucketsCount``
    in the scan node), so a probe touches ~|probe set|/buckets of the data;
 2. never shuffles the corpus — the query side is broadcast, and the only
    Exchange in the whole plan is the tiny candidate-set repartition for
    the per-query top-k window.
 
-Index metadata (hyperplanes seed/bits for LSH, trained centroids for IVF)
-is persisted in a one-row ``<table>__meta`` JSON table so probes never
-retrain and never rescan the corpus.
+Index rows are (neighbor_id, vec, vnorm, bucket|cell). Writes, appends
+and the one-row ``<table>__meta`` JSON table (hyperplane seed/bits for
+LSH, trained centroids for IVF — probes never retrain and never rescan
+the corpus) go through operators/band_index_core, the core all four
+persisted index families share. This module keeps the embedding-specific
+parts: the key each vector is filed under, and the probe, which ranks
+its candidates with ``similarity.rank_by_cosine``.
 
 Same contract as similarity.py: with identical (dim, bits, seed,
 probe_flips) an index probe returns EXACTLY the rows of
@@ -25,13 +29,15 @@ persisted path against the in-memory one value-for-value.
 
 from __future__ import annotations
 
-import json
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_bigquery_pipeline_spark.functions.vectors import dot, norm
-from etl_bigquery_pipeline_spark.operators.localrel import literal_frame
+from etl_bigquery_pipeline_spark.functions.vectors import norm
+from etl_bigquery_pipeline_spark.operators.band_index_core import (
+    append_band_rows,
+    read_meta,
+    write_band_index,
+)
 from etl_bigquery_pipeline_spark.operators.partitioning import (
     widen_if_narrow,
 )
@@ -39,66 +45,55 @@ from etl_bigquery_pipeline_spark.operators.similarity import (
     _nearest_centroids,
     hyperplane_bucket,
     probe_buckets,
+    query_side,
+    rank_by_cosine,
     train_centroids,
 )
 
-_META_SUFFIX = "__meta"
 
-
-def _looks_like_table_dir(fs: "object", path: "object") -> bool:
-    """True when the directory carries Spark table artifacts (a _SUCCESS
-    commit marker or part-* data files) — the only shape _reset_table is
-    allowed to delete. An unrelated directory that merely shares the
-    table's name never matches."""
-    if fs.getFileStatus(path).isFile():
-        return False
-    for status in fs.listStatus(path):
-        name = status.getPath().getName()
-        if name == "_SUCCESS" or name.startswith("part-"):
-            return True
-    return False
-
-
-def _reset_table(spark: SparkSession, table: str) -> None:
-    """Drop the catalog entry AND any orphaned warehouse directory.
-
-    With the default in-memory catalog, table registrations die with the
-    session while their files persist in spark.sql.warehouse.dir — a
-    rebuild in a fresh session would then fail with
-    LOCATION_ALREADY_EXISTS. The Hadoop FS API handles any filesystem
-    (local, HDFS, object stores).
-
-    Deletion is guarded two ways: only the *stale-orphan* case touches the
-    filesystem (a directory left behind when no catalog entry existed —
-    if the catalog knew the table, DROP TABLE already owned its managed
-    location), and the directory must actually look like a Spark table
-    (commit marker / part files), so a colliding unrelated directory or an
-    external-location table is never destroyed."""
-    existed_in_catalog = spark.catalog.tableExists(table)
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    if existed_in_catalog:
-        return  # managed location handled by DROP; external data is not ours
-    wh = spark.conf.get("spark.sql.warehouse.dir", "")
-    if not wh:
-        return
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(
-        wh.rstrip("/") + "/" + table.lower()
+def _index_rows(
+    vectors: DataFrame, id_col: str, vec_col: str, key
+) -> DataFrame:
+    """(neighbor_id, vec, vnorm, key) — the index row layout; builds and
+    appends share it because the append resolves columns by POSITION."""
+    return vectors.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).alias("vec"),
+        norm(vec_col).alias("vnorm"),
+        key,
     )
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(path) and _looks_like_table_dir(fs, path):
-        fs.delete(path, True)
 
 
-def _write_meta(spark: SparkSession, table: str, meta: dict) -> None:
-    _reset_table(spark, table + _META_SUFFIX)
-    literal_frame(spark, [(json.dumps(meta),)], "meta string").write.mode(
-        "overwrite"
-    ).saveAsTable(table + _META_SUFFIX)
-
-
-def _read_meta(spark: SparkSession, table: str) -> dict:
-    return json.loads(spark.table(table + _META_SUFFIX).first().meta)
+def _rank_probe(
+    spark: SparkSession,
+    table: str,
+    q: DataFrame,
+    key: str,
+    keys: list,
+    *,
+    k: int,
+    query_id_col: str,
+    sim_decimals: int,
+) -> DataFrame:
+    """Rank a probe's candidates: the index scan filtered to ``key IN
+    keys`` (bucket pruning), joined to the broadcast query side ``q`` on
+    ``key``, self-matches dropped."""
+    c = (
+        spark.table(table)
+        .filter(F.col(key).isin(keys))
+        .select(
+            "neighbor_id",
+            F.col("vec").alias("__cvec"),
+            F.col("vnorm").alias("__cnorm"),
+            key,
+        )
+    )
+    pairs = c.join(F.broadcast(q), key).filter(
+        F.col(query_id_col) != F.col("neighbor_id")
+    )
+    return rank_by_cosine(
+        pairs, k=k, query_id_col=query_id_col, sim_decimals=sim_decimals
+    )
 
 
 def build_lsh_index(
@@ -119,34 +114,20 @@ def build_lsh_index(
     map + bucketed write (one shuffle into the bucket layout, amortized
     over every future probe).
     """
-    spark = corpus.sparkSession
-    _reset_table(spark, table)
-    n_buckets = buckets or min(2**bits, 64)
     # the per-vector bucket/norm projection runs MAP-SIDE of the bucket
     # shuffle (the exchange needs the key the projection computes), so a
     # degenerate scan width — e.g. a single-row-group parquet file —
     # would serialize it; widen first (the pq_topk sf10 find, SCALE.md)
-    corpus = widen_if_narrow(corpus, id_col)
-    indexed = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("vec"),
-        norm(vec_col).alias("vnorm"),
-        hyperplane_bucket(vec_col, dim=dim, bits=bits, seed=seed).alias(
-            "bucket"
-        ),
+    indexed = _index_rows(
+        widen_if_narrow(corpus, id_col), id_col, vec_col,
+        hyperplane_bucket(vec_col, dim=dim, bits=bits, seed=seed).alias("bucket"),
     )
-    # repartition on the bucket column (same hash bucketBy uses) so each
-    # write task owns one bucket — otherwise every upstream partition
-    # sorts and writes slices of all buckets (measured 2x slower)
-    (
-        indexed.repartition(n_buckets, "bucket")
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, "bucket")
-        .sortBy("bucket")
-        .saveAsTable(table)
-    )
-    _write_meta(
-        spark, table, {"kind": "lsh", "dim": dim, "bits": bits, "seed": seed}
+    write_band_index(
+        indexed,
+        table,
+        "bucket",
+        {"kind": "lsh", "dim": dim, "bits": bits, "seed": seed},
+        n_buckets=buckets or min(2**bits, 64),
     )
 
 
@@ -166,43 +147,22 @@ def append_to_lsh_index(
     per-batch cost is one pass over the batch, never the corpus.
     Id uniqueness across batches is the caller's contract, same as the
     band index (dedup.build_band_index)."""
-    spark = new_vectors.sparkSession
-    meta = _read_meta(spark, table)
-    if meta.get("kind") != "lsh":
-        raise ValueError(
-            f"{table!r} is a {meta.get('kind')!r} index; append_to_lsh_index"
-            " maintains LSH indexes only"
-        )
-    dim, bits, seed = meta["dim"], meta["bits"], meta["seed"]
-    batch = new_vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("vec"),
-        norm(vec_col).alias("vnorm"),
-        hyperplane_bucket(vec_col, dim=dim, bits=bits, seed=seed).alias(
-            "bucket"
-        ),
+    meta = read_meta(
+        new_vectors.sparkSession, table, "lsh",
+        reader="append_to_lsh_index maintains",
     )
-    if recovery:
-        # crash-window replay (two-marker protocol in streaming sinks):
-        # the crashed attempt may have inserted some/all of this batch —
-        # anti-join its ids away first so the append is idempotent. One
-        # extra index scan, paid on this rare path only; ids are unique
-        # across batches by contract, so id-level dedupe is sufficient.
-        hits = (
-            spark.table(table)
-            .join(
-                F.broadcast(batch.select("neighbor_id")),
-                "neighbor_id",
-                "semi",
-            )
-            .select("neighbor_id")
-            .distinct()
-        )
-        batch = batch.join(F.broadcast(hits), "neighbor_id", "left_anti")
-    # insertInto resolves columns by POSITION; select order above matches
-    # the build projection exactly. repartition on bucket aligns write
-    # tasks with buckets, bounding the small files each append adds
-    batch.repartition("bucket").write.insertInto(table, overwrite=False)
+    batch = _index_rows(
+        new_vectors, id_col, vec_col,
+        hyperplane_bucket(
+            vec_col, dim=meta["dim"], bits=meta["bits"], seed=meta["seed"]
+        ).alias("bucket"),
+    )
+    # recovery: crash-window replay (two-marker protocol in streaming
+    # sinks) — the crashed attempt may have inserted some/all of this
+    # batch. Each vector is ONE index row, so id-level dedupe is exact.
+    append_band_rows(
+        batch, table, "bucket", dedupe_on=["neighbor_id"] if recovery else None
+    )
 
 
 def probe_lsh_index(
@@ -228,13 +188,10 @@ def probe_lsh_index(
     (query_id, neighbor_id, sim, rank) — identical to
     ``similarity.lsh_cosine_topk`` at equal parameters.
     """
-    meta = _read_meta(spark, table)
+    meta = read_meta(spark, table, "lsh", reader="probe_lsh_index probes")
     dim, bits, seed = meta["dim"], meta["bits"], meta["seed"]
-
-    q = queries.select(
-        F.col(id_col).alias(query_id_col),
-        F.col(vec_col).alias("__qvec"),
-        norm(vec_col).alias("__qnorm"),
+    q = query_side(
+        queries, id_col, vec_col, query_id_col,
         F.explode(
             probe_buckets(
                 hyperplane_bucket(vec_col, dim=dim, bits=bits, seed=seed),
@@ -244,27 +201,9 @@ def probe_lsh_index(
         ).alias("bucket"),
     )
     probe_codes = sorted({r.bucket for r in q.select("bucket").collect()})
-
-    c = spark.table(table).filter(F.col("bucket").isin(probe_codes))
-    sim = F.round(
-        F.try_divide(
-            dot(F.col("__qvec"), F.col("vec")),
-            F.col("__qnorm") * F.col("vnorm"),
-        ),
-        sim_decimals,
-    ).alias("sim")
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col(query_id_col) != F.col("neighbor_id"))
-        .select(query_id_col, "neighbor_id", sim)
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "sim", "rank")
+    return _rank_probe(
+        spark, table, q, "bucket", probe_codes,
+        k=k, query_id_col=query_id_col, sim_decimals=sim_decimals,
     )
 
 
@@ -282,8 +221,6 @@ def build_ivf_index(
     """One-time IVF build: train centroids on a bounded sample, assign
     each vector to its nearest cell, persist bucketed-by(cell). Centroids
     land in the meta table so probes reuse them without retraining."""
-    spark = corpus.sparkSession
-    _reset_table(spark, table)
     # same map-side-projection widening as build_lsh_index — the
     # nearest-centroid assignment (nlist distances per vector) is the
     # most expensive per-row expression in this module
@@ -296,23 +233,17 @@ def build_ivf_index(
         sample_n=sample_n,
         seed=seed,
     )
-    indexed = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("vec"),
-        norm(vec_col).alias("vnorm"),
-        F.element_at(_nearest_centroids(vec_col, centroids, 1), 1).alias(
-            "cell"
-        ),
+    indexed = _index_rows(
+        corpus, id_col, vec_col,
+        F.element_at(_nearest_centroids(vec_col, centroids, 1), 1).alias("cell"),
     )
-    n_cell_buckets = buckets or min(nlist, 64)
-    (
-        indexed.repartition(n_cell_buckets, "cell")
-        .write.mode("overwrite")
-        .bucketBy(n_cell_buckets, "cell")
-        .sortBy("cell")
-        .saveAsTable(table)
+    write_band_index(
+        indexed,
+        table,
+        "cell",
+        {"kind": "ivf", "centroids": centroids},
+        n_buckets=buckets or min(nlist, 64),
     )
-    _write_meta(spark, table, {"kind": "ivf", "centroids": centroids})
 
 
 def append_to_ivf_index(
@@ -329,23 +260,17 @@ def append_to_ivf_index(
     cost, pruning intact, id uniqueness on the caller. If the corpus
     drifts far from the trained centroids, rebuild — cell occupancy
     (spark.table(t).groupBy('cell').count()) is the drift signal."""
-    spark = new_vectors.sparkSession
-    meta = _read_meta(spark, table)
-    if meta.get("kind") != "ivf":
-        raise ValueError(
-            f"{table!r} is a {meta.get('kind')!r} index; append_to_ivf_index"
-            " maintains IVF indexes only"
-        )
-    centroids = meta["centroids"]
-    batch = new_vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("vec"),
-        norm(vec_col).alias("vnorm"),
-        F.element_at(_nearest_centroids(vec_col, centroids, 1), 1).alias(
-            "cell"
-        ),
+    meta = read_meta(
+        new_vectors.sparkSession, table, "ivf",
+        reader="append_to_ivf_index maintains",
     )
-    batch.repartition("cell").write.insertInto(table, overwrite=False)
+    batch = _index_rows(
+        new_vectors, id_col, vec_col,
+        F.element_at(
+            _nearest_centroids(vec_col, meta["centroids"], 1), 1
+        ).alias("cell"),
+    )
+    append_band_rows(batch, table, "cell")
 
 
 def probe_ivf_index(
@@ -363,36 +288,15 @@ def probe_ivf_index(
     """Top-k probe against a persisted IVF index — zero corpus shuffle,
     cells bucket-pruned via ``cell IN (...)``. Identical results to
     ``similarity.ivf_cosine_topk`` at equal parameters."""
-    centroids = _read_meta(spark, table)["centroids"]
-
-    q = queries.select(
-        F.col(id_col).alias(query_id_col),
-        F.col(vec_col).alias("__qvec"),
-        norm(vec_col).alias("__qnorm"),
-        F.explode(_nearest_centroids(vec_col, centroids, nprobe)).alias(
-            "cell"
-        ),
+    meta = read_meta(spark, table, "ivf", reader="probe_ivf_index probes")
+    q = query_side(
+        queries, id_col, vec_col, query_id_col,
+        F.explode(
+            _nearest_centroids(vec_col, meta["centroids"], nprobe)
+        ).alias("cell"),
     )
     probe_cells = sorted({r.cell for r in q.select("cell").collect()})
-
-    c = spark.table(table).filter(F.col("cell").isin(probe_cells))
-    sim = F.round(
-        F.try_divide(
-            dot(F.col("__qvec"), F.col("vec")),
-            F.col("__qnorm") * F.col("vnorm"),
-        ),
-        sim_decimals,
-    ).alias("sim")
-    scored = (
-        c.join(F.broadcast(q), "cell")
-        .filter(F.col(query_id_col) != F.col("neighbor_id"))
-        .select(query_id_col, "neighbor_id", sim)
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "sim", "rank")
+    return _rank_probe(
+        spark, table, q, "cell", probe_cells,
+        k=k, query_id_col=query_id_col, sim_decimals=sim_decimals,
     )

@@ -1,28 +1,103 @@
-"""Shared mechanics of the persisted band indexes (r8 verdict ask #6).
+"""Shared mechanics of the persisted indexes.
 
-Two band-index families grew the same skeleton independently — the text
-tier (MinHash over shingles, `operators.dedup.build_band_index`) and the
-image tier (dHash bands, `multimodal.dhash_index`). Both persist
-(id, band, key, payload) rows bucketed by the band key, probe by
-broadcasting a batch's band keys against the bucketed layout, and append
-new batches with a positional insertInto. This module is that skeleton,
-extracted once so the next bucket-geometry or exactly-once bug has one
-place to hide instead of two; the family modules keep the hashing that
-makes them different (minhash signatures vs 64-bit dHash splits).
+Four index families persist rows bucketed by a key column and keep their
+build parameters in a one-row ``<table>__meta`` JSON table:
 
-100 TB shape (inherited by both families): index rows are a few dozen
-bytes per item regardless of payload size; probes ship batch-sized key
-sets (broadcast) so the corpus side is a pruned bucket scan; appends are
-one pass over the batch into the bucketed layout — the corpus is never
-re-hashed, never shuffled.
+- text tier: MinHash bands over shingles (`operators.dedup.build_band_index`);
+- image tier: dHash bands (`multimodal.dhash_index`);
+- embedding LSH: hyperplane sign-pattern buckets
+  (`operators.ann_index.build_lsh_index`);
+- embedding IVF: nearest trained-centroid cells
+  (`operators.ann_index.build_ivf_index`).
+
+All four write, append and reset their tables through this module; the
+family modules keep only what makes them different (the key they hash,
+the payload they carry, how they probe). Probes ship batch-sized key sets
+(broadcast), so the corpus side is a pruned bucket scan; appends are one
+pass over the batch into the bucketed layout with a positional
+insertInto — the corpus is never re-hashed, never shuffled.
 """
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_bigquery_pipeline_spark.operators.localrel import literal_frame
+
 N_BUCKETS = 64
+META_SUFFIX = "__meta"
+
+
+def looks_like_table_dir(fs: "object", path: "object") -> bool:
+    """True when the directory carries Spark table artifacts (a _SUCCESS
+    commit marker or part-* data files) — the only shape reset_table is
+    allowed to delete. An unrelated directory that merely shares the
+    table's name never matches."""
+    if fs.getFileStatus(path).isFile():
+        return False
+    for status in fs.listStatus(path):
+        name = status.getPath().getName()
+        if name == "_SUCCESS" or name.startswith("part-"):
+            return True
+    return False
+
+
+def reset_table(spark: SparkSession, table: str) -> None:
+    """Drop the catalog entry AND any orphaned warehouse directory.
+
+    With the default in-memory catalog, table registrations die with the
+    session while their files persist in spark.sql.warehouse.dir — a
+    rebuild in a fresh session would then fail with
+    LOCATION_ALREADY_EXISTS. The Hadoop FS API handles any filesystem
+    (local, HDFS, object stores).
+
+    Deletion is guarded two ways: only the *stale-orphan* case touches the
+    filesystem (a directory left behind when no catalog entry existed —
+    if the catalog knew the table, DROP TABLE already owned its managed
+    location), and the directory must actually look like a Spark table
+    (commit marker / part files), so a colliding unrelated directory or an
+    external-location table is never destroyed."""
+    existed_in_catalog = spark.catalog.tableExists(table)
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    if existed_in_catalog:
+        return  # managed location handled by DROP; external data is not ours
+    wh = spark.conf.get("spark.sql.warehouse.dir", "")
+    if not wh:
+        return
+    jvm = spark._jvm
+    path = jvm.org.apache.hadoop.fs.Path(
+        wh.rstrip("/") + "/" + table.lower()
+    )
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    if fs.exists(path) and looks_like_table_dir(fs, path):
+        fs.delete(path, True)
+
+
+def write_meta(spark: SparkSession, table: str, meta: dict) -> None:
+    """Persist ``meta`` as the one-row JSON table ``<table>__meta``."""
+    reset_table(spark, table + META_SUFFIX)
+    literal_frame(spark, [(json.dumps(meta),)], "meta string").write.mode(
+        "overwrite"
+    ).saveAsTable(table + META_SUFFIX)
+
+
+def read_meta(
+    spark: SparkSession, table: str, kind: str | None = None, *, reader: str = ""
+) -> dict:
+    """The index's build metadata. With ``kind`` set, an index built as
+    another kind raises ValueError (``reader`` names the caller and what
+    it does, e.g. "probe_lsh_index probes") instead of failing later on a
+    missing meta key."""
+    meta = json.loads(spark.table(table + META_SUFFIX).first().meta)
+    if kind is not None and meta.get("kind") != kind:
+        raise ValueError(
+            f"{table!r} is a {meta.get('kind')!r} index; {reader}"
+            f" {kind.upper()} indexes only"
+        )
+    return meta
 
 
 def write_band_index(
@@ -42,10 +117,8 @@ def write_band_index(
     instead of staying == n_buckets). Metadata persists alongside so
     probes and appends can never disagree with the build's geometry.
     """
-    from etl_bigquery_pipeline_spark.operators import ann_index
-
     spark = rows.sparkSession
-    ann_index._reset_table(spark, table)
+    reset_table(spark, table)
     (
         rows.repartition(n_buckets, bucket_col)
         .write.bucketBy(n_buckets, bucket_col)
@@ -53,7 +126,7 @@ def write_band_index(
         .mode("overwrite")
         .saveAsTable(table)
     )
-    ann_index._write_meta(spark, table, meta)
+    write_meta(spark, table, meta)
 
 
 def probe_collisions(

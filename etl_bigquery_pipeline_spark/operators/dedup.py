@@ -1058,8 +1058,8 @@ def build_band_index(
         )
     )
     bk = minhash_band_keys(sig, id_col, bands=bands)
-    # bucket-aligned write + meta via the shared band-index skeleton
-    # (band_index_core — one implementation for the text AND image tiers)
+    # bucket-aligned write + meta via band_index_core, the write path
+    # all four persisted index families share
     band_index_core.write_band_index(
         bk.join(sig, id_col),
         table,
@@ -1100,9 +1100,9 @@ def near_dup_candidates_from_index(
     """
     from pyspark.sql import SparkSession  # noqa: F401 (typing only)
 
-    from etl_bigquery_pipeline_spark.operators import ann_index, band_index_core
+    from etl_bigquery_pipeline_spark.operators import band_index_core
 
-    meta = ann_index._read_meta(spark, table)
+    meta = band_index_core.read_meta(spark, table)
     sig_b = (
         signatures
         if signatures is not None
@@ -1200,10 +1200,10 @@ def append_to_band_index(
     recall loss, strictly worse than the duplicates the protocol
     prevents). Mirrors the image stream's (id, band, band_val) dhash
     recovery; r10 ADVICE."""
-    from etl_bigquery_pipeline_spark.operators import ann_index, band_index_core
+    from etl_bigquery_pipeline_spark.operators import band_index_core
 
     spark = batch.sparkSession
-    meta = ann_index._read_meta(spark, table)
+    meta = band_index_core.read_meta(spark, table)
     sig = minhash_signatures(
         batch,
         meta["id_col"],
@@ -1212,7 +1212,7 @@ def append_to_band_index(
         shingle_n=meta["shingle_n"],
     )
     bk = minhash_band_keys(sig, meta["id_col"], bands=meta["bands"])
-    # insertInto resolves by POSITION; this join mirrors the build
+    # the append resolves columns by POSITION; this join mirrors the build
     # projection (id, band, band_key, signature) exactly
     band_index_core.append_band_rows(
         bk.join(sig, meta["id_col"]),

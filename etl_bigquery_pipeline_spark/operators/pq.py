@@ -28,9 +28,14 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_bigquery_pipeline_spark.functions.vectors import dot, norm
+from etl_bigquery_pipeline_spark.functions.vectors import norm
 from etl_bigquery_pipeline_spark.operators.partitioning import (
     widen_if_narrow,
+)
+from etl_bigquery_pipeline_spark.operators.similarity import (
+    corpus_side,
+    query_side,
+    rank_by_cosine,
 )
 
 
@@ -220,31 +225,10 @@ def pq_topk(
         .select(query_id_col, "neighbor_id")
     )
 
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cvec"),
-        norm(vec_col).alias("__cnorm"),
+    pairs = cands.join(corpus_side(corpus, id_col, vec_col), "neighbor_id").join(
+        F.broadcast(query_side(queries, id_col, vec_col, query_id_col)),
+        query_id_col,
     )
-    q = queries.select(
-        F.col(id_col).alias(query_id_col),
-        F.col(vec_col).alias("__qvec"),
-        norm(vec_col).alias("__qnorm"),
-    )
-    sim = F.round(
-        F.try_divide(
-            dot(F.col("__qvec"), F.col("__cvec")),
-            F.col("__qnorm") * F.col("__cnorm"),
-        ),
-        sim_decimals,
-    ).alias("sim")
-    wf = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cands.join(c, "neighbor_id")
-        .join(F.broadcast(q), query_id_col)
-        .select(query_id_col, "neighbor_id", sim)
-        .withColumn("rank", F.row_number().over(wf))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "sim", "rank")
+    return rank_by_cosine(
+        pairs, k=k, query_id_col=query_id_col, sim_decimals=sim_decimals
     )

@@ -1,21 +1,29 @@
 """Similarity search over embedding columns (north-star tier).
 
-Two strategies over array<float> embeddings:
+Every cosine top-k in the engine is one plan with a different candidate
+join: ``query_side``/``corpus_side`` project (id, vector, norm) once per
+row, the caller joins them its own way, and ``rank_by_cosine`` scores the
+pairs (rounded ``try_divide`` cosine — a zero-norm vector scores NULL and
+ranks last) and keeps each query's k best by (sim desc, neighbor_id asc),
+a total order that is engine-reproducible. The candidate joins:
 
-- ``cosine_topk``: exact brute force — broadcast the (small) query set
-  against the corpus, JVM-side dot products, per-query top-k via window
-  rank. The correctness baseline; at 100 TB it is one corpus scan per
-  query batch with no corpus shuffle (queries are broadcast), which is the
-  right exact plan.
-- ``lsh_cosine_topk``: random-hyperplane LSH — bucket corpus and queries by
-  sign-pattern hash, search only same-bucket (and optionally neighboring
-  probes) candidates. Trades recall for a candidate set ~1/2^bits of the
-  corpus; the scale path when the query batch is large.
+- ``cosine_topk``: exact brute force — the (small) query set broadcast
+  against every corpus row. The correctness baseline; at 100 TB it is one
+  corpus scan per query batch with no corpus shuffle.
+- ``lsh_cosine_topk``: random-hyperplane LSH — corpus and queries joined
+  on sign-pattern bucket, queries exploded to their multi-probe codes.
+  Trades recall for a candidate set ~(bits+1)/2^bits of the corpus.
+- ``ivf_cosine_topk``: corpus cells by nearest trained centroid, queries
+  probe their ``nprobe`` nearest cells.
+- ``truncated_prefilter_topk``: exact top-k on a dimension prefix picks
+  the candidates, the full vectors rerank them.
+- ``hard_negatives``: exact, restricted to pairs whose labels differ.
 
-Hyperplanes are generated driver-side from a fixed seed (numpy
-RandomState), shipped as literal arrays — deterministic across runs and
-engines. An IVF (k-means-partitioned) variant slots into the same contract
-with trained centroids replacing random planes.
+The persisted-index probes (operators/ann_index.py) and the PQ rerank
+(operators/pq.py) hand their candidate pairs to the same
+``rank_by_cosine``. Hyperplanes are generated driver-side from a fixed
+seed (numpy RandomState), shipped as literal arrays — deterministic
+across runs and engines.
 """
 
 from __future__ import annotations
@@ -24,9 +32,63 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_bigquery_pipeline_spark.functions.vectors import cosine, dot, norm
+from etl_bigquery_pipeline_spark.functions.vectors import dot, norm
+from etl_bigquery_pipeline_spark.operators.band_index_core import read_meta
 from etl_bigquery_pipeline_spark.operators.caching import scoped_cache
 from etl_bigquery_pipeline_spark.operators.partitioning import widen_if_narrow
+
+
+def query_side(
+    queries: DataFrame, id_col: str, vec_col: str, query_id_col: str, *extra
+) -> DataFrame:
+    """(query_id_col, __qvec, __qnorm, *extra): the query half of a cosine
+    top-k. Norms are per-vector, so they are computed here once per row
+    and each pair costs one dot product."""
+    return queries.select(
+        F.col(id_col).alias(query_id_col),
+        F.col(vec_col).alias("__qvec"),
+        norm(vec_col).alias("__qnorm"),
+        *extra,
+    )
+
+
+def corpus_side(corpus: DataFrame, id_col: str, vec_col: str, *extra) -> DataFrame:
+    """(neighbor_id, __cvec, __cnorm, *extra): the corpus half of a cosine
+    top-k."""
+    return corpus.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).alias("__cvec"),
+        norm(vec_col).alias("__cnorm"),
+        *extra,
+    )
+
+
+def rank_by_cosine(
+    pairs: DataFrame, *, k: int, query_id_col: str, sim_decimals: int
+) -> DataFrame:
+    """Score joined query_side x corpus_side pairs and keep each query's
+    top k: (query_id_col, neighbor_id, sim, rank).
+
+    ``sim`` is the cosine rounded to ``sim_decimals``, ranked by (sim
+    desc, neighbor_id asc) so results are total-ordered and
+    engine-reproducible. A zero-norm vector has no cosine: ``try_divide``
+    gives NULL sim, which ranks after every scored neighbor."""
+    sim = F.round(
+        F.try_divide(
+            dot(F.col("__qvec"), F.col("__cvec")),
+            F.col("__qnorm") * F.col("__cnorm"),
+        ),
+        sim_decimals,
+    ).alias("sim")
+    w = Window.partitionBy(query_id_col).orderBy(
+        F.col("sim").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        pairs.select(query_id_col, "neighbor_id", sim)
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(query_id_col, "neighbor_id", "sim", "rank")
+    )
 
 
 def cosine_topk(
@@ -45,40 +107,14 @@ def cosine_topk(
     scanned once. Ranking uses the rounded similarity with neighbor-id
     tie-break, so results are total-ordered and engine-reproducible.
     """
-    # norms are per-vector, not per-pair: compute them in the pre-join
-    # projections (once per row) so each pair costs one dot product.
     # Widen the corpus before scoring: small inputs arrive as one file
     # split and the per-pair dot products would run single-task (no-op on
     # wide at-scale inputs — no corpus shuffle at 100 TB).
-    corpus = widen_if_narrow(corpus, id_col)
-    q = queries.select(
-        F.col(id_col).alias(query_id_col),
-        F.col(vec_col).alias("__qvec"),
-        norm(vec_col).alias("__qnorm"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cvec"),
-        norm(vec_col).alias("__cnorm"),
-    )
-    sim = F.round(
-        F.try_divide(
-            dot(F.col("__qvec"), F.col("__cvec")),
-            F.col("__qnorm") * F.col("__cnorm"),
-        ),
-        sim_decimals,
-    ).alias("sim")
-    scored = (
-        c.join(F.broadcast(q), F.col(query_id_col) != F.col("neighbor_id"))
-        .select(query_id_col, "neighbor_id", sim)
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "sim", "rank")
+    q = query_side(queries, id_col, vec_col, query_id_col)
+    c = corpus_side(widen_if_narrow(corpus, id_col), id_col, vec_col)
+    pairs = c.join(F.broadcast(q), F.col(query_id_col) != F.col("neighbor_id"))
+    return rank_by_cosine(
+        pairs, k=k, query_id_col=query_id_col, sim_decimals=sim_decimals
     )
 
 
@@ -146,41 +182,23 @@ def lsh_cosine_topk(
     # bits x dim dot products per corpus row for the bucket code — widen
     # the scan before computing (one-split small inputs otherwise
     # serialize the whole projection; wide inputs pass through untouched).
-    c = widen_if_narrow(corpus, id_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cvec"),
-        norm(vec_col).alias("__cnorm"),
+    c = corpus_side(
+        widen_if_narrow(corpus, id_col), id_col, vec_col,
         bucket(corpus).alias("__bucket"),
     )
-    q = queries.select(
-        F.col(id_col).alias(query_id_col),
-        F.col(vec_col).alias("__qvec"),
-        norm(vec_col).alias("__qnorm"),
+    q = query_side(
+        queries, id_col, vec_col, query_id_col,
         F.explode(
             probe_buckets(
                 bucket(queries), bits=bits, max_flips=probe_flips
             )
         ).alias("__bucket"),
     )
-    sim = F.round(
-        F.try_divide(
-            dot(F.col("__qvec"), F.col("__cvec")),
-            F.col("__qnorm") * F.col("__cnorm"),
-        ),
-        sim_decimals,
-    ).alias("sim")
-    scored = (
-        c.join(F.broadcast(q), "__bucket")
-        .filter(F.col(query_id_col) != F.col("neighbor_id"))
-        .select(query_id_col, "neighbor_id", sim)
+    pairs = c.join(F.broadcast(q), "__bucket").filter(
+        F.col(query_id_col) != F.col("neighbor_id")
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "sim", "rank")
+    return rank_by_cosine(
+        pairs, k=k, query_id_col=query_id_col, sim_decimals=sim_decimals
     )
 
 
@@ -396,37 +414,19 @@ def ivf_cosine_topk(
         sample_n=sample_n,
         seed=seed,
     )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cvec"),
-        norm(vec_col).alias("__cnorm"),
+    c = corpus_side(
+        corpus, id_col, vec_col,
         F.element_at(_nearest_centroids(vec_col, centroids, 1), 1).alias("__cell"),
     )
-    q = queries.select(
-        F.col(id_col).alias(query_id_col),
-        F.col(vec_col).alias("__qvec"),
-        norm(vec_col).alias("__qnorm"),
+    q = query_side(
+        queries, id_col, vec_col, query_id_col,
         F.explode(_nearest_centroids(vec_col, centroids, nprobe)).alias("__cell"),
     )
-    sim = F.round(
-        F.try_divide(
-            dot(F.col("__qvec"), F.col("__cvec")),
-            F.col("__qnorm") * F.col("__cnorm"),
-        ),
-        sim_decimals,
-    ).alias("sim")
-    scored = (
-        c.join(F.broadcast(q), "__cell")
-        .filter(F.col(query_id_col) != F.col("neighbor_id"))
-        .select(query_id_col, "neighbor_id", sim)
+    pairs = c.join(F.broadcast(q), "__cell").filter(
+        F.col(query_id_col) != F.col("neighbor_id")
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "sim", "rank")
+    return rank_by_cosine(
+        pairs, k=k, query_id_col=query_id_col, sim_decimals=sim_decimals
     )
 
 
@@ -470,35 +470,13 @@ def truncated_prefilter_topk(
         query_id_col=query_id_col,
         sim_decimals=sim_decimals,
     ).select(query_id_col, "neighbor_id")
-    q = queries.select(
-        F.col(id_col).alias(query_id_col),
-        F.col(vec_col).alias("__qvec"),
-        norm(vec_col).alias("__qnorm"),
+    q = query_side(queries, id_col, vec_col, query_id_col)
+    c = corpus_side(corpus, id_col, vec_col)
+    pairs = c.join(F.broadcast(cand), "neighbor_id").join(
+        F.broadcast(q), query_id_col
     )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cvec"),
-        norm(vec_col).alias("__cnorm"),
-    )
-    sim = F.round(
-        F.try_divide(
-            dot(F.col("__qvec"), F.col("__cvec")),
-            F.col("__qnorm") * F.col("__cnorm"),
-        ),
-        sim_decimals,
-    ).alias("sim")
-    scored = (
-        c.join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(q), query_id_col)
-        .select(query_id_col, "neighbor_id", sim)
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "sim", "rank")
+    return rank_by_cosine(
+        pairs, k=k, query_id_col=query_id_col, sim_decimals=sim_decimals
     )
 
 
@@ -526,35 +504,16 @@ def hard_negatives(
     engine-reproducible). At 100 TB the per-executor cost is
     |queries| dot products per corpus row — batch the query set if it
     outgrows a broadcast."""
-    q = queries.select(
-        F.col(id_col).alias(query_id_col),
-        F.col(label_col).alias("__qlab"),
-        F.col(vec_col).alias("__qvec"),
-        norm(vec_col).alias("__qnorm"),
+    q = query_side(
+        queries, id_col, vec_col, query_id_col, F.col(label_col).alias("__qlab")
     )
-    c = widen_if_narrow(corpus, id_col).select(
-        F.col(id_col).alias("neighbor_id"),
+    c = corpus_side(
+        widen_if_narrow(corpus, id_col), id_col, vec_col,
         F.col(label_col).alias("__clab"),
-        F.col(vec_col).alias("__cvec"),
-        norm(vec_col).alias("__cnorm"),
     )
-    sim = F.round(
-        F.try_divide(
-            dot(F.col("__qvec"), F.col("__cvec")),
-            F.col("__qnorm") * F.col("__cnorm"),
-        ),
-        sim_decimals,
-    ).alias("sim")
-    scored = c.join(
-        F.broadcast(q), F.col("__qlab") != F.col("__clab")
-    ).select(query_id_col, "neighbor_id", sim)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "sim", "rank")
+    pairs = c.join(F.broadcast(q), F.col("__qlab") != F.col("__clab"))
+    return rank_by_cosine(
+        pairs, k=k, query_id_col=query_id_col, sim_decimals=sim_decimals
     )
 
 
@@ -616,21 +575,17 @@ def semantic_decontaminate(
         F.col(vec_col).alias("__ev"), norm(vec_col).alias("__en")
     )
     sim = F.round(
-        dot(F.col(vec_col), F.col("__ev"))
-        / (F.col("__cn") * F.col("__en")),
+        F.try_divide(
+            dot(F.col(vec_col), F.col("__ev")), F.col("__cn") * F.col("__en")
+        ),
         sim_decimals,
     )
 
     if index_table is not None:
-        from etl_bigquery_pipeline_spark.operators.ann_index import _read_meta
-
         spark = evals.sparkSession
-        meta = _read_meta(spark, index_table)
-        if meta.get("kind") != "lsh":
-            raise ValueError(
-                f"{index_table!r} is a {meta.get('kind')!r} index; "
-                "semantic_decontaminate probes LSH indexes only"
-            )
+        meta = read_meta(
+            spark, index_table, "lsh", reader="semantic_decontaminate probes"
+        )
         dim, bits, seed = meta["dim"], meta["bits"], meta["seed"]
         e = evals.select(
             F.col(vec_col).alias("__ev"),

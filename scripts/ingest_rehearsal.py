@@ -22,7 +22,7 @@ the re-probe after append must additionally return the appended twins
 (the index stays queryable in place).
 
 The index table lands in ./spark-warehouse (same as the catalog's
-band-index gates); stale leftovers self-heal via ann_index._reset_table.
+band-index gates); stale leftovers self-heal via band_index_core.reset_table.
 """
 
 from __future__ import annotations

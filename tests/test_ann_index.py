@@ -80,13 +80,45 @@ def test_lsh_probe_plan_prunes_buckets_and_never_shuffles_corpus(
         spark.sql("DROP TABLE IF EXISTS ann_lsh_plan_t__meta")
 
 
+def test_zero_norm_neighbor_ranks_last_with_null_sim(spark):
+    """A zero-norm neighbor has no cosine: every top-k scores it NULL and
+    ranks it after every scored neighbor, even an opposite one — in memory
+    and through a persisted index alike (bits=1 with one flip probes both
+    buckets, so the probe sees every row)."""
+    df = spark.createDataFrame(
+        [
+            (1, [1.0, 0.0, 0.0, 0.0]),
+            (2, [0.9, 0.1, 0.0, 0.0]),
+            (3, [0.0, 1.0, 0.0, 0.0]),
+            (4, [0.0, 0.0, 0.0, 0.0]),   # zero norm
+            (5, [-1.0, 0.0, 0.0, 0.0]),  # opposite: sim -1
+        ],
+        "vec_id long, embedding array<float>",
+    )
+    q = df.filter("vec_id = 1")
+    ann_index.build_lsh_index(df, "ann_zero_norm_t", dim=4, bits=1, seed=42)
+    try:
+        exact = similarity.cosine_topk(df, q, k=4)
+        probed = ann_index.probe_lsh_index(spark, "ann_zero_norm_t", q, k=4)
+        for got in (exact, probed):
+            ranked = sorted(got.collect(), key=lambda r: r.rank)
+            assert [r.neighbor_id for r in ranked] == [2, 3, 5, 4]
+            assert ranked[2].sim == -1.0 and ranked[3].sim is None
+        assert _rows(probed) == _rows(exact)
+    finally:
+        spark.sql("DROP TABLE IF EXISTS ann_zero_norm_t")
+        spark.sql("DROP TABLE IF EXISTS ann_zero_norm_t__meta")
+
+
 def test_reset_table_spares_unrelated_directory(spark, tmp_path):
     """_reset_table must only delete stale ORPHANED TABLE directories — a
     warehouse directory that merely shares the table's name (no _SUCCESS,
     no part files) survives an index build's reset."""
     import os
 
-    from etl_bigquery_pipeline_spark.operators.ann_index import _reset_table
+    from etl_bigquery_pipeline_spark.operators.band_index_core import (
+        reset_table as _reset_table,
+    )
 
     wh = spark.conf.get("spark.sql.warehouse.dir", "").removeprefix("file:")
     victim = os.path.join(wh, "not_a_table_dir")
@@ -242,6 +274,15 @@ def test_ivf_index_incremental_append(spark, emb, queries):
         ann_index.append_to_ivf_index(new, "ivf_lsh_like")
 
 
+def test_probes_refuse_the_wrong_index_kind(spark, queries):
+    """Probing an index of the other kind fails on the meta's kind, not
+    on a missing hash parameter or centroid list."""
+    with pytest.raises(ValueError, match="probes LSH indexes"):
+        ann_index.probe_lsh_index(spark, "ann_ivf_like", queries)
+    with pytest.raises(ValueError, match="probes IVF indexes"):
+        ann_index.probe_ivf_index(spark, "ivf_lsh_like", queries)
+
+
 @pytest.fixture(scope="module", autouse=True)
 def _ann_ivf_like_meta(spark):
     # minimal meta table standing in for a non-LSH index kind
@@ -269,15 +310,11 @@ def test_band_index_recovery_completes_partial_band_set(spark, sf_dir):
     id-level recovery anti-join would skip the doc's remaining bands
     (silent recall loss); the row-level (id, band) dedupe finishes the
     set exactly once (r10 ADVICE)."""
-    from etl_bigquery_pipeline_spark.operators import (
-        ann_index,
-        band_index_core,
-        dedup,
-    )
+    from etl_bigquery_pipeline_spark.operators import band_index_core, dedup
 
     d = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     dedup.build_band_index(d.filter(F.col("doc_id") < 50), "bi_rec_t")
-    meta = ann_index._read_meta(spark, "bi_rec_t")
+    meta = band_index_core.read_meta(spark, "bi_rec_t")
     batch = d.filter(F.col("doc_id") < 2).select(
         (F.col("doc_id") + 5000).alias("doc_id"),
         F.concat("text", F.lit(" recovery tail")).alias("text"),

@@ -227,3 +227,38 @@ def test_semantic_decontaminate_paths_agree(spark, tmp_path):
         None, edf, threshold=0.9, index_table="semdecon_unit_idx"
     )
     assert {r.vec_id for r in idx.collect()} == got
+
+
+def test_semantic_decontaminate_zero_norm_never_flagged(spark):
+    """A zero-norm vector, in the corpus or in the eval set, has no cosine:
+    no path flags it and none raises (a bare division by its zero norm is
+    DIVIDE_BY_ZERO under ANSI mode). The zero vectors share a bucket, so
+    the LSH and index paths score the zero-zero pair too."""
+    from etl_bigquery_pipeline_spark.operators import ann_index
+
+    schema = "vec_id long, embedding array<float>"
+    cdf = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 0.0, 0.0, 0.0])], schema
+    )
+    edf = spark.createDataFrame(
+        [(100, [1.0, 0.0, 0.0, 0.0]), (101, [0.0, 0.0, 0.0, 0.0])], schema
+    )
+    ann_index.build_lsh_index(cdf, "semdecon_zero_idx", dim=4, bits=2, seed=42)
+    try:
+        paths = {
+            "exact": similarity.semantic_decontaminate(
+                cdf, edf, threshold=0.9, dim=4
+            ),
+            "lsh": similarity.semantic_decontaminate(
+                cdf, edf, threshold=0.9, dim=4, prefilter="lsh", bits=2
+            ),
+            "index": similarity.semantic_decontaminate(
+                None, edf, threshold=0.9, index_table="semdecon_zero_idx"
+            ),
+        }
+        for name, flagged in paths.items():
+            got = {r.vec_id: r.max_eval_sim for r in flagged.collect()}
+            assert got == {1: 1.0}, name
+    finally:
+        spark.sql("DROP TABLE IF EXISTS semdecon_zero_idx")
+        spark.sql("DROP TABLE IF EXISTS semdecon_zero_idx__meta")
