@@ -157,8 +157,8 @@ def append_to_lsh_index(
             vec_col, dim=meta["dim"], bits=meta["bits"], seed=meta["seed"]
         ).alias("bucket"),
     )
-    # recovery: crash-window replay (two-marker protocol in streaming
-    # sinks) — the crashed attempt may have inserted some/all of this
+    # recovery: crash-window replay (streaming/batch_commit's marker
+    # protocol) — the crashed attempt may have inserted some/all of this
     # batch. Each vector is ONE index row, so id-level dedupe is exact.
     append_band_rows(
         batch, table, "bucket", dedupe_on=["neighbor_id"] if recovery else None

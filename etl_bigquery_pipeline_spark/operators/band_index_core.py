@@ -173,8 +173,7 @@ def append_band_rows(
     are dropped first, making the append idempotent: probe the index
     with the batch's rows (inner join, batch side broadcast — bounded
     output), then anti-join the hits back. Normal-path appends must NOT
-    pay this; see streaming/image_dedup_stream's two-marker protocol
-    for how replays are detected.
+    pay this; see streaming/batch_commit for how replays are detected.
     """
     spark = rows.sparkSession
     if dedupe_on:

@@ -1188,18 +1188,18 @@ def append_to_band_index(
     batch cost is one pass over the batch; the corpus is never touched.
     Id uniqueness across batches is the caller's contract.
 
-    ``recovery=True`` (crash-window replays only, see the streaming
-    sinks' two-marker protocol) anti-joins the batch's (id, band) rows
-    against the index first, making the append idempotent at the cost
-    of one extra index scan on that rare path. The dedupe key must be
-    ROW-level (id, band), not id-level: the index holds one row per
-    (doc, band) spread across write tasks by the band_key repartition,
-    so a crash mid job-commit can leave a PARTIAL subset of a doc's
-    band rows committed — an id-level anti-join would then drop the
-    doc's REMAINING band rows, permanently under-indexing it (silent
-    recall loss, strictly worse than the duplicates the protocol
-    prevents). Mirrors the image stream's (id, band, band_val) dhash
-    recovery; r10 ADVICE."""
+    ``recovery=True`` (crash-window replays only, see the marker
+    protocol in streaming/batch_commit) anti-joins the batch's
+    (id, band) rows against the index first, making the append
+    idempotent at the cost of one extra index scan on that rare path.
+    The dedupe key must be ROW-level (id, band), not id-level: the
+    index holds one row per (doc, band) spread across write tasks by
+    the band_key repartition, so a crash mid job-commit can leave a
+    PARTIAL subset of a doc's band rows committed — an id-level
+    anti-join would then drop the doc's REMAINING band rows,
+    permanently under-indexing it (silent recall loss, strictly worse
+    than the duplicates the protocol prevents). Mirrors the image
+    stream's (id, band, band_val) dhash recovery."""
     from etl_bigquery_pipeline_spark.operators import band_index_core
 
     spark = batch.sparkSession

@@ -112,6 +112,14 @@ class ParquetWarehouse(WarehouseSink):
             else:
                 os.rename(old, path)
 
+    def exists(self, table: str) -> bool:
+        """Whether ``table`` exists, after healing a crash mid-swap: a
+        table parked at ``.__old`` by an interrupted swap is restored and
+        counts as existing."""
+        path = self._path(table)
+        self._heal(path)
+        return os.path.exists(path)
+
     def create_namespace(self, name: str) -> None:
         os.makedirs(os.path.join(self.root, name), exist_ok=True)
 
@@ -147,15 +155,11 @@ class ParquetWarehouse(WarehouseSink):
         single-writer local use (what this class is for) is documented
         above.
         """
-        import shutil
-
         path = self._path(table)
-        self._heal(path)
-        spark = updates.sparkSession
-        if not os.path.exists(path):
+        if not self.exists(table):
             write_parquet(updates, path, mode="overwrite")
             return
-        target = spark.read.parquet(path)
+        target = updates.sparkSession.read.parquet(path)
         merged = target.join(updates, keys, "left_anti").unionByName(updates)
         self.rewrite(merged, table)
 
@@ -190,8 +194,7 @@ class ParquetWarehouse(WarehouseSink):
         import shutil
 
         path = self._path(table)
-        self._heal(path)
-        if not os.path.exists(path):
+        if not self.exists(table):
             write_parquet(df, path, mode="overwrite")
             return
         staging = path + ".__staging"

@@ -6,28 +6,17 @@ one micro-batch).
 Each micro-batch appends into the bucketed index via
 ``ann_index.append_to_lsh_index`` (bucket codes from the PERSISTED hash
 parameters, one pass over the batch, pruning intact — see that module).
-
-Exactly-once: foreachBatch is at-least-once and a bucketed-table INSERT
-is not naturally idempotent, so a replayed batch would duplicate rows.
-The sink therefore commits a marker file per ``batch_id`` NEXT TO the
-streaming checkpoint after the insert succeeds; a replayed batch whose
-marker exists is skipped whole. The marker write is the same
-local-rename discipline as the parquet sinks (object stores want a
-transactional table format instead — documented trade, not hidden).
-Markers are one empty file per micro-batch: O(batches), never data-sized.
-The crash window BETWEEN the insert and the marker commit is closed by
-the two-marker protocol (r10, ported from image_dedup_stream): a replay
-finding the "inserting" pre-marker without the commit marker re-runs
-the append in recovery mode — anti-join the batch's ids against the
-index first, so the rare replay path is idempotent while the normal
-path stays one-pass.
+The append is not idempotent, so it runs under
+``streaming/batch_commit.once_per_batch``: a replayed batch is skipped
+once committed, and a replay of a crashed batch appends in recovery mode
+(anti-join on the vector id), so the index never holds a row twice.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
+
+from etl_bigquery_pipeline_spark.streaming import batch_commit
 
 
 def incremental_ann_sink(
@@ -48,36 +37,12 @@ def incremental_ann_sink(
         append_to_lsh_index,
     )
 
-    marker_dir = os.path.join(checkpoint, "__applied_batches")
-    os.makedirs(marker_dir, exist_ok=True)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(marker_dir, f"batch_{batch_id}")
-        pre_marker = marker + ".__inserting"
-        if os.path.exists(marker):  # replay of an applied batch: skip
-            # sweep a pre-marker leaked by a crash between the commit
-            # rename and the pre-marker removal
-            try:
-                os.remove(pre_marker)
-            except FileNotFoundError:
-                pass
-            return
-        recovery = os.path.exists(pre_marker)
-        with open(pre_marker, "w"):
-            pass  # pre-marker: the index append starts now
+    def apply(batch_df: DataFrame, batch_id: int, recovery: bool) -> None:
         append_to_lsh_index(
             batch_df, table, id_col=id_col, vec_col=vec_col,
             recovery=recovery,
         )
-        staging = marker + ".__tmp"
-        with open(staging, "w"):
-            pass
-        os.rename(staging, marker)  # marker lands only after the insert
-        os.remove(pre_marker)
 
-    return (
-        vectors.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return batch_commit.start(
+        vectors, batch_commit.once_per_batch(checkpoint, apply), checkpoint
     )

@@ -6,7 +6,7 @@ corpus):
 1. exact in-batch dedup (content-hash groupBy on the batch),
 2. near-dup probe of the persisted MinHash band index — matches route to
    the duplicates sink with their strongest-match evidence
-   (streaming/dedup_stream.py machinery),
+   (`streaming/dedup_stream.best_corpus_matches`),
 3. learned quality filter — scores from PRE-TRAINED logistic-regression
    weights (operators/quality_model.py; training is a batch job, its
    weights are four floats embedded as literals here) — low scorers
@@ -14,9 +14,11 @@ corpus):
 4. survivors land in the curated output AND their bands append to the
    index, so near-copies arriving later dedupe against them.
 
-Exactly-once discipline is inherited from dedup_stream: batch_id
-directory overwrite for the parquet sinks, applied-batch marker
-committed AFTER the non-idempotent index insert.
+Exactly-once: the parquet outputs overwrite their own `batch_id=N`
+directories, and the batch runs under
+`streaming/batch_commit.once_per_batch`, like the dedup stream: a replay
+of a crashed batch probes without the batch's own ids and appends in
+recovery mode.
 """
 
 from __future__ import annotations
@@ -25,6 +27,11 @@ import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from etl_bigquery_pipeline_spark.streaming import batch_commit
+from etl_bigquery_pipeline_spark.streaming.dedup_stream import (
+    best_corpus_matches,
+)
 
 
 def curation_sink(
@@ -50,32 +57,15 @@ def curation_sink(
     """
     from etl_bigquery_pipeline_spark.operators import dedup, quality_model
 
-    marker_dir = os.path.join(checkpoint, "__applied_batches")
-    os.makedirs(marker_dir, exist_ok=True)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(marker_dir, f"batch_{batch_id}")
-        if os.path.exists(marker):
-            return
+    def apply(batch_df: DataFrame, batch_id: int, recovery: bool) -> None:
         spark = batch_df.sparkSession
         # three sinks share the batch/verdict/score lineages: persist
         # them, or each write re-executes the exact-dedup + index probe
-        # + scoring from the source (the r7 streaming rehearsal measured
-        # multiple source scans per micro-batch in the dedup twin — the
-        # same hazard, one more sink deep here)
+        # + scoring from the source
         batch = dedup.dedup_exact_text(batch_df, id_col, text_col).persist()
-        cands = dedup.near_dup_candidates_from_index(
-            spark, batch, index_table, id_col=id_col, text_col=text_col
-        )
-        best = (
-            cands.filter(F.col("est_jaccard") >= dup_threshold)
-            .groupBy("batch_id")
-            .agg(F.max(F.struct("est_jaccard", "corpus_id")).alias("m"))
-            .select(
-                F.col("batch_id").alias(id_col),
-                F.col("m.corpus_id").alias("corpus_id"),
-                F.col("m.est_jaccard").alias("est_jaccard"),
-            )
+        best = best_corpus_matches(
+            batch, index_table, threshold=dup_threshold, recovery=recovery,
+            id_col=id_col, text_col=text_col,
         ).persist()
         fresh = batch.join(best.select(id_col), id_col, "left_anti")
 
@@ -115,15 +105,9 @@ def curation_sink(
             index_table,
             id_col=id_col,
             text_col=text_col,
+            recovery=recovery,
         )
-        staging = marker + ".__tmp"
-        with open(staging, "w"):
-            pass
-        os.rename(staging, marker)
 
-    return (
-        docs.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return batch_commit.start(
+        docs, batch_commit.once_per_batch(checkpoint, apply), checkpoint
     )

@@ -9,21 +9,15 @@ Per micro-batch work: exact in-batch dedup (content-hash groupBy on the
 batch only), one broadcast probe of the batch's band keys against the
 bucketed index (pruned scan — corpus never re-tokenizes or shuffles,
 see `dedup.near_dup_candidates_from_index`), and one pass to append the
-novel bands. Nothing scales with corpus size.
+novel bands. Nothing scales with corpus size. ``best_corpus_matches`` is
+the probe-and-route step; `streaming/curation_stream.py` shares it.
 
-Exactly-once: parquet outputs write to a `batch_id=N` directory with
-overwrite (idempotent under replay); the band-index INSERT is not
-naturally idempotent, so an applied-batch marker commits AFTER the
-insert and a replayed batch whose marker exists is skipped whole — the
-same discipline (and the same documented local-rename trade) as
-`streaming/ann_stream.py`. The crash window BETWEEN the insert and the
-marker commit is closed by the image stream's two-marker protocol
-(r10, ported from streaming/image_dedup_stream): a replay that finds
-the "inserting" pre-marker without the commit marker re-runs the
-append in recovery mode (anti-join against the index — idempotent) AND
-excludes the batch's own ids from the probe matches, because the
-crashed attempt's insert makes every previously-novel doc self-collide
-(est_jaccard 1.0) and would otherwise corrupt the routed outputs.
+Exactly-once: the parquet outputs overwrite their own `batch_id=N`
+directories, and the band-index append runs under
+`streaming/batch_commit.once_per_batch`. A replay of a crashed batch
+appends in recovery mode and excludes the batch's own ids from the
+probe, so docs the crashed attempt already indexed do not match
+themselves.
 
 Within-batch NEAR-dups (beyond exact) are not collapsed here — both
 copies probe the corpus independently and, if novel, both enter the
@@ -37,6 +31,51 @@ import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from etl_bigquery_pipeline_spark.streaming import batch_commit
+
+
+def best_corpus_matches(
+    batch: DataFrame,
+    index_table: str,
+    *,
+    threshold: float,
+    recovery: bool,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """(id, corpus_id, est_jaccard): each batch doc's strongest corpus
+    near-dup at ``est_jaccard >= threshold``; docs without one are absent.
+
+    ``recovery`` drops matches whose corpus_id is one of the batch's own
+    ids. A crashed attempt may already have appended the batch's novel
+    docs, which would then match themselves (est_jaccard 1.0). Ids are
+    globally unique, so such a corpus_id can only be that insert.
+    """
+    from etl_bigquery_pipeline_spark.operators import dedup
+
+    cands = dedup.near_dup_candidates_from_index(
+        batch.sparkSession, batch, index_table, id_col=id_col,
+        text_col=text_col,
+    )
+    if recovery:
+        cands = cands.join(
+            batch.select(F.col(id_col).alias("corpus_id")),
+            "corpus_id",
+            "left_anti",
+        )
+    # one id can collide with many corpus docs: keep the strongest
+    # match as evidence, route the doc once
+    return (
+        cands.filter(F.col("est_jaccard") >= threshold)
+        .groupBy("batch_id")
+        .agg(F.max(F.struct("est_jaccard", "corpus_id")).alias("m"))
+        .select(
+            F.col("batch_id").alias(id_col),
+            F.col("m.corpus_id").alias("corpus_id"),
+            F.col("m.est_jaccard").alias("est_jaccard"),
+        )
+    )
 
 
 def incremental_dedup_sink(
@@ -58,90 +97,37 @@ def incremental_dedup_sink(
     """
     from etl_bigquery_pipeline_spark.operators import dedup
 
-    marker_dir = os.path.join(checkpoint, "__applied_batches")
-    os.makedirs(marker_dir, exist_ok=True)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(marker_dir, f"batch_{batch_id}")
-        pre_marker = marker + ".__inserting"
-        if os.path.exists(marker):  # replay of an applied batch: skip
-            # sweep a pre-marker leaked by a crash between the commit
-            # rename and the pre-marker removal (r9 ADVICE)
-            try:
-                os.remove(pre_marker)
-            except FileNotFoundError:
-                pass
-            return
-        recovery = os.path.exists(pre_marker)
+    def apply(batch_df: DataFrame, batch_id: int, recovery: bool) -> None:
         spark = batch_df.sparkSession
         # persist the deduped batch and the match verdicts: the two
         # writes below would otherwise each recompute the whole batch
-        # lineage from the source (the r7 streaming rehearsal measured
-        # ~5 source scans per micro-batch without this) — per-batch
-        # cost must track the batch ONCE, not once per sink
+        # lineage from the source (a streaming rehearsal measured ~5
+        # source scans per micro-batch without this) — per-batch cost
+        # must track the batch ONCE, not once per sink
         batch = dedup.dedup_exact_text(batch_df, id_col, text_col).persist()
-        cands = dedup.near_dup_candidates_from_index(
-            spark, batch, index_table, id_col=id_col, text_col=text_col
-        )
-        if recovery:
-            # the crashed attempt already appended this batch's novel
-            # band rows: a recovery probe collides every previously-
-            # novel doc with ITSELF (est_jaccard 1.0), which would
-            # route it to dup_dir as a bogus (id, id, 1.0) pair while
-            # out_dir loses its rows. Ids are globally unique, so any
-            # corpus_id in the batch id set can only be the crashed
-            # attempt's own insert — exclude them to reproduce the
-            # crashed attempt's routing. (The image stream's r9-ADVICE
-            # fix, ported.)
-            cands = cands.join(
-                batch.select(F.col(id_col).alias("corpus_id")),
-                "corpus_id",
-                "left_anti",
-            )
-        dups = cands.filter(F.col("est_jaccard") >= threshold)
-        # one id can collide with many corpus docs: keep the strongest
-        # match as evidence, route the doc once
-        best = (
-            dups.groupBy("batch_id")
-            .agg(F.max(F.struct("est_jaccard", "corpus_id")).alias("m"))
-            .select(
-                F.col("batch_id").alias(id_col),
-                F.col("m.corpus_id").alias("corpus_id"),
-                F.col("m.est_jaccard").alias("est_jaccard"),
-            )
+        best = best_corpus_matches(
+            batch, index_table, threshold=threshold, recovery=recovery,
+            id_col=id_col, text_col=text_col,
         ).persist()
+        out_path = os.path.join(out_dir, f"batch_id={batch_id}")
         try:
             best.write.mode("overwrite").parquet(
                 os.path.join(dup_dir, f"batch_id={batch_id}")
             )
-            novel = batch.join(
-                best.select(id_col), id_col, "left_anti"
-            )
-            novel.write.mode("overwrite").parquet(
-                os.path.join(out_dir, f"batch_id={batch_id}")
-            )
+            novel = batch.join(best.select(id_col), id_col, "left_anti")
+            novel.write.mode("overwrite").parquet(out_path)
         finally:
             batch.unpersist()
             best.unpersist()
         # novel docs become part of the corpus for every later batch
-        with open(pre_marker, "w"):
-            pass  # pre-marker: the index append starts now
         dedup.append_to_band_index(
-            spark.read.parquet(os.path.join(out_dir, f"batch_id={batch_id}")),
+            spark.read.parquet(out_path),
             index_table,
             id_col=id_col,
             text_col=text_col,
             recovery=recovery,
         )
-        staging = marker + ".__tmp"
-        with open(staging, "w"):
-            pass
-        os.rename(staging, marker)  # marker lands only after the insert
-        os.remove(pre_marker)
 
-    return (
-        docs.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return batch_commit.start(
+        docs, batch_commit.once_per_batch(checkpoint, apply), checkpoint
     )

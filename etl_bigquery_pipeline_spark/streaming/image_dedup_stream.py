@@ -5,12 +5,13 @@ index, images probe the dHash band index, and both loops share the same
 exactly-once discipline.
 
 Per micro-batch work: decode + dHash ONCE per image (Arrow-batched;
-the hashed frame persists for the batch's duration — the r7 rehearsal
-measured ~5 source scans per micro-batch when each sink recomputed its
-lineage), exact in-batch dedup on payload md5, one broadcast probe of
-the batch's band keys against the bucketed index, and one append pass
-for the novel hashes. Nothing scales with corpus size; payload bytes
-never shuffle for the probe (only 8-byte hashes + band keys move).
+the hashed frame persists for the batch's duration — a streaming
+rehearsal measured ~5 source scans per micro-batch when each sink
+recomputed its lineage), exact in-batch dedup on payload md5, one
+broadcast probe of the batch's band keys against the bucketed index,
+and one append pass for the novel hashes. Nothing scales with corpus
+size; payload bytes never shuffle for the probe (only 8-byte hashes +
+band keys move).
 
 Routing: undecodable payloads (codec-gated, junk) -> ``reject_dir``
 (they have no perceptual hash to dedup on — the DLQ discipline);
@@ -18,16 +19,13 @@ near-dups of the corpus -> ``dup_dir`` with (id, corpus_id, hamming)
 evidence; novel images -> ``out_dir`` AND their bands append to the
 index, so a near-copy arriving in a LATER batch collides with them.
 
-Exactly-once: parquet outputs write to `batch_id=N` directories with
-overwrite (idempotent under replay); the band-index INSERT is not
-naturally idempotent, so an applied-batch marker commits AFTER the
-insert and a replayed batch whose marker exists is skipped whole —
-the same contract as dedup_stream/ann_stream. The crash window BETWEEN
-the insert and the marker commit is closed by a second, "inserting"
-pre-marker (r8 ADVICE): a replay that finds the pre-marker without the
-commit marker re-runs the append in recovery mode, which anti-joins
-the batch's band rows against the index first — one extra index scan
-on that rare path only, zero duplicate rows ever.
+Exactly-once: the parquet outputs overwrite their own `batch_id=N`
+directories, and the batch runs under
+`streaming/batch_commit.once_per_batch`, like the text dedup stream. A
+replay of a crashed batch excludes the batch's own ids from the probe
+(the crashed attempt may already have indexed them, and every novel
+image would match itself at hamming 0) and appends in recovery mode,
+which anti-joins the batch's band rows against the index first.
 """
 
 from __future__ import annotations
@@ -36,6 +34,8 @@ import os
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from etl_bigquery_pipeline_spark.streaming import batch_commit
 
 
 def incremental_image_dedup_sink(
@@ -59,31 +59,7 @@ def incremental_image_dedup_sink(
     """
     from etl_bigquery_pipeline_spark.multimodal import binary_ops, dhash_index
 
-    marker_dir = os.path.join(checkpoint, "__applied_batches")
-    os.makedirs(marker_dir, exist_ok=True)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(marker_dir, f"batch_{batch_id}")
-        pre_marker = marker + ".__inserting"
-        if os.path.exists(marker):  # replay of an applied batch: skip
-            # a crash between the commit-marker rename and the
-            # pre-marker removal leaves a stale __inserting file that
-            # this short-circuit would otherwise preserve forever —
-            # sweep it here so marker_dir never misreads a committed
-            # batch as in-flight (r9 ADVICE)
-            try:
-                os.remove(pre_marker)
-            except FileNotFoundError:
-                pass
-            return
-        # two-marker protocol (r8 ADVICE): an "inserting" pre-marker
-        # lands BEFORE the index append; the commit marker lands after.
-        # A replay that finds the pre-marker but not the commit marker
-        # knows the previous attempt died inside the crash window
-        # between insert and commit — only THAT rare path pays the
-        # idempotent (anti-join) append, so duplicate index rows can't
-        # accumulate while the normal path stays one-pass.
-        recovery = os.path.exists(pre_marker)
+    def apply(batch_df: DataFrame, batch_id: int, recovery: bool) -> None:
         spark = batch_df.sparkSession
         # exact in-batch dedup first: identical payloads collapse to the
         # smallest id (deterministic), so re-uploads inside one batch
@@ -108,17 +84,9 @@ def incremental_image_dedup_sink(
             spark, ok_hashes, index_table, max_hamming=max_hamming
         )
         if recovery:
-            # the crashed attempt already appended this batch's novel
-            # band rows, so a recovery probe sees the batch's OWN ids
-            # on the corpus side: every previously-novel image collides
-            # with itself (hamming 0) and would be routed to dup_dir as
-            # a bogus (id, id, 0) pair while out_dir loses its payload
-            # rows. Ids are globally unique, so any corpus_id in the
-            # batch id set can only be the crashed attempt's own insert
-            # — excluding them reproduces the routing the crashed
-            # attempt computed (in-batch near-dup pairs are likewise
-            # not dup-routed on the normal path, where the probe runs
-            # before the append). (r9 ADVICE, high)
+            # the crashed attempt may already have indexed this batch's
+            # novel images; ids are globally unique, so a corpus_id in
+            # the batch id set can only be that insert
             matches = matches.join(
                 batch.select(F.col(id_col).alias("corpus_id")),
                 "corpus_id",
@@ -159,8 +127,6 @@ def incremental_image_dedup_sink(
             novel_ids = spark.read.parquet(
                 os.path.join(out_dir, f"batch_id={batch_id}")
             ).select(id_col)
-            with open(pre_marker, "w"):
-                pass  # pre-marker: the index append starts now
             dhash_index.append_to_dhash_index(
                 ok_hashes.join(novel_ids, id_col, "semi"),
                 index_table,
@@ -170,15 +136,7 @@ def incremental_image_dedup_sink(
             batch.unpersist()
             hashed.unpersist()
             best.unpersist()
-        staging = marker + ".__tmp"
-        with open(staging, "w"):
-            pass
-        os.rename(staging, marker)  # marker lands only after the insert
-        os.remove(pre_marker)
 
-    return (
-        images.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return batch_commit.start(
+        images, batch_commit.once_per_batch(checkpoint, apply), checkpoint
     )

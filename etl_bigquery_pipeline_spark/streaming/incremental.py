@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_bigquery_pipeline_spark.streaming import batch_commit
+
 
 def incremental_events_sink(
     events: DataFrame,
@@ -55,12 +57,7 @@ def incremental_events_sink(
             .parquet(f"{out_path}/batch_id={batch_id}")
         )
 
-    return (
-        deduped.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return batch_commit.start(deduped, write_batch, checkpoint)
 
 
 def incremental_events_sink_with_dlq(
@@ -143,9 +140,4 @@ def incremental_events_sink_with_dlq(
         finally:
             batch_df.unpersist()
 
-    return (
-        routed.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return batch_commit.start(routed, write_batch, checkpoint)

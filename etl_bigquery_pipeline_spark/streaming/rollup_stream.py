@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_bigquery_pipeline_spark.streaming import batch_commit
+
 
 def rollup_merge_sink(
     events: DataFrame,
@@ -53,12 +55,7 @@ def rollup_merge_sink(
             f"{out_path}/batch_id={batch_id}"
         )
 
-    return (
-        events.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return batch_commit.start(events, fold, checkpoint)
 
 
 def read_rollup(
@@ -125,12 +122,7 @@ def cdc_rollup_merge_sink(
             f"{out_path}/batch_id={batch_id}"
         )
 
-    return (
-        changes.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return batch_commit.start(changes, fold, checkpoint)
 
 
 def read_cdc_rollup(

@@ -22,19 +22,22 @@ there is no watermark and no state store; each fold is the batch
 operator's one broadcast join against the dimension plus a staging-swap
 write (``ParquetWarehouse.rewrite`` — the new state's plan reads the
 files being replaced, so it materializes to staging before the swap).
+The bootstrap test is ``ParquetWarehouse.exists``, which first restores
+a table parked by a swap that crashed between its two renames; a bare
+directory test would take that table for missing and bootstrap over
+its history.
 For dimension-sized data (what SCD2 is for) that is the right cost;
 event-scale history belongs to the append-only incremental sink instead.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from etl_bigquery_pipeline_spark.operators.scd import scd2_apply, scd2_init
 from etl_bigquery_pipeline_spark.sources.sinks import ParquetWarehouse
+from etl_bigquery_pipeline_spark.streaming import batch_commit
 
 
 def scd2_stream_sink(
@@ -65,7 +68,7 @@ def scd2_stream_sink(
             .filter(F.col("__rn") == 1)
             .drop("__rn", change_ts_col)
         )
-        if not os.path.exists(warehouse._path(table)):
+        if not warehouse.exists(table):
             warehouse.overwrite(
                 scd2_init(latest, valid_from=F.lit(eff)), table
             )
@@ -76,9 +79,4 @@ def scd2_stream_sink(
         )
         warehouse.rewrite(new_state, table)
 
-    return (
-        changes.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return batch_commit.start(changes, fold, checkpoint)

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_bigquery_pipeline_spark.operators.skew import heavy_hitters_from_counts
+from etl_bigquery_pipeline_spark.streaming import batch_commit
 
 
 def key_counts_sink(
@@ -43,12 +44,7 @@ def key_counts_sink(
             f"{out_path}/batch_id={batch_id}"
         )
 
-    return (
-        events.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return batch_commit.start(events, fold, checkpoint)
 
 
 def read_top_k(

@@ -19,6 +19,7 @@ from etl_bigquery_pipeline_spark.multimodal import binary_ops, dhash_index
 from etl_bigquery_pipeline_spark.streaming.image_dedup_stream import (
     incremental_image_dedup_sink,
 )
+from tests.crash_window import forge_crash_window
 
 
 def _img(seed: int, h: int = 48, w: int = 48) -> np.ndarray:
@@ -291,19 +292,9 @@ def test_streaming_sink_crash_window_replay_no_duplicate_rows(
     dups_first, novel_first = routed()
     assert {(i, c) for i, c, _ in dups_first} == {(500, 2)}
     assert novel_first == {(501, True)}
-    marker_dir = os.path.join(work, "ckpt", "__applied_batches")
-    markers = [
-        m for m in os.listdir(marker_dir) if not m.endswith("__inserting")
-    ]
-    assert markers, "sanity: a commit marker landed"
     # forge the crash window: commit marker gone, pre-marker left behind
-    for m in markers:
-        os.remove(os.path.join(marker_dir, m))
-        with open(os.path.join(marker_dir, m + ".__inserting"), "w"):
-            pass
-    commits = os.path.join(work, "ckpt", "commits")
-    for f in os.listdir(commits):
-        os.remove(os.path.join(commits, f))
+    markers = forge_crash_window(os.path.join(work, "ckpt"))
+    assert markers, "sanity: a commit marker landed"
     run()
     # recovery-mode append anti-joined the already-inserted rows away
     assert spark.table(corpus_index).count() == after_first
@@ -359,19 +350,11 @@ def test_streaming_sink_stale_pre_marker_swept_on_committed_replay(
 
     run()
     after_first = spark.table(corpus_index).count()
-    marker_dir = os.path.join(work, "ckpt", "__applied_batches")
-    markers = [
-        m for m in os.listdir(marker_dir) if not m.endswith("__inserting")
-    ]
-    assert markers, "sanity: a commit marker landed"
     # forge the leak: commit marker present AND pre-marker left behind
-    for m in markers:
-        with open(os.path.join(marker_dir, m + ".__inserting"), "w"):
-            pass
-    commits = os.path.join(work, "ckpt", "commits")
-    for f in os.listdir(commits):
-        os.remove(os.path.join(commits, f))
+    markers = forge_crash_window(os.path.join(work, "ckpt"), committed=True)
+    assert markers, "sanity: a commit marker landed"
     run()
+    marker_dir = os.path.join(work, "ckpt", "__applied_batches")
     # the short-circuit swept the stale pre-marker and touched nothing
     assert spark.table(corpus_index).count() == after_first
     leftovers = [

@@ -8,6 +8,7 @@ import time
 
 from etl_bigquery_pipeline_spark.operators import sessionize, windows
 from etl_bigquery_pipeline_spark.streaming import events as stream_events
+from tests.crash_window import forge_crash_window
 
 
 def _event_rows():
@@ -1143,6 +1144,16 @@ def test_stream_stream_left_outer_emits_unmatched_after_watermark(
     assert (1, None) not in got     # matched signup has no null row
 
 
+def _drain(query, spark):
+    """Wait for an availableNow query, then for its async deregistration."""
+    query.awaitTermination()
+    query.stop()
+    for _ in range(100):
+        if not spark.streams.active:
+            break
+        time.sleep(0.1)
+
+
 def test_dedup_stream_crash_window_recovery_preserves_routing(
     spark, tmp_path
 ):
@@ -1184,16 +1195,10 @@ def test_dedup_stream_crash_window_recovery_preserves_routing(
     dup = str(tmp_path / "dup")
 
     def run():
-        q = dedup_stream.incremental_dedup_sink(
+        _drain(dedup_stream.incremental_dedup_sink(
             spark.readStream.schema("doc_id long, text string").parquet(src),
             "dd_cw_idx", ckpt, out, dup,
-        )
-        q.awaitTermination()
-        q.stop()
-        for _ in range(100):  # registration cleanup is async
-            if not spark.streams.active:
-                break
-            time.sleep(0.1)
+        ), spark)
 
     def routed():
         dups = {
@@ -1209,14 +1214,7 @@ def test_dedup_stream_crash_window_recovery_preserves_routing(
     assert 1000 in {d for d, _ in dups1} and novel1 == {2001}
 
     # forge the crash window: commit markers gone, pre-markers planted
-    marker_dir = os.path.join(ckpt, "__applied_batches")
-    for m in [x for x in os.listdir(marker_dir) if not x.endswith("__inserting")]:
-        os.remove(os.path.join(marker_dir, m))
-        with open(os.path.join(marker_dir, m + ".__inserting"), "w"):
-            pass
-    commits = os.path.join(ckpt, "commits")
-    for f in os.listdir(commits):  # listdir includes the .crc sidecars
-        os.remove(os.path.join(commits, f))
+    forge_crash_window(ckpt)
     run()
     assert spark.table("dd_cw_idx").count() == n_idx, "replay duplicated rows"
     dups2, novel2 = routed()
@@ -1250,30 +1248,18 @@ def test_ann_stream_crash_window_replay_no_duplicate_rows(spark, tmp_path):
     ckpt = str(tmp_path / "vckpt")
 
     def run():
-        q = ann_stream.incremental_ann_sink(
+        _drain(ann_stream.incremental_ann_sink(
             spark.readStream.schema(feed.schema).parquet(src),
             "ann_cw_t", ckpt,
-        )
-        q.awaitTermination()
-        q.stop()
-        for _ in range(100):  # registration cleanup is async
-            if not spark.streams.active:
-                break
-            time.sleep(0.1)
+        ), spark)
 
     run()
     n = spark.table("ann_cw_t").count()
     assert n == emb.count()
-    marker_dir = os.path.join(ckpt, "__applied_batches")
-    for m in [x for x in os.listdir(marker_dir) if not x.endswith("__inserting")]:
-        os.remove(os.path.join(marker_dir, m))
-        with open(os.path.join(marker_dir, m + ".__inserting"), "w"):
-            pass
-    commits = os.path.join(ckpt, "commits")
-    for f in os.listdir(commits):  # listdir includes the .crc sidecars
-        os.remove(os.path.join(commits, f))
+    forge_crash_window(ckpt)
     run()
     assert spark.table("ann_cw_t").count() == n, "replay duplicated rows"
+    marker_dir = os.path.join(ckpt, "__applied_batches")
     # no leaked pre-markers after the committed replay path
     leftovers = [
         x for x in os.listdir(marker_dir) if x.endswith("__inserting")
@@ -1282,3 +1268,116 @@ def test_ann_stream_crash_window_replay_no_duplicate_rows(spark, tmp_path):
 
     spark.sql("DROP TABLE IF EXISTS ann_cw_t")
     spark.sql("DROP TABLE IF EXISTS ann_cw_t__meta")
+
+
+def test_curation_stream_crash_window_recovery_preserves_routing(
+    spark, sf_dir, tmp_path
+):
+    """A crash after the curation sink's band-index append but before its
+    commit marker: the replay must route exactly as the crashed attempt
+    did. Without recovery the curated doc probes its own fresh index rows
+    and lands in dup_dir as (id, id), emptying the curated output."""
+    from pyspark.sql import functions as F
+
+    from etl_bigquery_pipeline_spark.operators import dedup
+    from etl_bigquery_pipeline_spark.sources.readers import read_table
+    from etl_bigquery_pipeline_spark.streaming import curation_stream
+
+    base = (
+        read_table(spark, sf_dir, "documents")
+        .select("doc_id", "text")
+        .filter(F.col("doc_id") < 100)
+    )
+    dedup.build_band_index(base, "cur_cw_idx")
+    near = base.filter(F.col("doc_id") < 2).select(
+        (F.col("doc_id") + 4000).alias("doc_id"),
+        F.concat(F.col("text"), F.lit(" zzz tail")).alias("text"),
+    )
+    long_text = " ".join(
+        ["substantial content words repeated meaningfully"] * 10
+    )
+    feed = spark.createDataFrame(
+        [(5001, long_text), (5002, "tiny")], "doc_id long, text string"
+    )
+    src = str(tmp_path / "src")
+    near.unionAll(feed).coalesce(1).write.mode("append").parquet(src)
+    ckpt = str(tmp_path / "ckpt")
+    out, dup, rej = (str(tmp_path / d) for d in ("out", "dup", "rej"))
+
+    def run():
+        # a hand-set length model: sigmoid(ln(1 + n_chars) - 5) puts the
+        # 480-char doc near 0.76 and the 4-char doc near 0.03
+        _drain(curation_stream.curation_sink(
+            spark.readStream.schema("doc_id long, text string").parquet(src),
+            "cur_cw_idx", ckpt, out, dup, rej,
+            quality_weights=[-5.0, 1.0, 0.0, 0.0],
+            quality_threshold=0.5,
+        ), spark)
+
+    def routed():
+        return (
+            {(r.doc_id, r.corpus_id)
+             for r in spark.read.parquet(dup).collect()},
+            {r.doc_id for r in spark.read.parquet(out).collect()},
+            {r.doc_id for r in spark.read.parquet(rej).collect()},
+        )
+
+    run()
+    n_idx = spark.table("cur_cw_idx").count()
+    dups1, curated1, rejects1 = routed()
+    assert {d for d, _ in dups1} == {4000, 4001}
+    assert curated1 == {5001} and rejects1 == {5002}
+
+    forge_crash_window(ckpt)
+    run()
+    assert spark.table("cur_cw_idx").count() == n_idx, "replay duplicated rows"
+    dups2, curated2, rejects2 = routed()
+    assert dups2 == dups1, "recovery replay corrupted dup routing"
+    assert curated2 == curated1, "recovery replay lost curated rows"
+    assert rejects2 == rejects1
+
+    spark.sql("DROP TABLE IF EXISTS cur_cw_idx")
+    spark.sql("DROP TABLE IF EXISTS cur_cw_idx__meta")
+
+
+def test_scd2_stream_keeps_history_after_crash_mid_swap(spark, tmp_path):
+    """A crash between ParquetWarehouse.rewrite's two renames leaves the
+    dimension parked at ``.__old`` next to a ``.__staging`` dir. The next
+    fold must restore and extend that history, not take the table for
+    missing and bootstrap over it."""
+    import datetime as dt
+    import os
+    import shutil
+
+    from etl_bigquery_pipeline_spark.sources.sinks import ParquetWarehouse
+    from etl_bigquery_pipeline_spark.streaming import scd_stream
+
+    wh = ParquetWarehouse(str(tmp_path / "wh"))
+    src = str(tmp_path / "cdc_src")
+    ckpt = str(tmp_path / "cdc_ckpt")
+    schema = "k bigint, name string, bal double, change_ts timestamp"
+
+    def run(rows):
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+        scd_stream.scd2_stream_sink(
+            spark.readStream.schema(schema).parquet(src),
+            wh, "dim", ckpt, keys=["k"],
+        ).awaitTermination()
+
+    t1 = dt.datetime(2024, 1, 1, 10)
+    run([(1, "a", 10.0, t1), (2, "b", 20.0, t1)])
+    table = os.path.join(str(tmp_path / "wh"), "dim")
+    shutil.copytree(table, table + ".__staging")
+    os.rename(table, table + ".__old")
+
+    run([(3, "c", 30.0, dt.datetime(2024, 6, 1, 9))])
+    d = dt.date
+    assert {tuple(r) for r in wh.read(spark, "dim").collect()} == {
+        (1, "a", 10.0, d(2024, 1, 1), None, True),
+        (2, "b", 20.0, d(2024, 1, 1), None, True),
+        (3, "c", 30.0, d(2024, 6, 1), None, True),
+    }
+    assert not os.path.exists(table + ".__old")
+    assert not os.path.exists(table + ".__staging")
