@@ -1,18 +1,19 @@
 """Audio binary-column operators: WAV decode, features, clip sampling.
 
-Same design as binary_ops (images): audio lives in opaque ``binary``
-columns; every decode/feature step is an Arrow-batched ``mapInPandas``
-iterator, so payloads cross the JVM<->Python boundary in whole columnar
-batches, never row-at-a-time.
+Audio lives in opaque ``binary`` columns like images, and every operator
+here runs through ``binary_ops.map_payloads``: Arrow-batched, one
+payload's work per call, and an undecodable payload gives the operator's
+fallback rows (nulls with ``ok=false`` for the feature operators, no rows
+for ``sample_clips``) instead of failing the task.
 
-Codec policy, mirroring the image side: RIFF/WAVE PCM (8/16/32-bit int
-and float32) decodes FOR REAL — a pure struct chunk-walk plus a numpy
-frombuffer view, no codec library. Compressed codecs (MP3/OGG/FLAC) are
-header-sniffed honestly and their decode is gated behind a clear
-NotImplementedError naming the dependency that would widen the matrix.
+Codec policy: RIFF/WAVE PCM (8/16/32-bit int and float32), G.711 A-law
+and mu-law and IMA ADPCM decode with a struct chunk walk and numpy.
+Compressed codecs (MP3/OGG/FLAC) are header-sniffed and their decode
+raises NotImplementedError naming the dependency. ``decode_wav`` raises
+ValueError for a malformed or NULL payload (``binary_ops.payload_decoder``).
 
-Scale notes: as with images, row SIZE is the planning unit — use
-binary_ops.repartition_for_payload before wide audio stages. Clip
+Scale notes: row SIZE is the planning unit — use
+``binary_ops.repartition_for_payload`` before wide audio stages. Clip
 sampling explodes one row per clip; each clip is re-encoded as a
 standalone 16-bit PCM WAV so downstream stages see the same payload
 contract as the input.
@@ -24,9 +25,14 @@ import struct
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from etl_bigquery_pipeline_spark.multimodal.binary_ops import (
+    map_payloads,
+    payload_decoder,
+    with_header_meta,
+)
 
 AUDIO_META_SCHEMA = T.StructType(
     [
@@ -172,6 +178,7 @@ def _decode_ima_adpcm(raw: bytes, ch: int, block_align: int) -> "np.ndarray":
     return np.asarray(out, dtype=np.int16)
 
 
+@payload_decoder
 def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
     """(samples float32 [-1,1] of shape (frames, channels), sample_rate).
 
@@ -253,28 +260,7 @@ def encode_wav(samples: np.ndarray, sample_rate: int) -> bytes:
 def with_audio_meta(df: DataFrame, binary_col: str = "payload") -> DataFrame:
     """Attach the typed audio metadata struct by header-sniffing the
     payload (Arrow batches; every input column passes through)."""
-    out_schema = T.StructType(
-        df.schema.fields + [T.StructField("meta", AUDIO_META_SCHEMA)]
-    )
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [parse_wav_header(p) for p in pdf[binary_col]]
-            pdf = pdf.copy()
-            pdf["meta"] = [
-                {
-                    "format": f,
-                    "sample_rate": sr,
-                    "channels": ch,
-                    "bits": b,
-                    "n_frames": nf,
-                    "n_bytes": nb,
-                }
-                for f, sr, ch, b, nf, nb in metas
-            ]
-            yield pdf
-
-    return df.mapInPandas(scan, out_schema)
+    return with_header_meta(df, binary_col, AUDIO_META_SCHEMA, parse_wav_header)
 
 
 def audio_features(
@@ -295,32 +281,27 @@ def audio_features(
         ]
     )
 
-    def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for key, payload in zip(pdf[id_col], pdf[binary_col]):
-                try:
-                    x, sr = decode_wav(payload)
-                except (NotImplementedError, ValueError):
-                    rows.append((key, None, None, None, None, False))
-                    continue
-                mono = x.mean(axis=1)
-                dur = len(mono) / sr if sr else 0.0
-                rms = float(np.sqrt(np.mean(mono**2))) if len(mono) else 0.0
-                peak = float(np.max(np.abs(mono))) if len(mono) else 0.0
-                zc = (
-                    float(np.mean(np.signbit(mono[1:]) != np.signbit(mono[:-1])))
-                    if len(mono) > 1
-                    else 0.0
-                )
-                rows.append((key, round(dur, 6), round(rms, 6),
-                             round(peak, 6), round(zc, 6), True))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "duration_s", "rms", "peak", "zcr", "ok"],
-            )
+    def featurize(payload: bytes | None) -> list[tuple]:
+        x, sr = decode_wav(payload)
+        mono = x.mean(axis=1)
+        dur = len(mono) / sr if sr else 0.0
+        rms = float(np.sqrt(np.mean(mono**2))) if len(mono) else 0.0
+        peak = float(np.max(np.abs(mono))) if len(mono) else 0.0
+        zc = (
+            float(np.mean(np.signbit(mono[1:]) != np.signbit(mono[:-1])))
+            if len(mono) > 1
+            else 0.0
+        )
+        return [(round(dur, 6), round(rms, 6), round(peak, 6), round(zc, 6), True)]
 
-    return df.mapInPandas(featurize, out_schema)
+    return map_payloads(
+        df,
+        out_schema,
+        featurize,
+        binary_col=binary_col,
+        keep=[id_col],
+        on_undecodable=lambda p: [(None, None, None, None, False)],
+    )
 
 
 def sample_clips(
@@ -335,7 +316,8 @@ def sample_clips(
     ``stride_s``), each re-encoded as a standalone 16-bit PCM WAV so the
     output rows satisfy the same payload contract as the input — the
     audio analog of binary_ops.sample_frames. Row size stays bounded by
-    the clip length regardless of source duration."""
+    the clip length regardless of source duration. Undecodable payloads
+    contribute no rows."""
     out_schema = T.StructType(
         [
             df.schema[id_col],
@@ -345,28 +327,19 @@ def sample_clips(
         ]
     )
 
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for key, payload in zip(pdf[id_col], pdf[binary_col]):
-                try:
-                    x, sr = decode_wav(payload)
-                except (NotImplementedError, ValueError):
-                    continue
-                clip_n = max(int(clip_s * sr), 1)
-                stride_n = max(int(stride_s * sr), 1)
-                for k, start in enumerate(range(0, len(x), stride_n)):
-                    seg = x[start : start + clip_n]
-                    if not len(seg):
-                        break
-                    rows.append(
-                        (key, k, round(start / sr, 6), encode_wav(seg, sr))
-                    )
-            yield pd.DataFrame(
-                rows, columns=[id_col, "clip_idx", "start_s", "clip"]
-            )
+    def clips(payload: bytes | None) -> Iterator[tuple]:
+        x, sr = decode_wav(payload)
+        clip_n = max(int(clip_s * sr), 1)
+        stride_n = max(int(stride_s * sr), 1)
+        for k, start in enumerate(range(0, len(x), stride_n)):
+            seg = x[start : start + clip_n]
+            if not len(seg):
+                break
+            yield k, round(start / sr, 6), encode_wav(seg, sr)
 
-    return df.mapInPandas(do, out_schema)
+    return map_payloads(
+        df, out_schema, clips, binary_col=binary_col, keep=[id_col]
+    )
 
 
 def spectral_features(
@@ -387,35 +360,26 @@ def spectral_features(
         ]
     )
 
-    def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for key, payload in zip(pdf[id_col], pdf[binary_col]):
-                try:
-                    x, sr = decode_wav(payload)
-                except (NotImplementedError, ValueError):
-                    rows.append((key, None, None, None, False))
-                    continue
-                mono = x.mean(axis=1)
-                if len(mono) < 2 or not sr:
-                    rows.append((key, 0.0, 0.0, 0.0, True))
-                    continue
-                mag = np.abs(np.fft.rfft(mono))
-                freqs = np.fft.rfftfreq(len(mono), d=1.0 / sr)
-                total = float(mag.sum())
-                if total == 0.0:
-                    rows.append((key, 0.0, 0.0, 0.0, True))
-                    continue
-                dom = float(freqs[int(np.argmax(mag))])
-                centroid = float((freqs * mag).sum() / total)
-                cum = np.cumsum(mag)
-                roll = float(freqs[int(np.searchsorted(cum, 0.9 * total))])
-                rows.append(
-                    (key, round(dom, 3), round(centroid, 3), round(roll, 3), True)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "dominant_hz", "centroid_hz", "rolloff_hz", "ok"],
-            )
+    def featurize(payload: bytes | None) -> list[tuple]:
+        x, sr = decode_wav(payload)
+        mono = x.mean(axis=1)
+        if len(mono) < 2 or not sr:
+            return [(0.0, 0.0, 0.0, True)]
+        mag = np.abs(np.fft.rfft(mono))
+        freqs = np.fft.rfftfreq(len(mono), d=1.0 / sr)
+        total = float(mag.sum())
+        if total == 0.0:
+            return [(0.0, 0.0, 0.0, True)]
+        dom = float(freqs[int(np.argmax(mag))])
+        centroid = float((freqs * mag).sum() / total)
+        roll = float(freqs[int(np.searchsorted(np.cumsum(mag), 0.9 * total))])
+        return [(round(dom, 3), round(centroid, 3), round(roll, 3), True)]
 
-    return df.mapInPandas(featurize, out_schema)
+    return map_payloads(
+        df,
+        out_schema,
+        featurize,
+        binary_col=binary_col,
+        keep=[id_col],
+        on_undecodable=lambda p: [(None, None, None, False)],
+    )

@@ -1,40 +1,147 @@
-"""Multimodal (image/audio/video) column plumbing.
+"""Multimodal (image/audio/video) column plumbing, and the one payload
+mapper the image, audio and video operators share.
 
-Design: media lives in opaque ``binary`` columns with a typed metadata
-struct alongside (mime, width/height or sample_rate/duration, source_uri).
-All decode / feature-extract steps are Arrow-batched Pandas iterators via
-``mapInPandas`` — the payload never crosses the JVM<->Python boundary
-row-at-a-time, and each batch is one contiguous Arrow buffer.
+Media lives in opaque ``binary`` columns with a typed metadata struct
+alongside. Every operator that reads payloads runs through
+:func:`map_payloads`, the tier's single ``mapInPandas`` call: payloads
+cross the JVM<->Python boundary in whole Arrow batches, and an operator
+supplies only its per-payload work (one payload in, its output tuples
+out).
 
-Codec policy: formats that genuinely need an external library
-(arithmetic-coded JPEG, exotic PNG variants, real video codecs) are
-gated — header sniffing is real (pure struct reads), pixel decode raises
-with a clear message. Everything else decodes FOR REAL with numpy +
-stdlib: PPM (P6), 24-bit BMP, 8-bit PNG both non-interlaced and Adam7
-(zlib inflate + scanline-filter inversion), baseline AND progressive
-JPEG (multimodal/jpeg.py), and first-frame GIF (pure-python LZW).
-``resize_images`` does actual nearest-neighbor resampling on decodable
-payloads and ``channel_stats`` computes true per-channel pixel statistics
-— the whole decode→transform→feature pipeline executes end-to-end in this
-container, with PIL/ffmpeg needed only to widen the codec matrix, not to
-exercise the path.
+Undecodable payloads: decoders keep one error contract
+(:func:`payload_decoder`) — ``ValueError`` for a malformed payload, a
+NULL one included, and ``NotImplementedError`` for a codec-gated one.
+``map_payloads`` catches exactly those two and emits the operator's
+fallback rows instead: none for the row-exploding operators, nulls with
+``ok=false`` for the feature operators, the untouched payload for
+``resize_images``. One bad row never fails the Spark task.
+
+Codec policy: PPM (P6), 24-bit BMP, 8-bit PNG (non-interlaced and Adam7),
+baseline and progressive JPEG (``jpeg.py``) and first-frame GIF decode
+with numpy + stdlib. Formats that need an external library (arithmetic
+JPEG, exotic PNG variants) parse their headers and raise
+``NotImplementedError`` naming the library on pixel decode.
 
 Scale notes: binary payloads make *row size*, not row count, the planning
-unit. ``repartition_for_payload`` sizes partitions by payload bytes so a
-partition of 4K images and a partition of 4K videos both fit executor
-memory. Never groupBy/shuffle the binary column itself — project metadata
-out first and join back by key if regrouping is needed.
+unit. ``repartition_for_payload`` sizes partitions by payload bytes.
+Never groupBy/shuffle the binary column itself — project metadata out
+first and join back by key if regrouping is needed.
 """
 
 from __future__ import annotations
 
+import functools
 import struct
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+# integer Spark types build as nullable pandas arrays (see payload_frame)
+_NULLABLE_INTS = {
+    T.ByteType: "Int8",
+    T.ShortType: "Int16",
+    T.IntegerType: "Int32",
+    T.LongType: "Int64",
+}
+
+
+def payload_decoder(decode: Callable) -> Callable:
+    """Give a payload decoder the error contract :func:`map_payloads`
+    relies on: ``ValueError`` for a malformed payload (NULL included),
+    ``NotImplementedError`` for a codec-gated one. Corrupt bytes trip a
+    codec wherever its parse happens to be (a KeyError on a missing
+    table, an IndexError past a truncated buffer, struct/zlib errors,
+    StopIteration...). The payload is input from outside the program, so
+    whatever a codec raises over its bytes is a property of the bytes:
+    it becomes ``ValueError``, chained to the original."""
+
+    @functools.wraps(decode)
+    def guarded(payload, *args, **kwargs):
+        if payload is None:
+            raise ValueError("NULL payload")
+        try:
+            return decode(payload, *args, **kwargs)
+        except Exception as e:
+            if isinstance(e, (NotImplementedError, ValueError)):
+                raise
+            raise ValueError(f"corrupt or truncated payload: {e!r}") from e
+
+    return guarded
+
+
+def payload_frame(rows: Sequence[tuple], fields: Sequence[T.StructField]) -> pd.DataFrame:
+    """One pandas batch from output tuples, typed by the Spark fields.
+
+    Integer fields build as nullable ``Int8``..``Int64`` arrays. Left to
+    inference, a single None widens an integer column to float64, which
+    rounds every 64-bit value in the batch past 2**53 (a perceptual hash
+    next to an undecodable payload loses its low bits)."""
+    data = {}
+    for f, col in zip(fields, list(zip(*rows)) or [()] * len(fields)):
+        dtype = _NULLABLE_INTS.get(type(f.dataType))
+        data[f.name] = pd.array(col, dtype=dtype) if dtype else list(col)
+    return pd.DataFrame(data)
+
+
+def map_payloads(
+    df: DataFrame,
+    schema: T.StructType | str,
+    rows_of: Callable[[bytes | None], Iterable[tuple]],
+    *,
+    binary_col: str = "payload",
+    keep: Sequence[str] = (),
+    on_undecodable: Callable[[bytes | None], Iterable[tuple]] = lambda p: (),
+) -> DataFrame:
+    """Map every payload of ``binary_col`` to output rows, Arrow-batched.
+
+    ``schema`` is the output schema (a StructType or DDL string). Its
+    first ``len(keep)`` fields take the values of the input columns
+    ``keep``, copied onto every output row of the payload (renamed to
+    the schema's names). ``rows_of(payload)`` returns the payload's rows
+    (zero or more) as tuples of the remaining fields. When it raises
+    ``ValueError`` or ``NotImplementedError`` — an undecodable payload,
+    see :func:`payload_decoder` — the payload's rows are
+    ``on_undecodable(payload)`` instead (default: none)."""
+    out = schema if isinstance(schema, T.StructType) else T.StructType.fromDDL(schema)
+    keep = list(keep)
+    made = out.fields[len(keep) :]
+
+    def batches(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in pdfs:
+            at, rows = [], []
+            for i, payload in enumerate(pdf[binary_col]):
+                try:
+                    got = list(rows_of(payload))
+                except (NotImplementedError, ValueError):
+                    got = list(on_undecodable(payload))
+                at += [i] * len(got)
+                rows += got
+            kept = pdf[keep].iloc[at].reset_index(drop=True)
+            kept.columns = out.names[: len(keep)]
+            yield pd.concat([kept, payload_frame(rows, made)], axis=1)
+
+    return df.mapInPandas(batches, out)
+
+
+def with_header_meta(
+    df: DataFrame,
+    binary_col: str,
+    meta_schema: T.StructType,
+    parse: Callable[[bytes | None], tuple],
+) -> DataFrame:
+    """Every input column plus ``meta``, the struct ``parse`` reads from
+    the payload's header (in ``meta_schema`` field order)."""
+    return map_payloads(
+        df,
+        T.StructType(df.schema.fields + [T.StructField("meta", meta_schema)]),
+        lambda p: [(dict(zip(meta_schema.names, parse(p))),)],
+        binary_col=binary_col,
+        keep=df.columns,
+    )
+
 
 IMAGE_META_SCHEMA = T.StructType(
     [
@@ -83,24 +190,9 @@ def parse_image_header(payload: bytes | None) -> tuple[str | None, int | None, i
 
 
 def with_image_meta(df: DataFrame, binary_col: str = "payload") -> DataFrame:
-    """Attach the typed metadata struct by header-sniffing the payload.
-
-    mapInPandas keeps every input column and appends ``meta`` — Arrow moves
-    the binary column in whole batches.
-    """
-    out_schema = T.StructType(df.schema.fields + [T.StructField("meta", IMAGE_META_SCHEMA)])
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [parse_image_header(p) for p in pdf[binary_col]]
-            pdf = pdf.copy()
-            pdf["meta"] = [
-                {"format": f, "width": w, "height": h, "n_bytes": b}
-                for f, w, h, b in metas
-            ]
-            yield pdf
-
-    return df.mapInPandas(scan, out_schema)
+    """Attach the typed image metadata struct ``meta`` by header-sniffing
+    the payload; every input column passes through."""
+    return with_header_meta(df, binary_col, IMAGE_META_SCHEMA, parse_image_header)
 
 
 def _parse_ppm_header(payload: bytes) -> tuple[int, int, int, int]:
@@ -378,6 +470,7 @@ def _decode_gif(payload: bytes) -> "object":
     raise ValueError("GIF contains no image frame")
 
 
+@payload_decoder
 def decode_image(payload: bytes) -> "object":
     """Pixel decode to ndarray(h, w, 3) uint8 — pure numpy/stdlib, no
     codec libs.
@@ -385,27 +478,12 @@ def decode_image(payload: bytes) -> "object":
     Real decode paths: PPM (P6), 24-bit uncompressed BMP (bottom-up or
     top-down, 4-byte row padding, BGR->RGB), 8-bit non-interlaced or
     Adam7 PNG (zlib is stdlib; the five scanline filters are inverted
-    here), baseline-sequential JPEG (multimodal/jpeg.py — Huffman + IDCT
-    in numpy), and first-frame GIF (pure-python LZW). Progressive JPEG
-    and exotic PNG variants raise NotImplementedError naming the
-    required library — the same signature a PIL-backed decode slots
-    into.
+    here), baseline and progressive JPEG (multimodal/jpeg.py — Huffman +
+    IDCT in numpy), and first-frame GIF (pure-python LZW). Exotic JPEG
+    and PNG variants raise NotImplementedError naming the required
+    library — the same signature a PIL-backed decode slots into. A
+    malformed payload raises ValueError (:func:`payload_decoder`).
     """
-    import zlib
-
-    import numpy as np
-
-    # truncated/corrupt streams surface as zlib/struct/index errors deep
-    # in the codecs; normalize them to ValueError so the batch paths
-    # (resize_images, audio/feature extractors) can pass malformed
-    # payloads through instead of crashing the whole Spark task
-    try:
-        return _decode_image_inner(payload)
-    except (zlib.error, struct.error, IndexError) as e:
-        raise ValueError(f"corrupt or truncated image payload: {e}") from e
-
-
-def _decode_image_inner(payload: bytes) -> "object":
     import numpy as np
 
     if payload[:8] == b"\x89PNG\r\n\x1a\n":
@@ -469,21 +547,17 @@ def extract_features(
     Stands in for a model-embedding step: consumes Arrow batches of binary
     payloads, emits (id, feature array<float>). The fake derives features
     from byte statistics so tests get stable values; a real model swaps the
-    body, not the plumbing.
+    body, not the plumbing. A NULL payload featurizes as an empty one.
     """
 
-    def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for p in pdf[binary_col]:
-                p = p or b""
-                # chunk byte-sums -> fixed-dim vector, normalized
-                chunks = [p[i::dim] for i in range(dim)]
-                v = [float(sum(c) % 997) / 997.0 for c in chunks]
-                feats.append(v)
-            yield pd.DataFrame({"id": pdf[id_col], "feature": feats})
+    def featurize(p: bytes | None) -> list[tuple]:
+        p = p or b""
+        # chunk byte-sums -> fixed-dim vector, normalized
+        return [([float(sum(p[i::dim]) % 997) / 997.0 for i in range(dim)],)]
 
-    return df.mapInPandas(featurize, FEATURE_SCHEMA)
+    return map_payloads(
+        df, FEATURE_SCHEMA, featurize, binary_col=binary_col, keep=[id_col]
+    )
 
 
 def repartition_for_payload(
@@ -524,44 +598,33 @@ def resize_images(
 ) -> DataFrame:
     """Resize step: (id, payload, width, height) out, Arrow-batched.
 
-    Decodable payloads (PPM/BMP) are REALLY resampled (vectorized
+    Decodable payloads are REALLY resampled (vectorized
     nearest-neighbor), re-encoded as PPM, and emitted with the target
-    dimensions and ``resized=true``. Codec-gated formats pass through
-    UNCHANGED — with their *parsed source* dimensions (header probe; null
+    dimensions and ``resized=true``. Undecodable payloads (codec-gated,
+    malformed or NULL) pass through UNCHANGED — with their *parsed source* dimensions (header probe; null
     when even the header is unreadable) and ``resized=false``, so
     downstream consumers can distinguish resized rows from pass-throughs
     instead of trusting dimensions the operator never produced. Swap the
     inner body for PIL to widen the matrix; the plan shape (Arrow
     batches, payload-sized partitions) is identical either way.
     """
+    w, h = target
 
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        w, h = target
-        for pdf in batches:
-            payloads, widths, heights, resized = [], [], [], []
-            for p in pdf[binary_col]:
-                try:
-                    payloads.append(encode_ppm(resize_nearest(decode_image(p), (w, h))))
-                    widths.append(w)
-                    heights.append(h)
-                    resized.append(True)
-                except (NotImplementedError, ValueError, TypeError):
-                    payloads.append(p)  # codec-gated format: pass through
-                    _, src_w, src_h, _ = parse_image_header(p)
-                    widths.append(src_w)
-                    heights.append(src_h)
-                    resized.append(False)
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "payload": payloads,
-                    "width": pd.array(widths, dtype="Int32"),
-                    "height": pd.array(heights, dtype="Int32"),
-                    "resized": resized,
-                }
-            )
+    def resize(p: bytes | None) -> list[tuple]:
+        return [(encode_ppm(resize_nearest(decode_image(p), target)), w, h, True)]
 
-    return df.mapInPandas(do, RESIZE_SCHEMA)
+    def pass_through(p: bytes | None) -> list[tuple]:
+        _, src_w, src_h, _ = parse_image_header(p)
+        return [(p, src_w, src_h, False)]
+
+    return map_payloads(
+        df,
+        RESIZE_SCHEMA,
+        resize,
+        binary_col=binary_col,
+        keep=[id_col],
+        on_undecodable=pass_through,
+    )
 
 
 CHANNEL_STATS_SCHEMA = (
@@ -580,26 +643,20 @@ def channel_stats(
     yield null stats instead of failing the batch."""
     import numpy as np
 
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("id", "width", "height", "mean_r", "mean_g", "mean_b", "std_gray")}
-            for i, p in zip(pdf[id_col], pdf[binary_col]):
-                out["id"].append(i)
-                try:
-                    arr = decode_image(p).astype(np.float64)
-                    out["width"].append(arr.shape[1])
-                    out["height"].append(arr.shape[0])
-                    means = arr.mean(axis=(0, 1))
-                    out["mean_r"].append(round(float(means[0]), 4))
-                    out["mean_g"].append(round(float(means[1]), 4))
-                    out["mean_b"].append(round(float(means[2]), 4))
-                    out["std_gray"].append(round(float(arr.mean(axis=2).std()), 4))
-                except (NotImplementedError, ValueError, TypeError):
-                    for k in ("width", "height", "mean_r", "mean_g", "mean_b", "std_gray"):
-                        out[k].append(None)
-            yield pd.DataFrame(out)
+    def stats(p: bytes | None) -> list[tuple]:
+        arr = decode_image(p).astype(np.float64)
+        means = [round(float(m), 4) for m in arr.mean(axis=(0, 1))]
+        gray_std = round(float(arr.mean(axis=2).std()), 4)
+        return [(arr.shape[1], arr.shape[0], *means, gray_std)]
 
-    return df.mapInPandas(do, CHANNEL_STATS_SCHEMA)
+    return map_payloads(
+        df,
+        CHANNEL_STATS_SCHEMA,
+        stats,
+        binary_col=binary_col,
+        keep=[id_col],
+        on_undecodable=lambda p: [(None,) * 6],
+    )
 
 
 FRAME_SCHEMA = "id long, frame_idx int, frame binary"
@@ -620,18 +677,12 @@ def sample_frames(
     Spark plan, and it is real.
     """
 
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for i, p in zip(pdf[id_col], pdf[binary_col]):
-                p = p or b""
-                for k in range(min(max_frames, max(1, len(p) // every_n_bytes))):
-                    ids.append(i)
-                    idxs.append(k)
-                    frames.append(p[k * every_n_bytes : (k + 1) * every_n_bytes])
-            yield pd.DataFrame({"id": ids, "frame_idx": idxs, "frame": frames})
+    def frames(p: bytes | None) -> list[tuple]:
+        p = p or b""
+        n = min(max_frames, max(1, len(p) // every_n_bytes))
+        return [(k, p[k * every_n_bytes : (k + 1) * every_n_bytes]) for k in range(n)]
 
-    return df.mapInPandas(do, FRAME_SCHEMA)
+    return map_payloads(df, FRAME_SCHEMA, frames, binary_col=binary_col, keep=[id_col])
 
 
 def dhash64(arr: "object") -> int:
@@ -665,34 +716,19 @@ def with_perceptual_hash(
         ]
     )
 
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            keys, hashes, oks = [], [], []
-            for key, payload in zip(pdf[id_col], pdf[binary_col]):
-                keys.append(key)
-                try:
-                    h = dhash64(decode_image(payload))
-                    # two's-complement into signed int64
-                    hashes.append(h - (1 << 64) if h >= (1 << 63) else h)
-                    oks.append(True)
-                except (NotImplementedError, ValueError, TypeError):
-                    hashes.append(None)
-                    oks.append(False)
-            # phash MUST be a nullable Int64 column: a tuple-row
-            # DataFrame with one None makes pandas infer float64 for
-            # the whole column, silently zeroing the low ~11 bits of
-            # every 64-bit hash in the batch (53-bit mantissa) — found
-            # when a junk payload sharing a micro-batch corrupted its
-            # neighbors' index entries and broke cross-batch matching
-            yield pd.DataFrame(
-                {
-                    id_col: keys,
-                    "phash": pd.array(hashes, dtype="Int64"),
-                    "ok": oks,
-                }
-            )
+    def phash(p: bytes | None) -> list[tuple]:
+        h = dhash64(decode_image(p))
+        # two's-complement into signed int64
+        return [(h - (1 << 64) if h >= (1 << 63) else h, True)]
 
-    return df.mapInPandas(do, out_schema)
+    return map_payloads(
+        df,
+        out_schema,
+        phash,
+        binary_col=binary_col,
+        keep=[id_col],
+        on_undecodable=lambda p: [(None, False)],
+    )
 
 
 def near_dup_images(

@@ -1,19 +1,18 @@
 """Video binary-column plumbing: real container parsing, gated decode.
 
 Completes the multimodal matrix (images: binary_ops, audio: audio_ops).
-Codec policy is the same: CONTAINER structure parses for real — AVI via
-the identical RIFF chunk walk the WAV parser uses, MP4/MOV via an ISO
-BMFF box walk (pure struct reads: ftyp brand, mvhd timescale/duration,
-tkhd display dimensions). FRAME decode is REAL for motion-JPEG AVI
-(each stream chunk is a baseline JPEG — multimodal/jpeg.py decodes it
-natively); every other codec is gated behind a NotImplementedError
-naming the dependency (pyav/ffmpeg). Frame SAMPLING policy (which
-timestamps to pull) is pure arithmetic and therefore real; it yields
-(frame_idx, t_s) plans a decoder would execute.
+CONTAINER structure parses for real — AVI via the same RIFF chunk walk
+the WAV parser uses, MP4/MOV via an ISO BMFF box walk (ftyp brand, mvhd
+timescale/duration, tkhd display dimensions). FRAME decode is real for
+motion-JPEG AVI (each stream chunk is a baseline JPEG that
+multimodal/jpeg.py decodes); every other codec raises NotImplementedError
+naming pyav/ffmpeg, and a malformed or NULL payload raises ValueError
+(``binary_ops.payload_decoder``). Frame SAMPLING policy (which timestamps
+to pull) is pure arithmetic over the parsed container metadata.
 
-All DataFrame entry points are Arrow-batched mapInPandas, payload never
-row-at-a-time; row size is the planning unit (see
-binary_ops.repartition_for_payload).
+Every DataFrame entry point runs through ``binary_ops.map_payloads``
+(Arrow-batched; undecodable payloads contribute no frame rows); row size
+is the planning unit (see binary_ops.repartition_for_payload).
 """
 
 from __future__ import annotations
@@ -21,9 +20,15 @@ from __future__ import annotations
 import struct
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from etl_bigquery_pipeline_spark.multimodal.binary_ops import (
+    encode_ppm,
+    map_payloads,
+    payload_decoder,
+    with_header_meta,
+)
 
 VIDEO_META_SCHEMA = T.StructType(
     [
@@ -82,10 +87,12 @@ def _parse_mp4(payload: bytes):
                 walk(i + 8, min(i + size, hi), depth + 1)
             elif btype == b"mvhd" and i + 8 + 20 <= hi:
                 ver = payload[i + 8]
-                if ver == 1:
-                    ts, d = struct.unpack(">IQ", payload[i + 28 : i + 40])
-                else:
+                if ver != 1:
                     ts, d = struct.unpack(">II", payload[i + 20 : i + 28])
+                elif i + 40 <= hi:  # version 1: 64-bit times and duration
+                    ts, d = struct.unpack(">IQ", payload[i + 28 : i + 40])
+                else:  # truncated version-1 header
+                    ts = 0
                 if ts:
                     dur = round(d / ts, 6)
             elif btype == b"tkhd" and i + size <= hi:
@@ -120,28 +127,7 @@ def parse_video_header(payload: bytes | None):
 def with_video_meta(df: DataFrame, binary_col: str = "payload") -> DataFrame:
     """Attach the typed video metadata struct (Arrow batches, every input
     column passes through)."""
-    out_schema = T.StructType(
-        df.schema.fields + [T.StructField("meta", VIDEO_META_SCHEMA)]
-    )
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [parse_video_header(p) for p in pdf[binary_col]]
-            pdf = pdf.copy()
-            pdf["meta"] = [
-                {
-                    "container": c,
-                    "width": w,
-                    "height": h,
-                    "duration_s": d,
-                    "n_frames": f,
-                    "n_bytes": b,
-                }
-                for c, w, h, d, f, b in metas
-            ]
-            yield pdf
-
-    return df.mapInPandas(scan, out_schema)
+    return with_header_meta(df, binary_col, VIDEO_META_SCHEMA, parse_video_header)
 
 
 def _movi_chunks(payload: bytes):
@@ -168,6 +154,7 @@ def _movi_chunks(payload: bytes):
         i += 8 + clen + (clen % 2)
 
 
+@payload_decoder
 def decode_frames(payload: bytes, *, max_frames: int | None = None):
     """Frame pixel decode — REAL for motion-JPEG AVI (each '..dc'/'..db'
     stream chunk is a baseline JPEG, decoded by multimodal/jpeg.py);
@@ -212,8 +199,6 @@ def extract_mjpeg_frames(
     Non-MJPEG/undecodable payloads contribute no rows — the honest
     behavior for a mixed corpus; route them via with_video_meta if they
     need accounting."""
-    from etl_bigquery_pipeline_spark.multimodal.binary_ops import encode_ppm
-
     out_schema = T.StructType(
         [
             df.schema[id_col],
@@ -224,32 +209,14 @@ def extract_mjpeg_frames(
         ]
     )
 
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for key, payload in zip(pdf[id_col], pdf[binary_col]):
-                try:
-                    frames = decode_frames(
-                        bytes(payload), max_frames=max_frames * every_n
-                    )
-                except (NotImplementedError, ValueError, TypeError):
-                    continue
-                for k, arr in enumerate(frames[::every_n][:max_frames]):
-                    rows.append(
-                        (
-                            key,
-                            k * every_n,
-                            arr.shape[1],
-                            arr.shape[0],
-                            encode_ppm(arr),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "frame_idx", "width", "height", "frame"],
-            )
+    def frames(payload: bytes | None) -> Iterator[tuple]:
+        decoded = decode_frames(payload, max_frames=max_frames * every_n)
+        for k, arr in enumerate(decoded[::every_n][:max_frames]):
+            yield k * every_n, arr.shape[1], arr.shape[0], encode_ppm(arr)
 
-    return df.mapInPandas(do, out_schema)
+    return map_payloads(
+        df, out_schema, frames, binary_col=binary_col, keep=[id_col]
+    )
 
 
 def frame_sample_plan(
@@ -273,21 +240,18 @@ def frame_sample_plan(
         ]
     )
 
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for key, payload in zip(pdf[id_col], pdf[binary_col]):
-                _, _, _, dur, frames, _ = parse_video_header(payload)
-                if dur is None:
-                    continue
-                fps = (frames / dur) if (frames and dur) else None
-                k = 0
-                t = 0.0
-                while t < dur and k < max_frames:
-                    idx = int(t * fps) if fps else k
-                    rows.append((key, idx, round(t, 6)))
-                    k += 1
-                    t = k * every_s
-            yield pd.DataFrame(rows, columns=[id_col, "frame_idx", "t_s"])
+    def plan(payload: bytes | None) -> Iterator[tuple]:
+        _, _, _, dur, frames, _ = parse_video_header(payload)
+        if dur is None:
+            return
+        fps = (frames / dur) if (frames and dur) else None
+        k = 0
+        t = 0.0
+        while t < dur and k < max_frames:
+            yield (int(t * fps) if fps else k), round(t, 6)
+            k += 1
+            t = k * every_s
 
-    return df.mapInPandas(do, out_schema)
+    return map_payloads(
+        df, out_schema, plan, binary_col=binary_col, keep=[id_col]
+    )

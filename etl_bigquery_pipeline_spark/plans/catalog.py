@@ -1,53 +1,43 @@
 """Oracle-checked query catalog — the driver contract behind
 __spark_entry__.py.
 
-Since r11 this module is an AGGREGATOR: the queries live in the
-catalog_p* part modules (split from the former 14k-line single file,
-r10 verdict ask #7), registering into catalog_base.QUERIES/ORACLE via
-the shared @query decorator. This module imports the parts in the
-ORIGINAL textual order (registration order is the driver's sample
-derivation input — pinned by tests/test_oracle_parity.py) and then
-hoists every part's module-level names into its own namespace, so
-`from plans.catalog import <anything>` keeps working exactly as it did
-when the file was one module (tests, scripts/oracle_overrides.py and
-bench.py import private helpers like _ann_panel/_lsh_bucket_sql from
-here). Determinism/aliasing rules shared by all parts are documented
-in catalog_base.py.
+The queries live in the catalog_p* part modules and register into
+``QUERIES``/``ORACLE`` (catalog_base) through the shared @query
+decorator. This module imports the parts in registration order, which is
+the driver's sample derivation input (pinned by
+tests/test_oracle_parity.py), then moves the queries the driver has not
+covered yet to the front. Helpers are imported from the part module that
+defines them. Determinism/aliasing rules shared by all parts are
+documented in catalog_base.py.
 """
 
 from __future__ import annotations
 
-from etl_bigquery_pipeline_spark.plans import catalog_base as _m_base
-from etl_bigquery_pipeline_spark.plans import catalog_p1_reference as _m_0
-from etl_bigquery_pipeline_spark.plans import catalog_p2_llm_core as _m_1
-from etl_bigquery_pipeline_spark.plans import catalog_p3_approx_gates as _m_2
-from etl_bigquery_pipeline_spark.plans import catalog_p4_breadth as _m_3
-from etl_bigquery_pipeline_spark.plans import catalog_p5_round4 as _m_4
-from etl_bigquery_pipeline_spark.plans import catalog_p6_waves6_16 as _m_5
-from etl_bigquery_pipeline_spark.plans import catalog_p7_waves17_45 as _m_6
-from etl_bigquery_pipeline_spark.plans import catalog_p8_waves46_48 as _m_7
-from etl_bigquery_pipeline_spark.plans import catalog_p9_wave53 as _m_8
-
-_PART_MODULES = (
-    _m_base,
-    _m_0,
-    _m_1,
-    _m_2,
-    _m_3,
-    _m_4,
-    _m_5,
-    _m_6,
-    _m_7,
-    _m_8,
+from etl_bigquery_pipeline_spark.plans import (
+    catalog_p1_reference,
+    catalog_p2_llm_core,
+    catalog_p3_approx_gates,
+    catalog_p4_breadth,
+    catalog_p5_round4,
+    catalog_p6_waves6_16,
+    catalog_p7_waves17_45,
+    catalog_p8_waves46_48,
+    catalog_p9_wave53,
 )
+from etl_bigquery_pipeline_spark.plans.catalog_base import ORACLE, QUERIES
 
-# re-create the pre-split single-module namespace: later parts win name
-# collisions, exactly as later top-level statements did in the one file
-for _mod in _PART_MODULES:
-    for _k, _v in vars(_mod).items():
-        if not _k.startswith("__"):
-            globals()[_k] = _v
-del _mod, _k, _v
+# each part registers its queries on import; this is their order
+_PARTS = (
+    catalog_p1_reference,
+    catalog_p2_llm_core,
+    catalog_p3_approx_gates,
+    catalog_p4_breadth,
+    catalog_p5_round4,
+    catalog_p6_waves6_16,
+    catalog_p7_waves17_45,
+    catalog_p8_waves46_48,
+    catalog_p9_wave53,
+)
 
 _DRIVER_COVERED_R02 = [
     "flagship_sales_rollup", "table_row_counts", "null_counts_orders",
@@ -71,11 +61,15 @@ _DRIVER_COVERED_R02 = [
 ]
 
 def _reorder_for_sweep() -> None:
+    # registration order is part order, also when a caller imported a
+    # part on its own (for a helper) before this module
+    part = {m.__name__: i for i, m in enumerate(_PARTS)}
+    registered = sorted(QUERIES, key=lambda n: part[QUERIES[n].__module__])
     covered = [n for n in _DRIVER_COVERED_R02 if n in QUERIES]
     # newest-registered first: the driver's sweep is budget-bounded, so
     # the queries with the least prior verification (this round's
     # additions register last) must land earliest in the walk
-    uncovered = [n for n in reversed(QUERIES) if n not in set(covered)]
+    uncovered = [n for n in reversed(registered) if n not in set(covered)]
     ordered = uncovered + covered
     for mapping in (QUERIES, ORACLE):
         snapshot = {n: mapping[n] for n in ordered if n in mapping}

@@ -102,7 +102,8 @@ class ParquetWarehouse(WarehouseSink):
         """Recover from a crash mid-swap: if only the ``.__old`` directory
         exists the previous swap died between its two renames — restore
         it; if both exist the swap completed but cleanup didn't — drop the
-        leftover."""
+        leftover. A ``.__staging`` directory is never the live table, so
+        a crashed swap's staging copy is dropped in every state."""
         import shutil
 
         old = path + ".__old"
@@ -111,6 +112,7 @@ class ParquetWarehouse(WarehouseSink):
                 shutil.rmtree(old)
             else:
                 os.rename(old, path)
+        shutil.rmtree(path + ".__staging", ignore_errors=True)
 
     def exists(self, table: str) -> bool:
         """Whether ``table`` exists, after healing a crash mid-swap: a

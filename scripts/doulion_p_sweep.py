@@ -40,7 +40,9 @@ def main() -> int:
 
     from etl_bigquery_pipeline_spark.operators import graph
     from etl_bigquery_pipeline_spark.operators.caching import cache_scope
-    from etl_bigquery_pipeline_spark.plans.catalog import _copurchase_edges
+    from etl_bigquery_pipeline_spark.plans.catalog_p8_waves46_48 import (
+        _copurchase_edges,
+    )
     from etl_bigquery_pipeline_spark.session import get_session
 
     spark = get_session("doulion-p-sweep", master=f"local[{args.cpus}]")

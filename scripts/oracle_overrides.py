@@ -238,7 +238,7 @@ def _emb_pairs_sql() -> str:
     deduped candidate) — the banding is exactly what makes this oracle
     feasible at sf10: per-band candidates ~N^2/2^12 instead of the old
     single-16-bucket ~1.25e9-cosine self-join."""
-    from etl_bigquery_pipeline_spark.plans.catalog import (
+    from etl_bigquery_pipeline_spark.plans.catalog_p2_llm_core import (
         _emb_near_dup_oracle_sql,
     )
 

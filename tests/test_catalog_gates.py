@@ -10,6 +10,11 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from etl_bigquery_pipeline_spark.plans import catalog
+from etl_bigquery_pipeline_spark.plans.catalog_p4_breadth import (
+    _LLOYD_ROUNDS,
+    inertia_monotone,
+    kmeans_inertia_history,
+)
 from etl_bigquery_pipeline_spark.sources.readers import read_table
 
 
@@ -46,9 +51,9 @@ def test_kmeans_history_matches_serial_numpy_lloyd(spark, sf_dir):
     rows = e.select("embedding", "label").collect()
     vecs = np.array([r.embedding for r in rows], dtype=np.float32).astype(np.float64)
     labels = np.array([r.label for r in rows])
-    want = _numpy_lloyd(vecs, labels, rounds=catalog._LLOYD_ROUNDS)
+    want = _numpy_lloyd(vecs, labels, rounds=_LLOYD_ROUNDS)
 
-    got = catalog.kmeans_inertia_history(e).first()["hist"]
+    got = kmeans_inertia_history(e).first()["hist"]
     assert len(got) == len(want)
     for g, w in zip(got, want):
         assert abs(g - w) <= 1e-9 * abs(w), (got, want)
@@ -62,7 +67,7 @@ def test_inertia_verdict_is_evaluated_in_plan(spark):
         F.array(F.lit(5.0)).alias("one"),
     )
     row = df.select(
-        *[catalog.inertia_monotone(F.col(c)).alias(c) for c in df.columns]
+        *[inertia_monotone(F.col(c)).alias(c) for c in df.columns]
     ).first()
     assert (row.up, row.down, row.one) == (False, True, True)
 

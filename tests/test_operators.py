@@ -1164,7 +1164,7 @@ def test_hist_exact_percentiles_keeps_null_group_and_empty_input(spark):
     offset-frame construction."""
     from pyspark.sql import functions as F
 
-    from etl_bigquery_pipeline_spark.plans.catalog import (
+    from etl_bigquery_pipeline_spark.plans.catalog_p3_approx_gates import (
         _hist_exact_percentiles,
     )
 

@@ -759,6 +759,7 @@ def test_upsert_crash_between_renames_heals(spark, tmp_path, monkeypatch):
     assert _os.path.exists(str(tmp_path / "t.__old"))
     assert _wh_rows(spark, wh, "t") == {(1, "a"), (2, "b")}
     assert not _os.path.exists(str(tmp_path / "t.__old"))
+    assert not _os.path.exists(str(tmp_path / "t.__staging"))
 
     # the retried merge completes
     wh.upsert(upd, "t", ["k"])
