@@ -86,6 +86,14 @@ def content_hash(col: Column | str) -> Column:
     return F.md5(F.array_join(tokens(c), " "))
 
 
+def hex8_to_int(hex_col: Column | str) -> Column:
+    """The integer value (bigint, 0 .. 2^32-1) of the first 8 hex digits of
+    ``hex_col``. Callers pass an md5 (``F.md5(salt || key)``), which makes
+    a deterministic draw any engine with md5 can replay; the DuckDB
+    spelling is ``plans.catalog_base._hex8_to_int_sql``."""
+    return F.conv(F.substring(hex_col, 1, 8), 16, 10).cast("bigint")
+
+
 def ngrams_of(toks: Column, n: int = 3) -> Column:
     """Word n-grams from an already-materialized token-array column.
 
@@ -152,9 +160,14 @@ def lang_guess(col: Column | str) -> Column:
 def token_chunks_of(
     toks: Column, *, chunk_tokens: int = 64, overlap: int = 16
 ) -> Column:
-    """Chunking over an already-materialized token-array column (hot-path
-    form — a tokens() subtree here would re-tokenize per chunk inside the
-    interpreted lambda; see ngrams_of)."""
+    """Split a token-array column into overlapping fixed-token-window
+    chunks -> array<struct<chunk_idx int, chunk string, n_tokens int>>.
+
+    Stride = chunk_tokens - overlap; the final chunk may be short. The
+    chunking a training/RAG pipeline runs before tokenization — pure JVM
+    higher-order functions, exploded downstream into one row per chunk.
+    Takes pre-projected tokens: a tokens() subtree here would re-tokenize
+    per chunk inside the interpreted lambda (see ngrams_of)."""
     if overlap >= chunk_tokens:
         raise ValueError("overlap must be < chunk_tokens")
     stride = chunk_tokens - overlap
@@ -177,19 +190,3 @@ def token_chunks_of(
         ),
     )
 
-
-def token_chunks(
-    col: Column | str, *, chunk_tokens: int = 64, overlap: int = 16
-) -> Column:
-    """Split a document into overlapping fixed-token-window chunks ->
-    array<struct<chunk_idx int, chunk string, n_tokens int>>.
-
-    Stride = chunk_tokens - overlap; the final chunk may be short. The
-    chunking a training/RAG pipeline runs before tokenization — pure JVM
-    higher-order functions, exploded downstream into one row per chunk.
-    Convenience form over raw text; hot paths should pre-project tokens
-    and call ``token_chunks_of``.
-    """
-    return token_chunks_of(
-        tokens(col), chunk_tokens=chunk_tokens, overlap=overlap
-    )

@@ -116,9 +116,3 @@ def release_checkpoint(df: DataFrame) -> None:
     materialized. Non-blocking; a plan that still reads the frame fails,
     so release only frames nothing downstream references."""
     df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-
-
-def live_cache_count() -> int:
-    """Number of registry-owned caches currently live (tests/diagnostics)."""
-    with _lock:
-        return len(_live)

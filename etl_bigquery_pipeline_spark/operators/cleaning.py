@@ -10,8 +10,6 @@ reference's four materialized stages.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -59,43 +57,16 @@ def drop_exact_duplicates(df: DataFrame, subset: list[str] | None = None) -> Dat
     return df.dropDuplicates(subset) if subset else df.dropDuplicates()
 
 
-@dataclass
-class CleanStats:
-    """Row-count deltas the reference logs per stage
-    (/root/reference/dags/etl_pipeline.py:142-147, :177-182)."""
-
-    input_rows: int
-    after_null_drop: int
-    after_dedup: int
-    extras: dict[str, int] = field(default_factory=dict)
-
-    @property
-    def nulls_dropped(self) -> int:
-        return self.input_rows - self.after_null_drop
-
-    @property
-    def duplicates_dropped(self) -> int:
-        return self.after_null_drop - self.after_dedup
-
-
 def clean(
     df: DataFrame,
     coerce: dict[str, str] | None = None,
     *,
     dropna_subset: list[str] | None = None,
     dedup_subset: list[str] | None = None,
-    count_stats: bool = False,
-) -> tuple[DataFrame, CleanStats | None]:
+) -> DataFrame:
     """coerce -> dropna -> dedup, the reference's transform stage as one
-    lazy plan. ``count_stats`` adds the reference's per-stage row counts —
-    three actions, so off by default in production plans."""
+    lazy plan."""
     out = coerce_columns(df, coerce) if coerce else df
-    deduped = drop_exact_duplicates(
+    return drop_exact_duplicates(
         drop_null_rows(out, dropna_subset), dedup_subset
     )
-    if not count_stats:
-        return deduped, None
-    n0 = df.count()
-    n1 = drop_null_rows(out, dropna_subset).count()
-    n2 = deduped.count()
-    return deduped, CleanStats(n0, n1, n2)

@@ -556,20 +556,6 @@ def with_simhash(
     )
 
 
-def simhash_hex(text_col: Column | str, *, nibbles: int = 15) -> Column:
-    """Column-expression form of the SimHash fingerprint.
-
-    Fine for a single projection (one reference); for any plan that reuses
-    the fingerprint (banding, joins) use ``with_simhash`` instead — see its
-    docstring for the expression-duplication hazard.
-    """
-    return _counters_to_hex(
-        _simhash_counters(text_col, nibbles),
-        F.size(tokens(text_col)),
-        nibbles,
-    )
-
-
 def simhash_hamming(a: Column, b: Column, *, nibbles: int = 15) -> Column:
     """Hamming distance between two simhash hex strings (bit-level).
 

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_bigquery_pipeline_spark.functions.text import hex8_to_int
 from etl_bigquery_pipeline_spark.operators.caching import scoped_cache
 from etl_bigquery_pipeline_spark.operators.localrel import literal_frame
 
@@ -274,22 +275,16 @@ def doulion_coin(*, keep_num: int = 2, keep_den: int = 10):
     """Boolean keep/drop column for DOULION sparsification: md5 of the
     canonical edge key, so the coin is bit-reproducible on any engine
     (the repo's reservoir-sample discipline)."""
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.lit("tri:"),
-                    F.col("u").cast("string"),
-                    F.lit(":"),
-                    F.col("v").cast("string"),
-                )
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    h = hex8_to_int(
+        F.md5(
+            F.concat(
+                F.lit("tri:"),
+                F.col("u").cast("string"),
+                F.lit(":"),
+                F.col("v").cast("string"),
+            )
+        )
+    )
     return (h % keep_den) < keep_num
 
 
@@ -498,10 +493,7 @@ def negative_samples(
         .filter(F.col("cand") != F.col("probe"))
         .withColumn("__h", key)
     )
-    surv = cands.filter(
-        F.conv(F.substring("__h", 1, 8), 16, 10).cast("bigint")
-        <= F.lit(thresh)
-    )
+    surv = cands.filter(hex8_to_int("__h") <= F.lit(thresh))
     non_adj_s = scoped_cache(
         surv.withColumns({"u": cu, "v": cv})
         .join(edges, ["u", "v"], "left_anti")

@@ -20,7 +20,7 @@ cluster, where the slices become scheduler-visible tasks):
 through ``inline(array(struct(...), ...))``. No Python worker is ever
 consulted, the plan is a 1-partition local scan, and both hazards above
 disappear. Use it for small frames of plain literals (bool/int/float/
-str/None, each checked against its field's type). For rows carrying
+str/bytes/None, each checked against its field's type). For rows carrying
 exotic types (Decimal, nested arrays) keep ``spark.createDataFrame`` but
 pass ``sc.parallelize(rows, 1)`` so the frame is at least single-sliced.
 """
@@ -50,6 +50,8 @@ def _holds(dt: T.DataType, v) -> bool:
         return isinstance(v, int) and -half <= v < half
     if isinstance(dt, (T.FloatType, T.DoubleType)):
         return isinstance(v, (int, float))
+    if isinstance(dt, T.BinaryType):
+        return isinstance(v, (bytes, bytearray))
     return isinstance(dt, T.StringType) and isinstance(v, str)
 
 
@@ -62,10 +64,10 @@ def literal_frame(
     Each value is cast to its schema type, so it must be one the field
     holds exactly: ``bool`` for boolean, a non-bool ``int`` in range for
     integral fields, ``int``/``float`` for float/double, ``str`` for
-    string, and ``None`` anywhere. Anything else raises ``TypeError``
-    rather than truncating (``1.5`` into bigint) or turning into NULL
-    (``"abc"`` into bigint). A row whose length differs from the
-    schema's raises ``ValueError``."""
+    string, ``bytes`` for binary, and ``None`` anywhere. Anything else
+    raises ``TypeError`` rather than truncating (``1.5`` into bigint) or
+    turning into NULL (``"abc"`` into bigint). A row whose length differs
+    from the schema's raises ``ValueError``."""
     st = T.StructType.fromDDL(schema)
     rows = list(rows)
     for i, row in enumerate(rows):

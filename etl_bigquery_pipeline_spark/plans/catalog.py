@@ -6,9 +6,13 @@ The queries live in the catalog_p* part modules and register into
 decorator. This module imports the parts in registration order, which is
 the driver's sample derivation input (pinned by
 tests/test_oracle_parity.py), then moves the queries the driver has not
-covered yet to the front. Helpers are imported from the part module that
-defines them. Determinism/aliasing rules shared by all parts are
-documented in catalog_base.py.
+covered yet to the front. A part imports only library modules and
+catalog_base: Spark techniques two parts share live in the library
+(e.g. ``windows.exact_percentiles``, ``similarity.recall_ok``,
+``functions.text.hex8_to_int``), and their DuckDB spellings, the
+embedding panel and the oracle texts later queries extend live in
+catalog_base.py, next to the determinism/aliasing rules all parts
+follow.
 """
 
 from __future__ import annotations

@@ -14,6 +14,13 @@ from etl_bigquery_pipeline_spark.plans.catalog_base import (
     SparkSession,
     TX,
     Window,
+    _ANN_PANEL_MAX_ID,
+    _DIM,
+    _MINHASH_ORACLE,
+    _ann_panel,
+    _cosine_sql,
+    _planted_corpus,
+    _simhash_sql,
     _t,
     dedup,
     dq,
@@ -57,56 +64,13 @@ def dedup_exact_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- MinHash + LSH near-dup (planted near-duplicates) ----
 
-_MINHASH_ORACLE = """
-WITH docs AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000, text || ' zzz extra' FROM documents WHERE doc_id < 25),
-toks AS (
-  SELECT doc_id, list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') AS t
-  FROM docs),
-sh AS (
-  SELECT doc_id,
-         list_distinct([array_to_string(t[i:i+2], ' ')
-                        for i in generate_series(1, greatest(len(t) - 2, 1))]) AS s
-  FROM toks),
-sig AS (
-  -- four 8-hex (32-bit) minhash lanes per md5 digest (seed k uses digest
-  -- k//4, offset (k%4)*8) — mirrors _signatures_from_shingles
-  SELECT doc_id, s,
-         [list_min([substring(md5(CAST(k // 4 AS VARCHAR) || ':' || x),
-                              (k % 4) * 8 + 1, 8) for x in s])
-          for k in generate_series(0, 15)] AS sg
-  FROM sh),
-bands AS (
-  SELECT doc_id, gs.b AS band,
-         md5(CAST(gs.b AS VARCHAR) || '|' || array_to_string(sg[gs.b*4+1 : gs.b*4+4], ',')) AS band_key
-  FROM sig CROSS JOIN generate_series(0, 3) AS gs(b)),
-cand AS (
-  SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-  FROM bands l JOIN bands r
-    ON l.band_key = r.band_key AND l.band = r.band AND l.doc_id < r.doc_id),
-scored AS (
-  SELECT id_a, id_b,
-         round(len(list_intersect(a.s, b.s)) /
-               (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))), 6) AS jaccard_sim
-  FROM cand JOIN sh a ON cand.id_a = a.doc_id JOIN sh b ON cand.id_b = b.doc_id)
-SELECT id_a, id_b, jaccard_sim FROM scored WHERE jaccard_sim >= 0.6
-"""
-
-
 @query("minhash_near_dup_pairs", _MINHASH_ORACLE)
 def minhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(16)+LSH(4 bands) near-dup pairs, exact-Jaccard verified at
     >=0.6, over the corpus plus 25 planted near-duplicates (same text with
     a 2-token suffix). The oracle replays the identical md5-based pipeline
     in SQL — signatures match hash-for-hash."""
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    planted = d.filter(F.col("doc_id") < 25).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zzz extra")).alias("text"),
-    )
-    corpus = d.unionAll(planted)
+    corpus = _planted_corpus(spark, sf_dir)
     return dedup.minhash_near_dup_pairs(
         corpus, "doc_id", "text",
         num_hashes=16, bands=4, shingle_n=3, threshold=0.6,
@@ -151,19 +115,6 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _simhash_oracle(nibbles: int = 15) -> str:
-    hexs = "0123456789abcdef"
-    nib_exprs = []
-    for p in range(nibbles):
-        bits = []
-        for j in (3, 2, 1, 0):
-            ones = (
-                f"len(list_filter(th, h -> "
-                f"(((strpos('{hexs}', substring(h, {p + 1}, 1)) - 1) >> {j}) & 1) = 1))"
-            )
-            bits.append(f"(CASE WHEN 2 * {ones} > nt THEN 1 ELSE 0 END)")
-        nib = f"({bits[0]}*8 + {bits[1]}*4 + {bits[2]}*2 + {bits[3]})"
-        nib_exprs.append(f"substring('{hexs}', {nib} + 1, 1)")
-    concat = " || ".join(nib_exprs)
     return f"""
 WITH t AS (
   SELECT doc_id, list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') AS toks
@@ -172,7 +123,7 @@ h AS (
   SELECT doc_id, [substring(md5(x), 1, {nibbles}) for x in toks] AS th,
          len(toks) AS nt
   FROM t)
-SELECT doc_id, {concat} AS simhash FROM h
+SELECT doc_id, {_simhash_sql(nibbles)} AS simhash FROM h
 """
 
 
@@ -191,45 +142,6 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---- similarity search: brute-force cosine top-k ----
-
-_DIM = 64
-
-
-def _cosine_sql(a: str, b: str) -> str:
-    dot = (
-        f"list_sum([CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE) "
-        f"for i in generate_series(1, {_DIM})])"
-    )
-    na = (
-        f"sqrt(list_sum([CAST({a}[i] AS DOUBLE) * CAST({a}[i] AS DOUBLE) "
-        f"for i in generate_series(1, {_DIM})]))"
-    )
-    nb = (
-        f"sqrt(list_sum([CAST({b}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE) "
-        f"for i in generate_series(1, {_DIM})]))"
-    )
-    return f"round({dot} / ({na} * {nb}), 6)"
-
-
-# ANN/recall/eval query panels are FIXED-SIZE, not corpus-proportional:
-# every Nth vector UP TO AN ID CAP. A recall/top-k gate gets no more
-# statistically useful with a proportional panel, but its exact arm pays
-# |panel| x |corpus| — proportional panels make every such gate QUADRATIC
-# in scale. Measured at the sf10 (100x bench) rehearsal before the cap:
-# lsh_recall_vs_exact cost 298x for 100x data (1.5s -> 448s). The cap
-# binds only above ~sf5 (vec_id < 102400 covers every vector at driver
-# and bench scales, embeddings Nv = 20k x sf), so oracle results are
-# bit-identical where the driver compares; at 100x it pins the panels at
-# 4096/2048/1024 queries (moduli 25/50/100) and the exact arms go linear.
-_ANN_PANEL_MAX_ID = 102400
-
-
-def _ann_panel(emb: DataFrame, modulus: int) -> DataFrame:
-    return emb.filter(
-        (F.col("vec_id") % modulus == 0)
-        & (F.col("vec_id") < _ANN_PANEL_MAX_ID)
-    )
-
 
 _TOPK_SIM_ORACLE = f"""
 WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings

@@ -15,6 +15,12 @@ from etl_bigquery_pipeline_spark.plans.catalog_base import (
     SparkSession,
     TX,
     Window,
+    _DIM,
+    _ann_panel,
+    _hex8_to_int_sql,
+    _hex_digit_sql,
+    _planted_corpus,
+    _simhash_sql,
     _t,
     dedup,
     dq,
@@ -25,10 +31,6 @@ from etl_bigquery_pipeline_spark.plans.catalog_base import (
     similarity,
     widen_if_narrow,
     windows,
-)
-from etl_bigquery_pipeline_spark.plans.catalog_p2_llm_core import (
-    _DIM,
-    _ann_panel,
 )
 from pyspark.sql import Column
 
@@ -163,22 +165,6 @@ def ivf_cosine_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the local pytest bounds (tests/test_approx.py keeps the measured values).
 
 
-def _recall_ok(exact: DataFrame, approx: DataFrame, floor: float) -> DataFrame:
-    """(recall >= floor) over (query_id, neighbor_id) pair sets, one row."""
-    ex = exact.select("query_id", "neighbor_id")
-    ap = approx.select("query_id", "neighbor_id").withColumn("__hit", F.lit(1))
-    return (
-        ex.join(ap, ["query_id", "neighbor_id"], "left")
-        .agg(
-            (
-                F.sum(F.coalesce(F.col("__hit"), F.lit(0)))
-                / F.count(F.lit(1))
-            ).alias("__recall")
-        )
-        .select((F.col("__recall") >= floor).alias("recall_ok"))
-    )
-
-
 @query("lsh_recall_vs_exact", "SELECT true AS recall_ok")
 def lsh_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-enforceable LSH quality gate: recall of the multi-probe LSH
@@ -188,7 +174,7 @@ def lsh_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     while the bound itself is computed in Spark."""
     exact = QUERIES["similarity_topk"](spark, sf_dir)
     approx = QUERIES["lsh_cosine_topk"](spark, sf_dir)
-    return _recall_ok(exact, approx, 0.2)
+    return similarity.recall_ok(exact, approx, 0.2)
 
 
 @query("ivf_recall_vs_exact", "SELECT true AS recall_ok")
@@ -199,7 +185,7 @@ def ivf_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     fraction on clustered data)."""
     exact = QUERIES["similarity_topk"](spark, sf_dir)
     approx = QUERIES["ivf_cosine_topk"](spark, sf_dir)
-    return _recall_ok(exact, approx, 0.3)
+    return similarity.recall_ok(exact, approx, 0.3)
 
 
 @query("lsh_index_probe_matches", "SELECT true AS probe_matches")
@@ -705,93 +691,12 @@ FROM lineitem GROUP BY l_returnflag
 """
 
 
-def _hist_exact_percentiles(
-    df: DataFrame, gcol: str | None, vcol: str, ps: list, names: list
-) -> DataFrame:
-    """Exact interpolated (type-7 / quantile_cont) percentiles computed
-    over the VALUE-FREQUENCY HISTOGRAM instead of Spark's percentile()
-    buffer.
-
-    percentile()/median() hold a per-group value->count map inside each
-    partial-aggregation task — at sf10 (20M+ rows per l_returnflag
-    group, 4 exact percentiles at once) that buffer OOMed a 16 GiB
-    driver JVM (r8 sweep finding; BufferHolder.grow). The histogram
-    form is the scale-correct plan: groupBy(group, value) with map-side
-    combine (state bounded by DISTINCT values, not rows), a cumulative
-    count over the per-group sorted distinct values (window input is
-    the histogram, not the data), then each target order statistic
-    located by its cumulative range and interpolated:
-    target = (n-1)*p, value = x_lo + (x_hi - x_lo) * frac — exactly
-    DuckDB's quantile_cont.
-
-    The cumulative count runs through ``windows.with_running_sums``
-    (range-partition on (group, value) + exact per-partition offsets;
-    integer counts merge exactly, so the result is bit-identical), with
-    ``gcol=None`` meaning UNGROUPED percentiles. Neither an ordered
-    global window nor ``Window.partitionBy(gcol)``: the histogram of a
-    near-continuous column (o_totalprice ~15M distinct at sf10) is
-    corpus-proportional, and a few groups (3 for l_returnflag) would
-    funnel it through one window task per group — the scale-killer
-    class the plan lint exists to block (r8 verdict What's-wrong #1).
-
-    NULLs in ``vcol`` are dropped first, matching percentile() /
-    quantile_cont's null-ignoring semantics — a NULL histogram bucket
-    would otherwise be counted in ``__n`` yet sort first in the
-    cumulative order, silently shifting every percentile (r8 ADVICE).
-    """
-    df = df.filter(F.col(vcol).isNotNull())
-    key = [gcol] if gcol else []
-    hist = df.groupBy(*key, F.col(vcol).alias("__v")).agg(
-        F.count(F.lit(1)).alias("__c")
-    )
-    hist, _ = windows.with_running_sums(hist, ["__v"], ["__c"], group_by=key)
-    hist = hist.withColumnRenamed("cum___c", "__cum")
-    totals = hist.groupBy(*key).agg(F.sum("__c").alias("__n"))
-    if gcol:
-        # null-safe: groupBy keeps NULL as its own group, so the totals
-        # join must not drop it (plain `=` would silently lose every
-        # NULL-group row vs percentile()'s semantics)
-        hist = hist.join(
-            F.broadcast(totals.withColumnRenamed(gcol, "__g")),
-            F.col(gcol).eqNullSafe(F.col("__g")),
-        ).drop("__g")
-    else:
-        hist = hist.crossJoin(F.broadcast(totals))
-    aggs = []
-    for p, nm in zip(ps, names):
-        tgt = (F.col("__n") - 1) * F.lit(float(p))
-        lo, hi = F.floor(tgt), F.ceil(tgt)
-        at = lambda k: F.max(  # noqa: E731 — value holding index k
-            F.when(
-                ((F.col("__cum") - F.col("__c")) <= k) & (k < F.col("__cum")),
-                F.col("__v"),
-            )
-        )
-        aggs += [
-            at(lo).alias(f"__{nm}_lo"),
-            at(hi).alias(f"__{nm}_hi"),
-            F.max(tgt - lo).alias(f"__{nm}_fr"),  # constant per group
-        ]
-    out = hist.groupBy(*key).agg(*aggs)
-    return out.select(
-        *key,
-        *[
-            (
-                F.col(f"__{nm}_lo")
-                + (F.col(f"__{nm}_hi") - F.col(f"__{nm}_lo"))
-                * F.col(f"__{nm}_fr")
-            ).alias(nm)
-            for nm in names
-        ],
-    )
-
-
 @query("stats_aggregates", _STATS_ORACLE)
 def stats_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles/median + second-moment aggregates
     (corr/covar/stddev/var, rounded — moment sums are order-sensitive in
     the last bits). Percentiles are exact quantile_cont values computed
-    via `_hist_exact_percentiles` (value-frequency histogram): Spark's
+    via `windows.exact_percentiles` (value-frequency histogram): Spark's
     percentile()/median() buffer a per-group value map inside each
     task, which the r8 sf10 sweep measured dying at 20M+ rows per group
     (Java heap OOM even at 16g) — the histogram plan keeps state
@@ -807,11 +712,11 @@ def stats_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.stddev_samp("l_extendedprice"), 6).alias("price_stddev"),
         F.round(F.var_samp("l_extendedprice"), 4).alias("price_var"),
     )
-    price_p = _hist_exact_percentiles(
+    price_p = windows.exact_percentiles(
         li, "l_returnflag", "l_extendedprice", [0.5, 0.25, 0.75],
         ["p50", "p25", "p75"],
     )
-    qty_m = _hist_exact_percentiles(
+    qty_m = windows.exact_percentiles(
         li, "l_returnflag", "l_quantity", [0.5], ["qty_median"]
     )
     return (
@@ -896,24 +801,10 @@ def posexplode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _simhash_pairs_oracle(nibbles: int = 15, band_nibbles: int = 4, max_h: int = 8) -> str:
-    hexs = "0123456789abcdef"
-    # simhash expression over CTE columns th (token-hash list) / nt (count)
-    nib_exprs = []
-    for p in range(nibbles):
-        bits = []
-        for j in (3, 2, 1, 0):
-            ones = (
-                f"len(list_filter(th, h -> "
-                f"(((strpos('{hexs}', substring(h, {p + 1}, 1)) - 1) >> {j}) & 1) = 1))"
-            )
-            bits.append(f"(CASE WHEN 2 * {ones} > nt THEN 1 ELSE 0 END)")
-        nib = f"({bits[0]}*8 + {bits[1]}*4 + {bits[2]}*2 + {bits[3]})"
-        nib_exprs.append(f"substring('{hexs}', {nib} + 1, 1)")
-    sh_expr = " || ".join(nib_exprs)
     n_bands = nibbles // band_nibbles
     hamming = " + ".join(
-        f"bit_count(xor(strpos('{hexs}', substring(sha, {p + 1}, 1)) - 1, "
-        f"strpos('{hexs}', substring(shb, {p + 1}, 1)) - 1))"
+        f"bit_count(xor({_hex_digit_sql('sha', p + 1)}, "
+        f"{_hex_digit_sql('shb', p + 1)}))"
         for p in range(nibbles)
     )
     return f"""
@@ -928,7 +819,7 @@ h AS (
   SELECT doc_id, [substring(md5(x), 1, {nibbles}) for x in toks] AS th,
          len(toks) AS nt
   FROM t),
-s AS (SELECT doc_id, {sh_expr} AS sh FROM h),
+s AS (SELECT doc_id, {_simhash_sql(nibbles)} AS sh FROM h),
 bands AS (
   SELECT doc_id, sh, gs.b AS band, substring(sh, gs.b * {band_nibbles} + 1, {band_nibbles}) AS bk
   FROM s CROSS JOIN generate_series(0, {n_bands - 1}) AS gs(b)),
@@ -947,12 +838,7 @@ def simhash_near_dup_pairs_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs over the corpus + 25 planted near-dups:
     banded hex-prefix blocking, full Hamming verification <= 8 bits. The
     oracle replays the identical bit table in SQL."""
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    planted = d.filter(F.col("doc_id") < 25).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zzz extra")).alias("text"),
-    )
-    corpus = d.unionAll(planted)
+    corpus = _planted_corpus(spark, sf_dir)
     out = dedup.simhash_near_dup_pairs(
         corpus, "doc_id", "text", max_hamming=8, nibbles=15, band_nibbles=4,
         # exact-recall parity with the SQL replay — see minhash note
@@ -1021,18 +907,12 @@ def correlated_subqueries(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _split_oracle() -> str:
-    # hex -> int arithmetically (DuckDB has no conv()): sum of nibble*16^k
-    hexs = "0123456789abcdef"
-    terms = " + ".join(
-        f"(strpos('{hexs}', substring(h, {i + 1}, 1)) - 1) * {16 ** (7 - i)}"
-        for i in range(8)
-    )
     return f"""
 WITH b AS (
   SELECT doc_id,
          substring(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 8) AS h
   FROM documents),
-v AS (SELECT doc_id, ({terms}) % 10000 AS bucket FROM b),
+v AS (SELECT doc_id, ({_hex8_to_int_sql('h')}) % 10000 AS bucket FROM b),
 s AS (
   SELECT doc_id,
          CASE WHEN bucket < 8000 THEN 'train'

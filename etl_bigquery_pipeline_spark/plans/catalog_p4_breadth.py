@@ -18,26 +18,23 @@ from etl_bigquery_pipeline_spark.plans.catalog_base import (
     SparkSession,
     TX,
     Window,
+    _CLUSTERS_ORACLE,
+    _DIM,
+    _ann_panel,
+    _hex8_to_int_sql,
+    _planted_corpus,
     _t,
     dedup,
     layout,
-    pq,
     literal_frame,
+    pq,
     query,
     scd,
     scoped_cache,
     sessionize,
+    similarity,
     widen_if_narrow,
     windows,
-)
-from etl_bigquery_pipeline_spark.plans.catalog_p2_llm_core import (
-    _DIM,
-    _MINHASH_ORACLE,
-    _ann_panel,
-)
-from etl_bigquery_pipeline_spark.plans.catalog_p3_approx_gates import (
-    _hist_exact_percentiles,
-    _recall_ok,
 )
 
 # ===================================================================
@@ -135,7 +132,7 @@ FROM lineitem GROUP BY l_returnflag
 def percentile_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles per return flag (identical to
     DuckDB `quantile_cont`, linear interpolation), computed via the
-    value-frequency histogram (`_hist_exact_percentiles`): Spark's
+    value-frequency histogram (`windows.exact_percentiles`): Spark's
     percentile() holds a per-group value->count map inside every
     partial-aggregation task — the exact plan that OOMed
     stats_aggregates at sf10 (r8 sweep; this query survived at 77s,
@@ -145,7 +142,7 @@ def percentile_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     one pass) and gate it like approx_distinct_error."""
     li = _t(spark, sf_dir, "lineitem")
     names = ["p25", "p50", "p75", "p99"]
-    g = _hist_exact_percentiles(
+    g = windows.exact_percentiles(
         li, "l_returnflag", "l_extendedprice", [0.25, 0.5, 0.75, 0.99], names
     )
     return g.select(
@@ -323,7 +320,7 @@ def approx_percentile_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     # values) — percentile()'s per-task buffer is the r8 sf10 OOM class;
     # gcol=None routes the cumulative count through
     # with_running_sums ungrouped (no single-partition window)
-    exact = _hist_exact_percentiles(
+    exact = windows.exact_percentiles(
         li, None, "l_extendedprice", [0.5], ["__exact"]
     )
     approx = li.agg(
@@ -462,29 +459,6 @@ def sketch_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- near-dup cluster closure: pairs -> components -> canonicals ----
 
-# The oracle reuses the minhash pair replay verbatim and closes it
-# transitively with a recursive CTE: reach(node, label) holds every label
-# reachable from node over the (symmetric) edge set, so MIN(label) per
-# node is the component minimum — exactly near_dup_clusters' output.
-_CLUSTERS_ORACLE = (
-    _MINHASH_ORACLE.replace("WITH docs AS", "WITH RECURSIVE docs AS").replace(
-        "SELECT id_a, id_b, jaccard_sim FROM scored WHERE jaccard_sim >= 0.6",
-        """pairs AS (
-  SELECT id_a, id_b FROM scored WHERE jaccard_sim >= 0.6),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b, id_a FROM pairs),
-reach(node, label) AS (
-  SELECT src, src FROM edges
-  UNION
-  SELECT e.src, r.label FROM edges e JOIN reach r ON e.dst = r.node)
-SELECT node AS doc_id, MIN(label) AS cluster_id FROM reach GROUP BY node""",
-    ).replace("FROM cand JOIN sh a ON cand.id_a = a.doc_id JOIN sh b ON cand.id_b = b.doc_id)",
-              "FROM cand JOIN sh a ON cand.id_a = a.doc_id JOIN sh b ON cand.id_b = b.doc_id),")
-)
-
-
 @query("minhash_cluster_canonicals", _CLUSTERS_ORACLE)
 def minhash_cluster_canonicals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERS, not just pairs: minhash LSH pairs closed into
@@ -492,12 +466,7 @@ def minhash_cluster_canonicals(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup.near_dup_clusters), the decision layer a production dedup
     pipeline needs because pairwise matches chain (A~B~C must keep ONE
     document, even though A and C never matched directly)."""
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    planted = d.filter(F.col("doc_id") < 25).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zzz extra")).alias("text"),
-    )
-    corpus = d.unionAll(planted)
+    corpus = _planted_corpus(spark, sf_dir)
     pairs = dedup.minhash_near_dup_pairs(
         corpus, "doc_id", "text",
         num_hashes=16, bands=4, shingle_n=3, threshold=0.6,
@@ -656,7 +625,7 @@ def pq_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bar sits above the IVF gate's 0.3)."""
     exact = QUERIES["similarity_topk"](spark, sf_dir)
     approx = QUERIES["pq_cosine_topk"](spark, sf_dir)
-    return _recall_ok(
+    return similarity.recall_ok(
         exact,
         approx.select("query_id", "neighbor_id"),
         0.7,
@@ -669,22 +638,12 @@ def pq_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===================================================================
 
 
-def _hex8_to_int(h: str) -> str:
-    """DuckDB SQL turning an 8-hex-char column ``h`` into its integer
-    value (DuckDB has no conv()): sum of nibble * 16^position."""
-    hexs = "0123456789abcdef"
-    return " + ".join(
-        f"(strpos('{hexs}', substring({h}, {i + 1}, 1)) - 1) * {16 ** (7 - i)}"
-        for i in range(8)
-    )
-
-
 _MIXTURE_ORACLE = f"""
 WITH b AS (
   SELECT source,
          substring(md5('mix:' || CAST(doc_id AS VARCHAR)), 1, 8) AS h
   FROM documents),
-v AS (SELECT source, ({_hex8_to_int('h')}) % 10000 AS bucket FROM b),
+v AS (SELECT source, ({_hex8_to_int_sql('h')}) % 10000 AS bucket FROM b),
 s AS (
   SELECT source FROM v
   WHERE bucket < CASE WHEN CAST(substring(source, 4, 10) AS INT) % 2 = 0
@@ -957,11 +916,11 @@ def median_mode_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     per (status, priority) — a tiny key space — then rank by (count desc,
     value asc). Two narrow shuffles over low-cardinality keys. The
     median runs the value-frequency histogram plan
-    (`_hist_exact_percentiles`), not F.median's per-task value buffer:
+    (`windows.exact_percentiles`), not F.median's per-task value buffer:
     o_totalprice is near-continuous over a raw fact table — the r8
     sf10 OOM class (r8 verdict ask #2)."""
     o = _t(spark, sf_dir, "orders")
-    med = _hist_exact_percentiles(
+    med = windows.exact_percentiles(
         o, "o_orderstatus", "o_totalprice", [0.5], ["__med"]
     )
     md = (
@@ -1184,9 +1143,9 @@ hx AS (
          substring(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 8) AS hs
   FROM kept),
 mixed AS (
-  SELECT source, n_tok, ({_hex8_to_int('hs')}) % 10000 AS sb
+  SELECT source, n_tok, ({_hex8_to_int_sql('hs')}) % 10000 AS sb
   FROM hx
-  WHERE ({_hex8_to_int('hm')}) % 10000
+  WHERE ({_hex8_to_int_sql('hm')}) % 10000
         < CASE WHEN CAST(substring(source, 4, 10) AS INT) % 2 = 0
                THEN 10000 ELSE 2500 END),
 s AS (
@@ -1331,12 +1290,12 @@ def equidepth_price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange for balanced buckets."""
     o = _t(spark, sf_dir, "orders").select("o_totalprice")
     # exact quartiles via the value-frequency histogram (see
-    # _hist_exact_percentiles): percentile()'s per-task value buffer is
+    # windows.exact_percentiles): percentile()'s per-task value buffer is
     # the r8 sf10 OOM class; gcol=None keeps the corpus-proportional
     # cumulative count range-partitioned (with_running_sums) —
     # o_totalprice is near-continuous (~15M distinct at sf10), so a
     # single-partition window over its histogram is a serial funnel
-    qs = _hist_exact_percentiles(
+    qs = windows.exact_percentiles(
         o, None, "o_totalprice", [0.25, 0.50, 0.75], ["q1", "q2", "q3"]
     )
     bucket = (
@@ -1554,7 +1513,7 @@ WITH w AS (
   FROM documents),
 kept AS (
   SELECT source, n_chars FROM w
-  WHERE ({_hex8_to_int('h')}) % 10000 < wt * 10000)
+  WHERE ({_hex8_to_int_sql('h')}) % 10000 < wt * 10000)
 SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
        round(AVG(n_chars), 4) AS avg_chars
 FROM kept GROUP BY source
@@ -2231,12 +2190,12 @@ def grouped_approx_percentile_gate(spark: SparkSession, sf_dir: str) -> DataFram
     EVERY group — the per-group mergeability property that makes sketch
     percentiles safe to partial-aggregate across 1000 executors. The
     exact arm runs the value-frequency histogram plan
-    (`_hist_exact_percentiles`) rather than percentile()'s per-task
+    (`windows.exact_percentiles`) rather than percentile()'s per-task
     value buffer — the r8 sf10 OOM class (r8 verdict ask #2); the
     approx arm stays the one-pass sketch under test. The two arms join
     on the 3-row group key (broadcast)."""
     li = _t(spark, sf_dir, "lineitem")
-    exact = _hist_exact_percentiles(
+    exact = windows.exact_percentiles(
         li, "l_returnflag", "l_extendedprice", [0.5, 0.95], ["e50", "e95"]
     )
     approx = li.groupBy("l_returnflag").agg(
@@ -2960,14 +2919,14 @@ def rfm_segment_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     ).transform(scoped_cache)
     th = (
-        _hist_exact_percentiles(base, None, "recency", [0.5], ["r_med"])
+        windows.exact_percentiles(base, None, "recency", [0.5], ["r_med"])
         .crossJoin(
-            _hist_exact_percentiles(
+            windows.exact_percentiles(
                 base, None, "frequency", [0.5], ["f_med"]
             )
         )
         .crossJoin(
-            _hist_exact_percentiles(
+            windows.exact_percentiles(
                 base, None, "monetary", [0.5], ["m_med"]
             )
         )

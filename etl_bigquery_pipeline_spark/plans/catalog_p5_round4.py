@@ -13,32 +13,28 @@ from etl_bigquery_pipeline_spark.plans.catalog_base import (
     F,
     QUERIES,
     SparkSession,
+    TX,
     Window,
+    _ANN_PANEL_MAX_ID,
+    _CLUSTERS_ORACLE,
+    _DIM,
+    _LOGREG_ORACLE,
+    _MINHASH_ORACLE,
+    _ann_panel,
+    _cosine_sql,
+    _hex8_to_int_sql,
+    _planted_corpus,
     _t,
     dedup,
     exact_sum,
+    literal_frame,
     norm,
     quality_model,
-    literal_frame,
     query,
     scoped_cache,
     sessionize,
     similarity,
     windows,
-)
-from etl_bigquery_pipeline_spark.plans.catalog_p2_llm_core import (
-    _ANN_PANEL_MAX_ID,
-    _DIM,
-    _MINHASH_ORACLE,
-    _ann_panel,
-    _cosine_sql,
-)
-from etl_bigquery_pipeline_spark.plans.catalog_p3_approx_gates import (
-    _recall_ok,
-)
-from etl_bigquery_pipeline_spark.plans.catalog_p4_breadth import (
-    _CLUSTERS_ORACLE,
-    _hex8_to_int,
 )
 
 # ===================================================================
@@ -208,7 +204,7 @@ WITH b AS (
   SELECT source,
          substring(md5('fold:' || CAST(doc_id AS VARCHAR)), 1, 8) AS h
   FROM documents),
-f AS (SELECT source, ({_hex8_to_int('h')}) % 5 AS fold FROM b)
+f AS (SELECT source, ({_hex8_to_int_sql('h')}) % 5 AS fold FROM b)
 SELECT source, CAST(fold AS BIGINT) AS fold,
        CAST(COUNT(*) AS BIGINT) AS n_docs
 FROM f GROUP BY source, fold
@@ -224,13 +220,9 @@ def stratified_kfold_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow projection + one grouped count."""
     d = _t(spark, sf_dir, "documents")
     fold = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("fold:"), F.col("doc_id").cast("string"))),
-                1, 8,
-            ),
-            16, 10,
-        ).cast("bigint") % 5
+        TX.hex8_to_int(
+            F.md5(F.concat(F.lit("fold:"), F.col("doc_id").cast("string")))
+        ) % 5
     )
     return (
         d.select("source", fold.alias("fold"))
@@ -486,12 +478,7 @@ def lsh_false_positive_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands/narrower rows => recall up, fp_rate up). Same banded pipeline
     and SQL replay as minhash_near_dup_pairs; threshold=0 keeps every
     candidate so the audit sees them all."""
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    planted = d.filter(F.col("doc_id") < 25).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zzz extra")).alias("text"),
-    )
-    corpus = d.unionAll(planted)
+    corpus = _planted_corpus(spark, sf_dir)
     scored = dedup.minhash_near_dup_pairs(
         corpus, "doc_id", "text",
         num_hashes=16, bands=4, shingle_n=3, threshold=0.0,
@@ -732,73 +719,6 @@ def session_duration_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- model-based quality filtering: distributed logistic regression ----
 
-_LOGREG_FEATS_CTE = """
-base AS (
-  SELECT doc_id, n_chars,
-         list_filter(string_split_regex(text, '\\s+'), t -> t <> '') AS toks
-  FROM documents),
-feats AS (
-  SELECT doc_id,
-         round(ln(1 + n_chars), 6) AS x1,
-         round(ln(1 + len(toks)), 6) AS x2,
-         round(CAST(len(list_distinct(toks)) AS DOUBLE)
-               / CAST(greatest(len(toks), 1) AS DOUBLE), 6) AS x3,
-         CASE WHEN n_chars >= 150 THEN CAST(1.0 AS DOUBLE)
-              ELSE CAST(0.0 AS DOUBLE) END AS y
-  FROM base)
-"""
-
-_LOGREG_ORACLE = f"""
-WITH {_LOGREG_FEATS_CTE},
-gr1 AS (
-  SELECT round(avg(y - 0.5), 6) AS g0,
-         round(avg((y - 0.5) * x1), 6) AS g1,
-         round(avg((y - 0.5) * x2), 6) AS g2,
-         round(avg((y - 0.5) * x3), 6) AS g3
-  FROM feats),
-w1 AS (
-  SELECT 0.0 + 0.1 * g0 AS w0, 0.0 + 0.1 * g1 AS w1,
-         0.0 + 0.1 * g2 AS w2, 0.0 + 0.1 * g3 AS w3
-  FROM gr1),
-p2 AS (
-  SELECT f.doc_id, f.x1, f.x2, f.x3, f.y,
-         round(1.0 / (1.0 + exp(-(w.w0 + w.w1 * f.x1 + w.w2 * f.x2
-                                  + w.w3 * f.x3))), 6) AS p
-  FROM feats f CROSS JOIN w1 w),
-gr2 AS (
-  SELECT round(avg(y - p), 6) AS g0,
-         round(avg((y - p) * x1), 6) AS g1,
-         round(avg((y - p) * x2), 6) AS g2,
-         round(avg((y - p) * x3), 6) AS g3
-  FROM p2),
-w2 AS (
-  SELECT w.w0 + 0.1 * g.g0 AS w0, w.w1 + 0.1 * g.g1 AS w1,
-         w.w2 + 0.1 * g.g2 AS w2, w.w3 + 0.1 * g.g3 AS w3
-  FROM w1 w CROSS JOIN gr2 g),
-p3 AS (
-  SELECT f.doc_id, f.x1, f.x2, f.x3, f.y,
-         round(1.0 / (1.0 + exp(-(w.w0 + w.w1 * f.x1 + w.w2 * f.x2
-                                  + w.w3 * f.x3))), 6) AS p
-  FROM feats f CROSS JOIN w2 w),
-gr3 AS (
-  SELECT round(avg(y - p), 6) AS g0,
-         round(avg((y - p) * x1), 6) AS g1,
-         round(avg((y - p) * x2), 6) AS g2,
-         round(avg((y - p) * x3), 6) AS g3
-  FROM p3),
-w3 AS (
-  SELECT w.w0 + 0.1 * g.g0 AS w0, w.w1 + 0.1 * g.g1 AS w1,
-         w.w2 + 0.1 * g.g2 AS w2, w.w3 + 0.1 * g.g3 AS w3
-  FROM w2 w CROSS JOIN gr3 g),
-scored AS (
-  SELECT f.doc_id,
-         round(1.0 / (1.0 + exp(-(w.w0 + w.w1 * f.x1 + w.w2 * f.x2
-                                  + w.w3 * f.x3))), 6) AS score
-  FROM feats f CROSS JOIN w3 w)
-SELECT doc_id, score, score >= 0.5 AS pred_high_quality FROM scored
-"""
-
-
 @query("logreg_quality_scores", _LOGREG_ORACLE)
 def logreg_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model-based quality filter (CCNet/FineWeb-style): train a logistic
@@ -870,23 +790,6 @@ def bloom_pruned_join_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- Matryoshka-style truncated-dim prefilter ANN ----
 
-
-def _cosine_sql_dims(a: str, b: str, dims: int) -> str:
-    dot_ = (
-        f"list_sum([CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE) "
-        f"for i in generate_series(1, {dims})])"
-    )
-    na = (
-        f"sqrt(list_sum([CAST({a}[i] AS DOUBLE) * CAST({a}[i] AS DOUBLE) "
-        f"for i in generate_series(1, {dims})]))"
-    )
-    nb = (
-        f"sqrt(list_sum([CAST({b}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE) "
-        f"for i in generate_series(1, {dims})]))"
-    )
-    return f"round({dot_} / ({na} * {nb}), 6)"
-
-
 _TRUNC_PREFIX_DIMS = 16
 _TRUNC_TOPK_ORACLE = f"""
 WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
@@ -894,7 +797,7 @@ WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
 c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
 s1 AS (
   SELECT query_id, neighbor_id,
-         {_cosine_sql_dims("qv", "cv", _TRUNC_PREFIX_DIMS)} AS psim
+         {_cosine_sql("qv", "cv", _TRUNC_PREFIX_DIMS)} AS psim
   FROM q CROSS JOIN c WHERE query_id <> neighbor_id),
 r1 AS (
   SELECT query_id, neighbor_id,
@@ -960,7 +863,7 @@ def truncated_dim_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_similarity.py)."""
     exact = QUERIES["similarity_topk"](spark, sf_dir)
     approx = QUERIES["truncated_dim_topk"](spark, sf_dir)
-    return _recall_ok(
+    return similarity.recall_ok(
         exact.select("query_id", "neighbor_id"),
         approx.select("query_id", "neighbor_id"),
         0.15,
@@ -1489,11 +1392,6 @@ def unigram_xent_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _leakage_safe_split_oracle() -> str:
     """Extend the cluster-closure oracle: split by CLUSTER key so near-dup
     clusters can never straddle train/test."""
-    hexs = "0123456789abcdef"
-    terms = " + ".join(
-        f"(strpos('{hexs}', substring(h, {i + 1}, 1)) - 1) * {16 ** (7 - i)}"
-        for i in range(8)
-    )
     tail = (
         "SELECT node AS doc_id, MIN(label) AS cluster_id "
         "FROM reach GROUP BY node"
@@ -1510,7 +1408,7 @@ bkt AS (
   SELECT doc_id, gkey,
          substring(md5('split:' || CAST(gkey AS VARCHAR)), 1, 8) AS h
   FROM assigned),
-vv AS (SELECT doc_id, gkey, ({terms}) % 10000 AS bucket FROM bkt),
+vv AS (SELECT doc_id, gkey, ({_hex8_to_int_sql('h')}) % 10000 AS bucket FROM bkt),
 ss AS (
   SELECT doc_id, gkey,
          CASE WHEN bucket < 8000 THEN 'train'
@@ -1538,12 +1436,7 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     (zero by construction, verified through both engines)."""
     from etl_bigquery_pipeline_spark.operators import sampling
 
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    planted = d.filter(F.col("doc_id") < 25).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zzz extra")).alias("text"),
-    )
-    corpus = d.unionAll(planted)
+    corpus = _planted_corpus(spark, sf_dir)
     pairs = dedup.minhash_near_dup_pairs(
         corpus, "doc_id", "text",
         num_hashes=16, bands=4, shingle_n=3, threshold=0.6,

@@ -14,27 +14,22 @@ from etl_bigquery_pipeline_spark.plans.catalog_base import (
     SparkSession,
     TX,
     Window,
+    _ANN_PANEL_MAX_ID,
+    _LOGREG_ORACLE,
+    _ann_panel,
+    _cosine_sql,
+    _hex8_to_int_sql,
+    _planted_corpus,
     _t,
     dedup,
     dq,
     exact_sum,
     quality_model,
-    literal_frame,
     query,
     scoped_cache,
     similarity,
     windows,
 )
-from etl_bigquery_pipeline_spark.plans.catalog_p2_llm_core import (
-    _ANN_PANEL_MAX_ID,
-    _ann_panel,
-    _cosine_sql,
-)
-from etl_bigquery_pipeline_spark.plans.catalog_p3_approx_gates import (
-    _hist_exact_percentiles,
-)
-from etl_bigquery_pipeline_spark.plans.catalog_p4_breadth import _hex8_to_int
-from etl_bigquery_pipeline_spark.plans.catalog_p5_round4 import _LOGREG_ORACLE
 
 # ===================================================================
 # Round-4 wave 6 — prefix-filter similarity join, hard negatives,
@@ -92,12 +87,7 @@ def prefix_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB pairs, sweep-verified); at sf1.0 it is 1.25e9 pairs and is
     the one deliberate skip in the sf1.0 full-catalog sweep (SCALE.md)
     — the Spark side's sf1.0/sf10 behavior is measured there instead."""
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    planted = d.filter(F.col("doc_id") < 25).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zzz extra")).alias("text"),
-    )
-    corpus = d.unionAll(planted)
+    corpus = _planted_corpus(spark, sf_dir)
     return dedup.prefix_filter_jaccard_pairs(
         corpus, "doc_id", "text", threshold=0.5, shingle_n=3
     )
@@ -168,12 +158,12 @@ def corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
     two distinct-aggregates expand the scan 2x map-side but group to a
     single row — the shuffle is a handful of partial states, so the
     scan cost dominates at any scale. The length percentiles run on the
-    histogram plan (`_hist_exact_percentiles`): percentile()'s per-task
+    histogram plan (`windows.exact_percentiles`): percentile()'s per-task
     value buffer over an unaggregated corpus column is the r8 sf10 OOM
     class, and the extra pass it costs here is a pruned single-column
     (n_chars) scan — cheap next to the text-bearing main aggregate."""
     d = _t(spark, sf_dir, "documents")
-    pcts = _hist_exact_percentiles(
+    pcts = windows.exact_percentiles(
         d, None, "n_chars", [0.5, 0.9], ["__p50", "__p90"]
     )
     agg = d.agg(
@@ -1180,7 +1170,7 @@ def deterministic_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RESERVOIR_ORACLE = f"""
 WITH s AS (
   SELECT doc_id, source, n_chars,
-         round(-ln((({_hex8_to_int(
+         round(-ln((({_hex8_to_int_sql(
              "substring(md5('ares:' || CAST(doc_id AS VARCHAR)), 1, 8)"
          )}) % 100000 + 1) / 100001.0) / n_chars, 6) AS score
   FROM documents),
@@ -2020,7 +2010,7 @@ def imputed_acctbal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # grouped exact median on the histogram plan — percentile()'s
     # per-task value buffer over an unaggregated base table is the r8
     # sf10 OOM class (bit-identical interpolated values either way)
-    med = _hist_exact_percentiles(
+    med = windows.exact_percentiles(
         c.select("c_mktsegment", "bal"), "c_mktsegment", "bal",
         [0.5], ["seg_median"],
     )

@@ -14,26 +14,17 @@ from etl_bigquery_pipeline_spark.plans.catalog_base import (
     SparkSession,
     TX,
     Window,
-    _t,
-    exact_sum,
-    literal_frame,
-    query,
-    scoped_cache,
-    widen_if_narrow,
-    windows,
-)
-from etl_bigquery_pipeline_spark.plans.catalog_p2_llm_core import (
     _ANN_PANEL_MAX_ID,
     _DIM,
     _ann_panel,
     _cosine_sql,
-)
-from etl_bigquery_pipeline_spark.plans.catalog_p3_approx_gates import (
-    _hist_exact_percentiles,
-)
-from etl_bigquery_pipeline_spark.plans.catalog_p4_breadth import _hex8_to_int
-from etl_bigquery_pipeline_spark.plans.catalog_p5_round4 import (
-    _cosine_sql_dims,
+    _hex8_to_int_sql,
+    _t,
+    exact_sum,
+    query,
+    scoped_cache,
+    widen_if_narrow,
+    windows,
 )
 
 # ===================================================================
@@ -106,7 +97,7 @@ def winsorized_price_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-task value buffer over an unaggregated base table is the r8
     sf10 OOM class); everything else is a scan + segment groupBy."""
     c = _t(spark, sf_dir, "customer")
-    b = _hist_exact_percentiles(
+    b = windows.exact_percentiles(
         c, None, "c_acctbal", [0.05, 0.95], ["lo", "hi"]
     )
     w = c.crossJoin(F.broadcast(b)).select(
@@ -254,7 +245,7 @@ def acctbal_quartiles_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     IQR falls out as a projection. At 100 TB you reach for
     approx_percentile — the gate query quantifies what that costs."""
     c = _t(spark, sf_dir, "customer")
-    g = _hist_exact_percentiles(
+    g = windows.exact_percentiles(
         c, "c_mktsegment", "c_acctbal", [0.25, 0.50, 0.75],
         ["q1", "q2", "q3"],
     )
@@ -1076,7 +1067,7 @@ def click_exposure_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _row_fp_sql(cols: str) -> str:
     h = f"substring(md5({cols}), 1, 8)"
-    return _hex8_to_int(h)
+    return _hex8_to_int_sql(h)
 
 
 _DATASET_FP_ORACLE = f"""
@@ -1107,9 +1098,7 @@ def dataset_content_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     storage-format float formatting, not value changes."""
     def fp(df, cols):
         concat = F.concat_ws("|", *cols)
-        h = (
-            F.conv(F.substring(F.md5(concat), 1, 8), 16, 10).cast("bigint")
-        )
+        h = TX.hex8_to_int(F.md5(concat))
         return df.agg(
             F.count(F.lit(1)).cast("bigint").alias("n_rows"),
             F.sum(h).cast("bigint").alias("fingerprint"),
@@ -1276,7 +1265,7 @@ def jl_projection_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # per-vector ratios are corpus-proportional: exact medians run on
     # the histogram plan, not percentile()'s per-task value buffer
-    med_f = _hist_exact_percentiles(ratios, None, "r", [0.5], ["m"])
+    med_f = windows.exact_percentiles(ratios, None, "r", [0.5], ["m"])
 
     a = p.select(
         F.col("vec_id").alias("ia"),
@@ -1301,7 +1290,7 @@ def jl_projection_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one driver action instead of two: both percentile frames crossJoin
     # into a single plan and the bounds evaluate in-plan (each helper
     # still pays its internal running-sum offset collect)
-    q = _hist_exact_percentiles(
+    q = windows.exact_percentiles(
         dist, None, "r", [0.05, 0.5, 0.95], ["p05", "p50", "p95"]
     )
     return med_f.crossJoin(q).select(
@@ -1383,8 +1372,8 @@ WITH u AS (
   SELECT DISTINCT user_id FROM events WHERE user_id IS NOT NULL),
 pos AS (
   SELECT user_id,
-         (({_hex8_to_int("substring(md5('lat:' || CAST(user_id AS VARCHAR)), 1, 8)")}) % 120000) / 1000.0 - 60.0 AS lat,
-         (({_hex8_to_int("substring(md5('lon:' || CAST(user_id AS VARCHAR)), 1, 8)")}) % 360000) / 1000.0 - 180.0 AS lon
+         (({_hex8_to_int_sql("substring(md5('lat:' || CAST(user_id AS VARCHAR)), 1, 8)")}) % 120000) / 1000.0 - 60.0 AS lat,
+         (({_hex8_to_int_sql("substring(md5('lon:' || CAST(user_id AS VARCHAR)), 1, 8)")}) % 360000) / 1000.0 - 180.0 AS lon
   FROM u),
 d AS (
   SELECT user_id, lat, lon,
@@ -1416,15 +1405,9 @@ def geo_grid_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = e.select("user_id").distinct()
 
     def draw(salt, mod, scale, shift):
-        h = F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(salt), F.col("user_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        h = TX.hex8_to_int(
+            F.md5(F.concat(F.lit(salt), F.col("user_id").cast("string")))
+        )
         return (h % mod) / scale - shift
 
     pos = u.select(
@@ -1890,7 +1873,7 @@ def key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = e.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("double").alias("n")
     ).transform(scoped_cache)
-    pcts = _hist_exact_percentiles(
+    pcts = windows.exact_percentiles(
         g, None, "n", [0.99, 0.5], ["__p99", "__p50"]
     )
     agg = g.agg(
@@ -2193,7 +2176,7 @@ def hll_intersection_estimate_gate(spark: SparkSession, sf_dir: str) -> DataFram
     o = _t(spark, sf_dir, "orders").transform(scoped_cache)
     # histogram-plan median (not percentile()'s per-task value buffer —
     # o_totalprice over a raw fact is the r8 sf10 OOM class)
-    med = _hist_exact_percentiles(o, None, "o_totalprice", [0.5], ["m"])
+    med = windows.exact_percentiles(o, None, "o_totalprice", [0.5], ["m"])
     # one pass builds BOTH sketches (hll_sketch_agg skips the nulls the
     # when() leaves on the other side's rows — the sketches see exactly
     # the lo/hi key multisets, so register states and estimates are
@@ -2273,7 +2256,7 @@ FROM m
     "empirical_resample_stats",
     _RESAMPLE_ORACLE.replace(
         "{hex}",
-        _hex8_to_int("substring(md5('draw:' || CAST(i AS VARCHAR)), 1, 8)"),
+        _hex8_to_int_sql("substring(md5('draw:' || CAST(i AS VARCHAR)), 1, 8)"),
     ),
 )
 def empirical_resample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2297,15 +2280,9 @@ def empirical_resample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id").alias("i"),
         (
             (
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat(F.lit("draw:"), F.col("id").cast("string"))),
-                        1,
-                        8,
-                    ),
-                    16,
-                    10,
-                ).cast("bigint")
+                TX.hex8_to_int(
+                    F.md5(F.concat(F.lit("draw:"), F.col("id").cast("string")))
+                )
                 % 100000
                 + 1
             )
@@ -2912,7 +2889,7 @@ WITH u AS (
   SELECT DISTINCT user_id FROM events WHERE user_id IS NOT NULL),
 a AS (
   SELECT user_id,
-         ({_hex8_to_int("substring(md5('exp1:' || CAST(user_id AS VARCHAR)), 1, 8)")}) % 2
+         ({_hex8_to_int_sql("substring(md5('exp1:' || CAST(user_id AS VARCHAR)), 1, 8)")}) % 2
            AS arm
   FROM u),
 c AS (
@@ -2942,15 +2919,9 @@ def srm_assignment_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
     u = e.select("user_id").distinct()
     arm = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("exp1:"), F.col("user_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        TX.hex8_to_int(
+            F.md5(F.concat(F.lit("exp1:"), F.col("user_id").cast("string")))
+        )
         % 2
     )
     c = u.select(arm.alias("arm")).agg(
@@ -3462,7 +3433,7 @@ ex AS (
 ap AS (
   SELECT query_id, neighbor_id,
          ROW_NUMBER() OVER (PARTITION BY query_id
-           ORDER BY {_cosine_sql_dims("qv", "cv", 16)} DESC,
+           ORDER BY {_cosine_sql("qv", "cv", 16)} DESC,
                     neighbor_id ASC) AS ap_rank
   FROM q CROSS JOIN c WHERE query_id <> neighbor_id),
 j AS (

@@ -14,17 +14,15 @@ from etl_bigquery_pipeline_spark.plans.catalog_base import (
     SparkSession,
     TX,
     Window,
+    _ANN_PANEL_MAX_ID,
+    _ann_panel,
+    _cosine_sql,
+    _hex8_to_int_sql,
     _t,
     query,
     scoped_cache,
     widen_if_narrow,
 )
-from etl_bigquery_pipeline_spark.plans.catalog_p2_llm_core import (
-    _ANN_PANEL_MAX_ID,
-    _ann_panel,
-    _cosine_sql,
-)
-from etl_bigquery_pipeline_spark.plans.catalog_p4_breadth import _hex8_to_int
 from pyspark.sql import Column
 
 # ===================================================================
@@ -425,7 +423,7 @@ sc AS (
   SELECT b, ln((ct + 1) / CAST(t.nt + {_DSIR_BUCKETS} AS DOUBLE))
            - ln((cr + 1) / CAST(t.nr + {_DSIR_BUCKETS} AS DOUBLE)) AS lr
   FROM agg CROSS JOIN tot t)
-""".replace("{HEX}", _hex8_to_int("h"))
+""".replace("{HEX}", _hex8_to_int_sql("h"))
 
 _DSIR_ORACLE = f"""
 WITH {_DSIR_CTE}
@@ -490,13 +488,7 @@ def _dsir_gram_scores(d: DataFrame) -> tuple[DataFrame, DataFrame]:
         "doc_id",
         "source",
         (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("dsir:"), F.col("g"))), 1, 8
-                ),
-                16,
-                10,
-            ).cast("bigint")
+            TX.hex8_to_int(F.md5(F.concat(F.lit("dsir:"), F.col("g"))))
             % _DSIR_BUCKETS
         ).alias("b"),
     )
@@ -531,7 +523,7 @@ gu AS (
 keyd AS (
   SELECT doc_id,
          round(CAST(wi AS BIGINT) / 1000000000.0
-               - ln(-ln((({_hex8_to_int("h8")}) % 100000 + 1)
+               - ln(-ln((({_hex8_to_int_sql("h8")}) % 100000 + 1)
                         / 100001.0)), 6) + 0.0 AS gumbel_key
   FROM gu),
 r AS (
@@ -580,15 +572,9 @@ def dsir_gumbel_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("gum:"), F.col("doc_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        TX.hex8_to_int(
+            F.md5(F.concat(F.lit("gum:"), F.col("doc_id").cast("string")))
+        )
         % 100000
         + 1
     ) / 100001.0
@@ -634,7 +620,7 @@ eh AS (SELECT u, v,
               substring(md5('tri:' || CAST(u AS VARCHAR) || ':'
                             || CAST(v AS VARCHAR)), 1, 8) AS h8
        FROM e),
-s AS (SELECT u, v FROM eh WHERE (({_hex8_to_int("h8")}) % 10) < 2),
+s AS (SELECT u, v FROM eh WHERE (({_hex8_to_int_sql("h8")}) % 10) < 2),
 st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_triangles_sampled
        FROM s e1 JOIN s e2 ON e2.u = e1.u AND e2.v > e1.v
                  JOIN s e3 ON e3.u = e1.v AND e3.v = e2.v)"""

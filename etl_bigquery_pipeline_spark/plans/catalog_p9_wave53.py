@@ -26,13 +26,13 @@ from etl_bigquery_pipeline_spark.plans.catalog_base import (
     SparkSession,
     TX,
     Window,
+    _CLUSTERS_ORACLE,
     _t,
     query,
     scoped_cache,
     widen_if_narrow,
 )
 from etl_bigquery_pipeline_spark.operators import dedup
-from etl_bigquery_pipeline_spark.plans.catalog_p4_breadth import _CLUSTERS_ORACLE
 
 # ===================================================================
 # Wave 49 — corpus diagnostics

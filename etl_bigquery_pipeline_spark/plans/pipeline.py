@@ -64,8 +64,7 @@ def transform_sales(raw: DataFrame, rows_in: Observation | None = None) -> DataF
     action on ``raw``, and an observation keeps the first action's
     metrics."""
     shaped = schema_ops.impose_schema(raw, SALES_COLUMNS)
-    cleaned, _ = cleaning.clean(_count_rows(shaped, rows_in), SALES_TYPES)
-    return cleaned
+    return cleaning.clean(_count_rows(shaped, rows_in), SALES_TYPES)
 
 
 def transform_products(
@@ -73,11 +72,10 @@ def transform_products(
 ) -> DataFrame:
     """transform_json_data (:162-198): coerce price, drop nulls, full-row
     dedup. ``rows_in`` as in transform_sales."""
-    cleaned, _ = cleaning.clean(
+    return cleaning.clean(
         _count_rows(raw.select("product_id", "product_name", "price"), rows_in),
         PRODUCT_TYPES,
     )
-    return cleaned
 
 
 @dataclass(frozen=True)

@@ -7,6 +7,7 @@ import numpy as np
 import pytest
 
 from etl_bigquery_pipeline_spark.multimodal import audio_ops
+from etl_bigquery_pipeline_spark.operators.localrel import literal_frame
 
 
 def _sine(freq: float, dur_s: float, sr: int = 8000, ch: int = 1) -> np.ndarray:
@@ -66,7 +67,7 @@ def test_with_audio_meta_mapinpandas(spark):
         (2, b"OggS junk"),
         (3, b"not audio"),
     ]
-    df = spark.createDataFrame(rows, "audio_id int, payload binary")
+    df = literal_frame(spark, rows, "audio_id int, payload binary")
     out = {r.audio_id: r.meta for r in audio_ops.with_audio_meta(df).collect()}
     assert out[1].format == "wav" and out[1].sample_rate == 8000
     assert out[1].n_frames == 2000
@@ -77,7 +78,8 @@ def test_with_audio_meta_mapinpandas(spark):
 def test_audio_features_real_signal(spark):
     quiet = audio_ops.encode_wav(_sine(440, 0.5) * 0.1, 8000)
     loud = audio_ops.encode_wav(_sine(440, 0.5), 8000)
-    df = spark.createDataFrame(
+    df = literal_frame(
+        spark,
         [(1, quiet), (2, loud), (3, b"fLaC junk")],
         "audio_id int, payload binary",
     )
@@ -94,7 +96,7 @@ def test_audio_features_real_signal(spark):
 
 def test_sample_clips_contract(spark):
     payload = audio_ops.encode_wav(_sine(220, 2.5), 8000)
-    df = spark.createDataFrame([(7, payload)], "audio_id int, payload binary")
+    df = literal_frame(spark, [(7, payload)], "audio_id int, payload binary")
     clips = audio_ops.sample_clips(
         df, clip_s=1.0, stride_s=1.0
     ).orderBy("clip_idx").collect()
@@ -252,7 +254,8 @@ def test_ima_adpcm_stereo_channels_independent():
 def test_spectral_features_find_dominant_tone(spark):
     tone_a = audio_ops.encode_wav(_sine(440, 0.5), 8000)
     tone_b = audio_ops.encode_wav(_sine(1200, 0.5), 8000)
-    df = spark.createDataFrame(
+    df = literal_frame(
+        spark,
         [(1, tone_a), (2, tone_b), (3, b"RIFFgarbage")],
         "audio_id long, payload binary",
     )

@@ -16,6 +16,7 @@ import numpy as np
 import pytest
 
 from etl_bigquery_pipeline_spark.multimodal import binary_ops, dhash_index
+from etl_bigquery_pipeline_spark.operators.localrel import literal_frame
 from etl_bigquery_pipeline_spark.streaming.image_dedup_stream import (
     incremental_image_dedup_sink,
 )
@@ -45,12 +46,13 @@ def test_phash_exact_when_undecodable_shares_batch(spark):
     missed true near-dups depending on which rows shared a batch."""
     img = _img(555)
     alone = binary_ops.with_perceptual_hash(
-        spark.createDataFrame([(1, _ppm(img))], "id long, payload binary")
+        literal_frame(spark, [(1, _ppm(img))], "id long, payload binary")
     ).collect()[0].phash
     with_junk = {
         r.id: r.phash
         for r in binary_ops.with_perceptual_hash(
-            spark.createDataFrame(
+            literal_frame(
+                spark,
                 [(1, _ppm(img)), (2, b"\xff\xd8\xff\xe0 jpeg-codec-gated")],
                 "id long, payload binary",
             ).coalesce(1)
@@ -63,7 +65,8 @@ def test_phash_exact_when_undecodable_shares_batch(spark):
 
 @pytest.fixture()
 def corpus_index(spark, tmp_path):
-    corpus = spark.createDataFrame(
+    corpus = literal_frame(
+        spark,
         [(i, _ppm(_img(i))) for i in range(10)], "id long, payload binary"
     )
     table = "t_dhash_idx"
@@ -74,7 +77,8 @@ def corpus_index(spark, tmp_path):
 def test_index_probe_finds_noisy_copy_and_skips_distinct(spark, corpus_index):
     from pyspark.sql import functions as F
 
-    batch = spark.createDataFrame(
+    batch = literal_frame(
+        spark,
         [(100, _ppm(_noisy(_img(3)))),   # near-copy of corpus id 3
          (101, _ppm(_img(999)))],        # genuinely novel
         "id long, payload binary",
@@ -93,7 +97,8 @@ def test_index_probe_finds_noisy_copy_and_skips_distinct(spark, corpus_index):
 def test_probe_plan_broadcasts_batch_never_corpus(spark, corpus_index):
     from pyspark.sql import functions as F
 
-    batch = spark.createDataFrame(
+    batch = literal_frame(
+        spark,
         [(100, _ppm(_img(3)))], "id long, payload binary"
     )
     hashed = binary_ops.with_perceptual_hash(batch).filter(F.col("ok"))
@@ -125,7 +130,7 @@ def test_streaming_sink_routes_and_appends(spark, corpus_index, tmp_path):
     os.makedirs(src)
     for i, rows in enumerate((b1, b2), start=1):
         (
-            spark.createDataFrame(rows, "id long, payload binary")
+            literal_frame(spark, rows, "id long, payload binary")
             .coalesce(1)
             .write.mode("overwrite")
             .parquet(os.path.join(work, f"__slice{i}"))
@@ -178,7 +183,8 @@ def test_streaming_sink_replay_is_idempotent(spark, corpus_index, tmp_path):
     src = os.path.join(work, "src")
     os.makedirs(src)
     (
-        spark.createDataFrame(
+        literal_frame(
+            spark,
             [(400, _ppm(_img(888)))], "id long, payload binary"
         )
         .coalesce(1)
@@ -243,7 +249,8 @@ def test_streaming_sink_crash_window_replay_no_duplicate_rows(
     src = os.path.join(work, "src")
     os.makedirs(src)
     (
-        spark.createDataFrame(
+        literal_frame(
+            spark,
             [(500, _ppm(_noisy(_img(2)))), (501, _ppm(_img(31337)))],
             "id long, payload binary",
         )
@@ -317,7 +324,8 @@ def test_streaming_sink_stale_pre_marker_swept_on_committed_replay(
     src = os.path.join(work, "src")
     os.makedirs(src)
     (
-        spark.createDataFrame(
+        literal_frame(
+            spark,
             [(600, _ppm(_img(424242)))], "id long, payload binary"
         )
         .coalesce(1)

@@ -11,6 +11,7 @@ import numpy as np
 import pytest
 
 from etl_bigquery_pipeline_spark.multimodal import binary_ops
+from etl_bigquery_pipeline_spark.operators.localrel import literal_frame
 
 
 def _rng_image(h: int, w: int, seed: int = 7) -> np.ndarray:
@@ -69,7 +70,7 @@ def test_with_image_meta_mapinpandas(spark):
         (2, _jpeg(320, 240)),
         (3, None),
     ]
-    df = spark.createDataFrame(rows, "id long, payload binary")
+    df = literal_frame(spark, rows, "id long, payload binary")
     out = {r.id: r.meta for r in binary_ops.with_image_meta(df).collect()}
     assert out[1]["format"] == "png" and out[1]["width"] == 640
     assert out[2]["format"] == "jpeg" and out[2]["height"] == 240
@@ -77,7 +78,8 @@ def test_with_image_meta_mapinpandas(spark):
 
 
 def test_extract_features_contract(spark):
-    df = spark.createDataFrame(
+    df = literal_frame(
+        spark,
         [(1, b"hello world"), (2, b"hello world"), (3, b"different")],
         "id long, payload binary",
     )
@@ -244,7 +246,8 @@ def test_resize_nearest_semantics():
 
 def test_resize_images_really_resamples(spark):
     arr = _rng_image(10, 10)
-    df = spark.createDataFrame(
+    df = literal_frame(
+        spark,
         [(1, binary_ops.encode_ppm(arr)), (2, _bmp(arr)), (3, b"\x00" * 50)],
         "id long, payload binary",
     )
@@ -265,7 +268,8 @@ def test_resize_images_really_resamples(spark):
 
 def test_channel_stats_true_pixel_values(spark):
     arr = _rng_image(9, 4)
-    df = spark.createDataFrame(
+    df = literal_frame(
+        spark,
         [(1, binary_ops.encode_ppm(arr)), (2, b"junk")],
         "id long, payload binary",
     )
@@ -279,7 +283,8 @@ def test_channel_stats_true_pixel_values(spark):
 
 
 def test_repartition_for_payload(spark):
-    df = spark.createDataFrame(
+    df = literal_frame(
+        spark,
         [(i, bytes(1024)) for i in range(100)], "id long, payload binary"
     ).withColumn("n_bytes", binary_ops.F.length("payload").cast("long"))
     out = binary_ops.repartition_for_payload(
@@ -289,7 +294,8 @@ def test_repartition_for_payload(spark):
 
 
 def test_resize_contract(spark):
-    df = spark.createDataFrame(
+    df = literal_frame(
+        spark,
         [(1, b"\x00" * 100), (2, b"\xff" * 50)], "id long, payload binary"
     )
     out = binary_ops.resize_images(df, target=(64, 64)).collect()
@@ -300,7 +306,8 @@ def test_resize_contract(spark):
 
 
 def test_sample_frames_explodes_rows(spark):
-    df = spark.createDataFrame(
+    df = literal_frame(
+        spark,
         [(1, bytes(range(256)) * 64)], "id long, payload binary"  # 16 KiB
     )
     out = binary_ops.sample_frames(df, every_n_bytes=4096, max_frames=8).collect()
@@ -354,7 +361,8 @@ def test_resize_images_handles_real_jpeg(spark):
     from tests.jpeg_fixture import encode_baseline_jpeg
 
     img = np.full((32, 48, 3), [200, 30, 90], dtype=np.uint8)
-    df = spark.createDataFrame(
+    df = literal_frame(
+        spark,
         [(1, encode_baseline_jpeg(img)), (2, _gif(4, 4))],
         "id long, payload binary",
     )
@@ -372,7 +380,7 @@ def test_image_meta_parses_real_jpeg(spark):
     from tests.jpeg_fixture import encode_baseline_jpeg
 
     payload = encode_baseline_jpeg(_rng_image(24, 36))
-    df = spark.createDataFrame([(1, payload)], "id long, payload binary")
+    df = literal_frame(spark, [(1, payload)], "id long, payload binary")
     meta = binary_ops.with_image_meta(df).collect()[0].meta
     assert (meta.format, meta.width, meta.height) == ("jpeg", 36, 24)
 
@@ -599,7 +607,8 @@ def test_near_dup_images_banded_blocking(spark):
     noisy = base.copy()
     noisy[0, 0] = 255 - noisy[0, 0]
     other = _rng_image(48, 48, seed=77)
-    df = spark.createDataFrame(
+    df = literal_frame(
+        spark,
         [(1, _bmp(base)), (2, _bmp(noisy)), (3, _bmp(other)),
          (4, b"\xff\xd8\xff\xe0 jpeg-gated")],
         "id long, payload binary",

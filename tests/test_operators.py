@@ -1164,8 +1164,8 @@ def test_hist_exact_percentiles_keeps_null_group_and_empty_input(spark):
     offset-frame construction."""
     from pyspark.sql import functions as F
 
-    from etl_bigquery_pipeline_spark.plans.catalog_p3_approx_gates import (
-        _hist_exact_percentiles,
+    from etl_bigquery_pipeline_spark.operators.windows import (
+        exact_percentiles as _hist_exact_percentiles,
     )
 
     df = spark.createDataFrame(

@@ -129,7 +129,7 @@ def test_ann_query_panels_are_bounded(spark):
     # cap). Whatever the corpus size, the panel never exceeds cap/modulus.
     from pyspark.sql import functions as F
 
-    from etl_bigquery_pipeline_spark.plans.catalog_p2_llm_core import (
+    from etl_bigquery_pipeline_spark.plans.catalog_base import (
         _ANN_PANEL_MAX_ID,
         _ann_panel,
     )

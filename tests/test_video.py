@@ -8,6 +8,7 @@ import struct
 import pytest
 
 from etl_bigquery_pipeline_spark.multimodal import video_ops
+from etl_bigquery_pipeline_spark.operators.localrel import literal_frame
 
 
 def _avi(w=320, h=240, fps=10, frames=25) -> bytes:
@@ -63,7 +64,8 @@ def test_decode_gated_names_dependency():
 
 
 def test_with_video_meta_mapinpandas(spark):
-    df = spark.createDataFrame(
+    df = literal_frame(
+        spark,
         [(1, _avi()), (2, _mp4()), (3, b"junk")],
         "video_id int, payload binary",
     )
@@ -74,7 +76,8 @@ def test_with_video_meta_mapinpandas(spark):
 
 
 def test_frame_sample_plan(spark):
-    df = spark.createDataFrame(
+    df = literal_frame(
+        spark,
         [(1, _avi(fps=10, frames=25)), (2, b"junk")],
         "video_id int, payload binary",
     )
@@ -148,7 +151,8 @@ def test_extract_mjpeg_frames_spark(spark):
         encode_baseline_jpeg(np.full((8, 8, 3), (i * 40, 10, 10), dtype=np.uint8))
         for i in range(5)
     ]
-    df = spark.createDataFrame(
+    df = literal_frame(
+        spark,
         [(1, _mjpeg_avi(jpegs, 8, 8)), (2, _avi()), (3, None)],
         "video_id long, payload binary",
     )
